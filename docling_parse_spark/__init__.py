@@ -13,7 +13,10 @@ Input/output contract (north rule): tables of
 ``(doc_id string, spans array<struct<kind,text,media_ref,offset>>)``.
 """
 
+from docling_parse_spark import _zipimport_guard
 from docling_parse_spark.schemas import SPAN_SCHEMA, SPANS_TABLE_SCHEMA
+
+_zipimport_guard.install()
 
 __all__ = ["SPAN_SCHEMA", "SPANS_TABLE_SCHEMA"]
 __version__ = "0.1.0"

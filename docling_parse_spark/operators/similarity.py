@@ -415,15 +415,32 @@ def brute_force_topk_quantized(
     # rounded ops in the same order). Rounding stays JVM-side (F.round).
     import numpy as np
 
-    @F.pandas_udf("double")
-    def int_cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        A = np.stack(av.values).astype(np.int64)
-        B = np.stack(bv.values).astype(np.int64)
+    def cos_rows(A, B):
         dot = (A * B).sum(axis=1)
         na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
         nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
         with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(dot.astype(np.float64) / (na * nb))
+            return dot.astype(np.float64) / (na * nb)
+
+    @F.pandas_udf("double")
+    def int_cos(av: pd.Series, bv: pd.Series) -> pd.Series:
+        try:
+            A = np.stack(av.values).astype(np.int64)
+            B = np.stack(bv.values).astype(np.int64)
+            if A.shape != B.shape:
+                raise ValueError
+        except (ValueError, TypeError):
+            # null or ragged rows score NaN instead of failing the batch
+            return pd.Series(
+                [
+                    cos_rows(np.asarray(a, np.int64)[None], np.asarray(b, np.int64)[None])[0]
+                    if a is not None and b is not None and len(a) == len(b)
+                    else np.nan
+                    for a, b in zip(av.values, bv.values)
+                ],
+                dtype="float64",
+            )
+        return pd.Series(cos_rows(A, B))
 
     scored = (
         c.crossJoin(F.broadcast(q))

@@ -8,9 +8,11 @@ Usage: python tools/check_contract.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

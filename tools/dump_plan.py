@@ -12,14 +12,15 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    out_dir = os.environ.get("PLAN_OUT_DIR", "/root/repo/plans/r07")
+    out_dir = os.environ.get("PLAN_OUT_DIR", os.path.join(REPO, "plans", "r07"))
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
@@ -32,6 +33,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
         buf = io.StringIO()

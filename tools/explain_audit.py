@@ -13,7 +13,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def plan_of(df) -> str:
@@ -265,7 +266,7 @@ def main():
         print(f"{mark:4s} ingest_pdf_files: {desc}")
     out.append("\n```\n" + p.strip()[:4000] + "\n```\n")
 
-    with open(os.path.join("/root/repo", "EXPLAIN.md"), "w") as f:
+    with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print(f"\nwrote EXPLAIN.md ({n_flags} flags)")
 

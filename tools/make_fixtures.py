@@ -9,7 +9,7 @@ re-derives the relational aggregations (counts, stats, survivors, pixel
 statistics) from these tables, so a distributed-plumbing bug shows up as a
 driver hash mismatch.
 
-Usage: python tools/make_fixtures.py  (writes /root/repo/fixtures/)
+Usage: python tools/make_fixtures.py  (writes fixtures/ at the repository root)
 """
 
 from __future__ import annotations

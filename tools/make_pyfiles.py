@@ -1,6 +1,7 @@
 """Package the engine for ``spark-submit --py-files``.
 
-Produces ``dist/docling_parse_spark.zip`` containing the package (pure
+Produces ``dist/docling_parse_spark.zip`` (or ``<out_dir>/docling_parse_spark.zip``
+with ``python tools/make_pyfiles.py <out_dir>``) containing the package (pure
 Python, no native deps). Ship with:
 
     spark-submit --master <cluster> \\
@@ -11,13 +12,14 @@ Python, no native deps). Ship with:
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(REPO, "dist")
+def main(dist: str | None = None) -> str:
+    dist = dist or os.path.join(REPO, "dist")
     os.makedirs(dist, exist_ok=True)
     out = os.path.join(dist, "docling_parse_spark.zip")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
@@ -36,4 +38,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1] if len(sys.argv) > 1 else None)
