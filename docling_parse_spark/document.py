@@ -22,17 +22,16 @@ One document's input spans (north-rule shape, FIXTURES.md §1) are routed by
 This module is deliberately Spark-free: ``decode_unit`` processes ONE work
 unit (one PDF page or one HTML payload) and is called from both the
 sequential oracle (``decode_document``) and the distributed pipeline
-(``extract.py`` runs it inside ``mapInPandas`` after page-granularity
-splitting). Equality of the two paths is the core pytest invariant —
-the analog of the reference's threaded == sequential test
-(tests/test_threaded_parse.py:278).
+(``extract.py`` runs it inside ``mapInArrow`` after skew routing).
+Equality of the two paths is the core pytest invariant — the analog of the
+reference's threaded == sequential test (tests/test_threaded_parse.py:278).
 """
 
 from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from time import perf_counter as _clock
 
 from docling_parse_spark.web.boilerplate import extract_html_spans
@@ -55,8 +54,9 @@ class UnitResult:
     error: str = ""
     # per-stage wall ms (reference pdf_timings parity: decode_resources ≙
     # fonts, decode_contents ≙ tokenize+interpret, decode_annots ≙ annots,
-    # create_*_cells ≙ merge); html units carry a single 'html' bucket
+    # create_*_cells ≙ words); html units carry a single 'html' bucket
     timings: dict = None
+    cells: list = field(default_factory=list)  # the page's output cells; [] on failure
 
 
 def parse_media_ref(media_ref: str) -> tuple[int, str] | None:
@@ -243,6 +243,7 @@ def decode_unit(
         spans=[(i, k, t, r) for i, (k, t, r) in enumerate(out)],
         cells_emitted=pr.cells_emitted,
         timings=timings,
+        cells=pr.cells,
     )
 
 
@@ -390,10 +391,10 @@ def doc_to_units(doc_id: str, spans: list[dict], serialize: bool = True) -> list
 
     ``serialize=False`` keeps each unit's resources as the built dict instead
     of a JSON string — for in-process consumers (``decode_document``, the
-    fused light-doc path in ``decode_routed``) that hand the unit straight to
-    ``decode_unit``, skipping a dumps+loads round trip per page. Units that
-    cross the Arrow boundary (``explode_units``) need the default string form
-    (the work-unit schema declares ``resources string``)."""
+    fused light-doc rows of ``extract._decode_batches``) that hand the unit
+    straight to ``decode_unit``, skipping a dumps+loads round trip per page.
+    Units that cross the Arrow boundary (``extract.route_units``) need the
+    default string form (the routed schema declares ``resources string``)."""
     # a NULL spans array (nullable in the table schema) is an empty doc,
     # not a task-killing TypeError (round-4 review)
     spans = spans if spans is not None else []

@@ -1,31 +1,36 @@
 """The distributed extraction pipeline: docs table -> spans table + metrics.
 
-Plan shape (SURVEY.md §7, Catalyst-friendly — scan → narrow UDF → shuffle →
-UDF → groupBy/sort_array → sink):
+Plan shape (SURVEY.md §7, Catalyst-friendly — scan → route → shuffle →
+decode → groupBy → stamp → sink). Every Python step is a ``mapInArrow``:
 
-1. ``explode_units``: ``mapInPandas`` splits each doc into self-contained
-   work units at PDF-page granularity — the skew/salting step. A 6400-page
-   doc becomes 6400 independent units instead of one straggler task
-   (reference analog: the page-level task queue,
-   src/pybind/docling_threaded_base.h:104-105).
-2. ``repartition(n, doc_id, page)``: hash shuffle spreads units uniformly
-   across executors regardless of document skew.
-3. ``decode_units``: ``mapInPandas`` runs the pure-Python kernels per unit,
-   emitting ONE row per unit carrying the unit's ordered span ARRAY — the
-   reassembly shuffle then moves O(pages) rows, not O(spans) rows (~90×
-   fewer rows for the same bytes; measured ~1.4× end-to-end at local[32]).
+1. ``route_units``: docs with <= ``heavy_span_threshold`` input spans pass
+   through whole as one ``'__doc__'`` row — an Arrow slice that never turns
+   into Python objects. Heavier docs split into self-contained page-level
+   work units (``document.doc_to_units``), the skew/salting step: a
+   6400-page doc becomes 6400 independent units instead of one straggler
+   task (reference analog: the page-level task queue,
+   src/pybind/docling_threaded_base.h:104-105). Threshold 0 splits every
+   non-empty doc; ``page_numbers`` and ``extract_cells`` route that way.
+2. ``repartition(n, doc_id, page)``: hash shuffle spreads the routed rows
+   across executors regardless of document skew, and widens the small scans
+   that would otherwise serialize the compute-heavy decode.
+3. One decode loop (``_decode_batches``) runs the pure-Python kernels: a
+   ``'__doc__'`` row decodes its units in process, a unit row decodes alone.
+   The spans pass emits ONE row per unit carrying the unit's ordered span
+   ARRAY — the reassembly shuffle then moves O(pages) rows, not O(spans)
+   rows — plus, with metrics, fixed count/flag/timing columns per unit.
+   ``extract_cells`` emits cell rows from the same loop.
 4. ``reassemble``: ``groupBy(doc_id).agg(sort_array(collect_list(struct(page,
-   spans))))`` — deterministic content order from the (page) key, never from
-   partition arrival order — then ``flatten`` + an index-stamping
-   ``transform`` assigns dense offsets. All JVM-side.
+   unit_spans))))`` — deterministic content order from the (page) key, never
+   from partition arrival order — then one Arrow pass flattens and stamps
+   dense offsets.
 
-Metrics (pages_parsed / cells_emitted / decode_failures per partition) are
-derived relationally from the same decoded rows (``failed`` flag column).
+Metrics (pages_parsed / cells_emitted / decode_failures / per-stage ms per
+partition) are derived relationally from the same decoded rows.
 """
 
 from __future__ import annotations
 
-import json
 import time
 from collections.abc import Iterator
 
@@ -34,146 +39,187 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_parse_spark.document import decode_unit, doc_to_units
 from docling_parse_spark.pdf.page import DecodeConfig
-from docling_parse_spark.schemas import WORK_UNIT_DDL
 
+# per-stage timing keys, one metrics column each (reference pdf_timings
+# parity, src/parse/utils/pdf_timings.h:32-99: decode_resources,
+# decode_contents [tokenize+interpret], create_word/line_cells ≙ words,
+# decode_annots); dedup/sanitize/words/order split the page finish
+STAGE_KEYS = ("resources", "tokenize", "interpret", "dedup", "sanitize", "words",
+              "order", "annots", "html")
+
+# one row per decoded unit: the unit's ordered span array
 DECODED_DDL = (
     "doc_id string, page int, "
-    "unit_spans array<struct<kind:string,text:string,media_ref:string>>, "
-    "cells int, failed boolean, decode_ms double, stage_ms map<string,double>"
+    "unit_spans array<struct<kind:string,text:string,media_ref:string>>"
 )
-
-# per-stage timing keys carried in stage_ms (reference pdf_timings parity,
-# src/parse/utils/pdf_timings.h:32-99: decode_resources, decode_contents
-# [tokenize+interpret], decode_annots, create_word/line_cells ≙ merge)
-STAGE_KEYS = ("resources", "tokenize", "interpret", "merge", "annots", "html")
+METRICS_DECODED_DDL = (
+    DECODED_DDL + ", cells int, failed boolean, decode_ms double, "
+    + ", ".join(f"{k}_ms double" for k in STAGE_KEYS)
+)
 
 # routed rows: either a whole light doc (unit_kind='__doc__', doc_spans set)
 # or one heavy-doc page unit (payload/resources set) — union schema so the
-# light/heavy split needs only ONE scan of the input (VERDICT r01 §perf)
+# light/heavy split needs only ONE scan of the input (VERDICT r01 §perf).
+# ``page`` is the deterministic content-order key: reassembly sorts on it,
+# never on partition arrival order (the reference re-sorts threaded
+# completion-order results the same way: docling_parse/pdf_parser.py:1583-1602)
 ROUTED_DDL = (
     "doc_id string, page int, unit_kind string, payload string, resources string, "
     "doc_spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
 
-def explode_units(docs_df: DataFrame) -> DataFrame:
-    """Split docs into per-page work units (cheap string routing, no decode)."""
+def _arrow_schema(ddl: str):
+    """The pyarrow schema a ``mapInArrow`` pass must yield for ``ddl``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
 
-    def split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                # Arrow delivers array<struct> elements as plain dicts with
-                # exactly the schema keys — no per-span rebuild needed
-                rows.extend(doc_to_units(doc_id, spans))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "unit_kind", "payload", "resources"]
-            )
-
-    return docs_df.mapInPandas(split_batches, schema=WORK_UNIT_DDL)
+    return to_arrow_schema(DataType.fromDDL(ddl))
 
 
-def decode_units(units_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
-    """Run the decode kernels over work units. One output row per unit:
-    the unit's ordered span array + cells count + failure flag."""
-    cfg = config or DecodeConfig()
-    cfg_dict = cfg.__dict__.copy()
+def _columns(rows: list[tuple], schema) -> list:
+    """Row tuples -> one Arrow array per schema field."""
+    import pyarrow as pa
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        config_local = DecodeConfig(**cfg_dict)
-        fonts_cache: dict = {}
-        for pdf in batches:
-            out_rows = []
-            for doc_id, page, unit_kind, payload, resources in zip(
-                pdf["doc_id"], pdf["page"], pdf["unit_kind"], pdf["payload"], pdf["resources"]
-            ):
-                t0 = time.perf_counter()
-                ur = decode_unit(
-                    unit_kind, payload, int(page), resources, config_local, fonts_cache
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return [pa.array(c, f.type) for c, f in zip(cols, schema)]
+
+
+def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
+    """Single-scan skew routing (cheap, no decode): light docs pass through
+    whole (one ``'__doc__'`` row, spans attached, page 0) so their decode
+    stays fused; docs over ``heavy_span_threshold`` input spans are split to
+    page units so one mega-doc never serializes a task (SURVEY.md §7.4 #4).
+    A NULL spans array routes as an empty doc, not a crash (round-4 review)."""
+    schema = _arrow_schema(ROUTED_DDL)
+
+    def route(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        doc_spans_t = schema.field("doc_spans").type
+        for batch in batches:
+            spans = batch.column("spans")
+            heavy = pc.greater(pc.fill_null(pc.list_value_length(spans), 0),
+                               heavy_span_threshold)
+            light = batch.filter(pc.invert(heavy))
+            n = light.num_rows
+            if n:
+                yield pa.RecordBatch.from_arrays(
+                    [light.column("doc_id").cast(pa.string()),
+                     pa.repeat(pa.scalar(0, pa.int32()), n), pa.repeat(pa.scalar("__doc__"), n),
+                     pa.nulls(n, pa.string()), pa.nulls(n, pa.string()),
+                     light.column("spans").cast(doc_spans_t)],
+                    schema=schema,
                 )
-                ms = (time.perf_counter() - t0) * 1000.0
-                spans = [
-                    {"kind": k, "text": t, "media_ref": r} for _, k, t, r in ur.spans
+            split = batch.filter(heavy)
+            if split.num_rows:
+                units = [
+                    (u["doc_id"], u["page"], u["unit_kind"], u["payload"], u["resources"], None)
+                    for doc_id, doc_spans in zip(split.column("doc_id").to_pylist(),
+                                                 split.column("spans").to_pylist())
+                    for u in doc_to_units(doc_id, doc_spans)
                 ]
-                out_rows.append(
-                    (doc_id, int(page), spans, ur.cells_emitted, ur.failed, ms,
-                     ur.timings or {})
-                )
-            yield pd.DataFrame(
-                out_rows,
-                columns=["doc_id", "page", "unit_spans", "cells", "failed",
-                         "decode_ms", "stage_ms"],
-            )
+                yield pa.RecordBatch.from_arrays(_columns(units, schema), schema=schema)
 
-    return units_df.mapInPandas(decode_batches, schema=DECODED_DDL)
+    return docs_df.mapInArrow(route, schema=ROUTED_DDL)
+
+
+def _decode_batches(batches, config: DecodeConfig) -> Iterator[Iterator[tuple]]:
+    """Per routed Arrow batch, yield an iterator of ``(doc_id, page,
+    UnitResult, decode_ms)`` over its work units. A ``'__doc__'`` row decodes
+    its whole doc in process (resources stay dicts: no JSON dumps+loads per
+    page); a unit row decodes alone. Both go through ``document.decode_unit``,
+    like the oracle, with one fonts cache per task."""
+    fonts_cache: dict = {}
+
+    def units_of(batch):
+        doc_ids, pages, kinds, payloads, resources, doc_spans = (
+            batch.column(c).to_pylist()
+            for c in ("doc_id", "page", "unit_kind", "payload", "resources", "doc_spans")
+        )
+        for i, doc_id in enumerate(doc_ids):
+            if kinds[i] == "__doc__":
+                units = doc_to_units(doc_id, doc_spans[i], serialize=False)
+            else:
+                units = [{"unit_kind": kinds[i], "payload": payloads[i], "page": pages[i],
+                          "resources": resources[i]}]
+            for unit in units:
+                t0 = time.perf_counter()
+                ur = decode_unit(unit["unit_kind"], unit["payload"], unit["page"],
+                                 unit["resources"], config, fonts_cache)
+                yield doc_id, unit["page"], ur, (time.perf_counter() - t0) * 1000.0
+
+    for batch in batches:
+        yield units_of(batch)
+
+
+def _decode(routed_df: DataFrame, config: DecodeConfig | None, with_metrics: bool) -> DataFrame:
+    """The decode pass: one row per unit — ``(doc_id, page, unit_spans)``,
+    plus ``cells``, ``failed``, ``decode_ms`` and one ``{stage}_ms`` column
+    per ``STAGE_KEYS`` entry when ``with_metrics``. A failed unit contributes
+    an empty span array (UnitResult.spans == [] on failure).
+
+    Output spans go in as one flat struct array + list offsets per batch —
+    one vectorized C construction instead of a per-row nested conversion
+    (guide §4.2's re-slice-don't-rebuild property)."""
+    ddl = METRICS_DECODED_DDL if with_metrics else DECODED_DDL
+    schema = _arrow_schema(ddl)
+    config = config or DecodeConfig()
+
+    def run(batches):
+        import pyarrow as pa
+
+        fields = list(schema)
+        span_t = fields[2].type.value_type
+        for units in _decode_batches(batches, config):
+            keys, metrics, flat, offsets = [], [], [], [0]
+            for doc_id, page, ur, ms in units:
+                keys.append((doc_id, page))
+                flat.extend((k, t, r) for _, k, t, r in ur.spans)
+                offsets.append(len(flat))
+                if with_metrics:
+                    timings = ur.timings or {}
+                    metrics.append((ur.cells_emitted, ur.failed, ms,
+                                    *(timings.get(k, 0.0) for k in STAGE_KEYS)))
+            spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                             pa.array(flat, span_t))
+            arrays = _columns(keys, fields[:2]) + [spans]
+            if with_metrics:
+                arrays += _columns(metrics, fields[3:])
+            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return routed_df.mapInArrow(run, schema=ddl)
 
 
 def extract_cells(docs_df: DataFrame, config: DecodeConfig | None = None,
                   num_partitions: int | None = None) -> DataFrame:
     """Cell-level output table (FIXTURES.md §6 golden record): one row per
     positioned output cell with axis bbox + font + provenance — the substrate
-    for the geometry operators (operators/geometry.py)."""
+    for the geometry operators (operators/geometry.py). A failed page yields
+    zero cells (UnitResult.cells == [] on failure), never a task kill."""
     from docling_parse_spark.operators.geometry import CELLS_DDL
-    from docling_parse_spark.pdf.page import build_fonts, decode_page, parse_page_descriptor
 
     spark = docs_df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    units = explode_units(docs_df).filter(F.col("unit_kind") == "pdf").repartition(n, "doc_id", "page")
-    cfg_dict = (config or DecodeConfig()).__dict__.copy()
+    units = (route_units(docs_df, 0).filter(F.col("unit_kind") == "pdf")
+             .repartition(n, "doc_id", "page"))
+    schema = _arrow_schema(CELLS_DDL)
+    config = config or DecodeConfig()
 
-    def decode_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
+    def run(batches):
+        import pyarrow as pa
 
-        from docling_parse_spark.document import build_forms
+        for units in _decode_batches(batches, config):
+            rows = [
+                (doc_id, page, i, c.text, c.x0, c.y0, c.x1, c.y1, c.font_key, c.font_name,
+                 c.rendering_mode, c.left_to_right, c.block_count, c.instr_count)
+                for doc_id, page, ur, _ in units
+                for i, c in enumerate(ur.cells)
+            ]
+            yield pa.RecordBatch.from_arrays(_columns(rows, schema), schema=schema)
 
-        cfg = DecodeConfig(**cfg_dict)
-        fonts_cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for doc_id, page, payload, resources in zip(
-                pdf["doc_id"], pdf["page"], pdf["payload"], pdf["resources"]
-            ):
-                # same failure posture as decode_unit (round-4 review: a
-                # malformed pdf_font blob raised out of build_fonts here
-                # and killed the task): a failed page yields zero cells,
-                # matching decode_page's own internal-failure behavior
-                try:
-                    res = _json.loads(resources) if resources else {}
-                    key = tuple(res.get("fonts", []))
-                    if key not in fonts_cache:
-                        fonts_cache[key] = build_fonts(res.get("fonts", []))
-                    content = (payload or "").encode("utf-8", "surrogateescape")
-                    if res.get("content_filters"):
-                        from docling_parse_spark.pdf.filters import apply_filters
-
-                        content = apply_filters(
-                            content, res["content_filters"], res.get("content_parms")
-                        )
-                    pr = decode_page(
-                        content,
-                        fonts_cache[key],
-                        images=res.get("media") or {},
-                        forms=build_forms(res.get("forms"), fonts_cache),
-                        colorspaces=res.get("colorspaces") or {},
-                        page_desc=parse_page_descriptor(res.get("page_desc")),
-                        config=cfg,
-                    )
-                except Exception:
-                    continue
-                for i, c in enumerate(pr.cells):
-                    rows.append(
-                        (doc_id, int(page), i, c.text, c.x0, c.y0, c.x1, c.y1,
-                         c.font_key, c.font_name, c.rendering_mode,
-                         c.left_to_right, c.block_count, c.instr_count)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "page", "cell_idx", "text", "x0", "y0", "x1", "y1",
-                         "font_key", "font_name", "rendering_mode",
-                         "left_to_right", "block_count", "instr_count"],
-            )
-
-    return units.mapInPandas(decode_cells, schema=CELLS_DDL)
+    return units.mapInArrow(run, schema=CELLS_DDL)
 
 
 DOC_META_DDL = (
@@ -209,173 +255,6 @@ def extract_doc_meta(docs_df: DataFrame) -> DataFrame:
             )
 
     return docs_df.mapInPandas(run, schema=DOC_META_DDL)
-
-
-def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
-    """Single-scan skew routing (cheap string work, no decode): light docs
-    pass through whole (one row, spans attached) so their decode stays fused;
-    docs over ``heavy_span_threshold`` input spans are split to page units so
-    one mega-doc never serializes a task (SURVEY.md §7.4 #4)."""
-
-    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                # Arrow delivers array<struct> elements as plain dicts with
-                # exactly the doc_spans schema keys — pass them through;
-                # routing itself needs only the span count. A NULL spans
-                # array is an empty doc, not a crash (round-4 review).
-                if spans is None:
-                    spans = []
-                if len(spans) <= heavy_span_threshold:
-                    rows.append(
-                        {"doc_id": doc_id, "page": 0, "unit_kind": "__doc__",
-                         "payload": None, "resources": None, "doc_spans": list(spans)}
-                    )
-                else:
-                    for unit in doc_to_units(doc_id, spans):
-                        unit = dict(unit)
-                        unit["doc_spans"] = None
-                        rows.append(unit)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "unit_kind", "payload", "resources", "doc_spans"]
-            )
-
-    return docs_df.mapInPandas(route, schema=ROUTED_DDL)
-
-
-def decode_routed(routed_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
-    """Decode the routed union: '__doc__' rows run the fused per-doc loop,
-    unit rows decode individually. One output row per decoded unit."""
-    cfg_dict = (config or DecodeConfig()).__dict__.copy()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        config_local = DecodeConfig(**cfg_dict)
-        fonts_cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for doc_id, page, unit_kind, payload, resources, doc_spans in zip(
-                pdf["doc_id"], pdf["page"], pdf["unit_kind"], pdf["payload"],
-                pdf["resources"], pdf["doc_spans"],
-            ):
-                if unit_kind == "__doc__":
-                    # in-process hand-off: resources stay dicts (no JSON
-                    # dumps+loads per page — decode_unit accepts both forms)
-                    units = doc_to_units(doc_id, doc_spans, serialize=False)
-                else:
-                    units = [{"unit_kind": unit_kind, "payload": payload,
-                              "page": int(page), "resources": resources}]
-                for unit in units:
-                    t0 = time.perf_counter()
-                    ur = decode_unit(
-                        unit["unit_kind"], unit["payload"], unit["page"],
-                        unit["resources"], config_local, fonts_cache,
-                    )
-                    ms = (time.perf_counter() - t0) * 1000.0
-                    rows.append(
-                        (doc_id, unit["page"],
-                         [{"kind": k, "text": t, "media_ref": r} for _, k, t, r in ur.spans],
-                         ur.cells_emitted, ur.failed, ms, ur.timings or {})
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "unit_spans", "cells", "failed",
-                               "decode_ms", "stage_ms"]
-            )
-
-    return routed_df.mapInPandas(run, schema=DECODED_DDL)
-
-
-SLIM_DECODED_DDL = (
-    "doc_id string, page int, "
-    "unit_spans array<struct<kind:string,text:string,media_ref:string>>"
-)
-
-
-def decode_slim(in_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
-    """Metrics-free decode pass over routed rows OR plain unit rows,
-    Arrow-native (``mapInArrow``). Emits ONLY (doc_id, page, unit_spans).
-
-    The full-DDL passes (``decode_units``/``decode_routed``) build and ship
-    cells/failed/decode_ms/stage_ms — including a ``map<string,double>`` —
-    through the Python->JVM boundary for every unit, which the metrics-free
-    callers (``extract_spans(with_metrics=False)``, i.e. the flagship bench
-    path) project away immediately after: Spark cannot push that pruning
-    into the Python worker, so the rows were built, converted and serialized
-    for nothing. This variant also skips the per-row pandas->Arrow struct
-    conversion entirely: output spans are accumulated as flat kind/text/ref
-    columns + offsets and assembled with ``pa.StructArray``/
-    ``pa.ListArray.from_arrays`` — one vectorized C construction per batch
-    (guide §4.2's re-slice-don't-rebuild property). Span content and unit
-    keys are byte-identical to the full pass; failed units still contribute
-    an empty span array (UnitResult.spans == [] on failure)."""
-    cfg_dict = (config or DecodeConfig()).__dict__.copy()
-
-    def run(batches):
-        import pyarrow as pa
-
-        span_t = pa.struct(
-            [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string())]
-        )
-        out_schema = pa.schema(
-            [("doc_id", pa.string()), ("page", pa.int32()),
-             ("unit_spans", pa.list_(span_t))]
-        )
-        span_fields = [span_t.field(i) for i in range(3)]
-        config_local = DecodeConfig(**cfg_dict)
-        fonts_cache: dict = {}
-        for batch in batches:
-            names = batch.schema.names
-            doc_ids = batch.column("doc_id").to_pylist()
-            pages = batch.column("page").to_pylist() if "page" in names else None
-            kinds_in = batch.column("unit_kind").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            resources = batch.column("resources").to_pylist()
-            doc_spans = (
-                batch.column("doc_spans").to_pylist() if "doc_spans" in names
-                else [None] * len(doc_ids)
-            )
-            o_doc: list = []
-            o_page: list = []
-            offsets = [0]
-            f_kind: list = []
-            f_text: list = []
-            f_ref: list = []
-            for i, doc_id in enumerate(doc_ids):
-                unit_kind = kinds_in[i]
-                if unit_kind == "__doc__":
-                    # fused light doc: in-process hand-off, resources stay
-                    # dicts (no JSON dumps+loads per page)
-                    units = doc_to_units(doc_id, doc_spans[i], serialize=False)
-                else:
-                    units = [{"unit_kind": unit_kind, "payload": payloads[i],
-                              "page": int(pages[i]), "resources": resources[i]}]
-                for unit in units:
-                    ur = decode_unit(
-                        unit["unit_kind"], unit["payload"], unit["page"],
-                        unit["resources"], config_local, fonts_cache,
-                    )
-                    for _, k, t, r in ur.spans:
-                        f_kind.append(k)
-                        f_text.append(t)
-                        f_ref.append(r)
-                    offsets.append(len(f_kind))
-                    o_doc.append(doc_id)
-                    o_page.append(unit["page"])
-            struct_arr = pa.StructArray.from_arrays(
-                [pa.array(f_kind, pa.string()), pa.array(f_text, pa.string()),
-                 pa.array(f_ref, pa.string())],
-                fields=span_fields,
-            )
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()), struct_arr
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_doc, pa.string()), pa.array(o_page, pa.int32()),
-                 spans_arr],
-                schema=out_schema,
-            )
-
-    return in_df.mapInArrow(run, schema=SLIM_DECODED_DDL)
 
 
 def reassemble(decoded_df: DataFrame) -> DataFrame:
@@ -477,12 +356,7 @@ def metrics_table(decoded_df: DataFrame, lineage: str = "") -> DataFrame:
             F.sum("cells").cast("long").alias("cells_emitted"),
             F.sum(F.when(F.col("failed"), 1).otherwise(0)).cast("long").alias("decode_failures"),
             F.round(F.sum("decode_ms"), 3).alias("decode_ms_total"),
-            *[
-                F.round(
-                    F.sum(F.coalesce(F.element_at("stage_ms", F.lit(k)), F.lit(0.0))), 3
-                ).alias(f"{k}_ms_total")
-                for k in STAGE_KEYS
-            ],
+            *[F.round(F.sum(f"{k}_ms"), 3).alias(f"{k}_ms_total") for k in STAGE_KEYS],
         )
         .withColumn("lineage", F.lit(lineage))
     )
@@ -500,10 +374,11 @@ def extract_spans(
     """End-to-end: docs table -> (spans table[, metrics table]).
 
     ``page_numbers`` restricts decoding to a unit subset per doc (the
-    reference's page-range scheduling, document.h:372-384) — a pushed-down
-    filter on the unit key, so skipped pages are never decoded.
+    reference's page-range scheduling, document.h:372-384) — every doc is
+    split to units and the filter on the unit number runs before the decode,
+    so skipped pages are never decoded.
 
-    Two-path skew handling in ONE scan: a cheap routing pass keeps docs with
+    Two-path skew handling in ONE scan: ``route_units`` keeps docs with
     <= ``heavy_span_threshold`` input spans whole (fused decode) and splits
     heavier docs to page-granularity units; a single hash repartition then
     spreads all rows before the decode pass — one mega-doc can never
@@ -514,23 +389,21 @@ def extract_spans(
     ``spark.sql.shuffle.partitions``)."""
     spark = docs_df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if page_numbers is not None:
-        # unit subset: decode only the nth decodable units per doc (the pdf
-        # page number for pdf docs); filtering happens BEFORE any decode
+    if page_numbers is None:
+        routed = route_units(docs_df, heavy_span_threshold)
+    else:
         from pyspark.sql import Window
 
+        # unit subset: the nth decodable units per doc (the pdf page number
+        # for pdf docs)
         w = Window.partitionBy("doc_id").orderBy("page")
-        units = (
-            explode_units(docs_df)
+        routed = (
+            route_units(docs_df, 0)
             .withColumn("unit_no", F.row_number().over(w) - 1)
             .filter(F.col("unit_no").isin([int(p) for p in page_numbers]))
             .drop("unit_no")
-            .repartition(n, "doc_id", "page")
         )
-        decoded = decode_units(units, config) if with_metrics else decode_slim(units, config)
-    else:
-        routed = route_units(docs_df, heavy_span_threshold).repartition(n, "doc_id", "page")
-        decoded = decode_routed(routed, config) if with_metrics else decode_slim(routed, config)
+    decoded = _decode(routed.repartition(n, "doc_id", "page"), config, with_metrics)
     if not with_metrics:
         return reassemble(decoded)
     decoded = decoded.persist()

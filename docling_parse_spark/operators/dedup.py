@@ -500,20 +500,13 @@ def dup_span_coverage(
     )
 
 
-def cosine(a, b):
-    """Cosine similarity of two array<float/double> columns — pure JVM
-    expressions (zip_with + aggregate), no UDF."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
 def cosine_arrow(a, b):
     """Bit-identical fast cosine: Arrow-batched numpy with ``cumsum`` as the
-    EXACT left fold, so every double equals the expression form above.
+    EXACT left fold, so every double equals the pure-JVM expression form
+    (``aggregate`` over ``zip_with``/``transform``, then sqrt and divide;
+    tests/test_operators.py keeps it as the reference).
 
-    The higher-order-function expressions in :func:`cosine` are interpreted
+    The higher-order-function expressions of that form are interpreted
     per element (not whole-stage-codegen'd): ~192 interpreted lambda steps
     per 64-dim pair made the candidate-scoring stage the dominant cost of
     every ANN query (measured ~10 s of ann_lsh_topk's 11 s at sf1.0). The
@@ -529,9 +522,11 @@ def cosine_arrow(a, b):
     doubles (the internal call sites cast from the embeddings table, which
     guarantees it). Whole-array nulls return null like the expression form;
     rows with mismatched lengths return null (the expression form's
-    null-padded zip_with also yields null there). Element-level nulls
-    inside an array need :func:`cosine` (Arrow's pandas conversion folds
-    them into NaN, losing the null)."""
+    null-padded zip_with also yields null there). A zero denominator (an
+    empty or all-zero vector) scores NaN, which Spark returns as null; the
+    expression form raises DIVIDE_BY_ZERO there under ANSI. Element-level
+    nulls inside an array need the expression form (Arrow's pandas
+    conversion folds them into NaN, losing the null)."""
     import numpy as np
 
     @F.pandas_udf("double")
@@ -557,8 +552,8 @@ def cosine_arrow(a, b):
                 sb = 0.0
                 for yi in y:
                     sb += yi * yi
-                na_, nb_ = math.sqrt(sa), math.sqrt(sb)
-                out.append(acc / (na_ * nb_))
+                den = math.sqrt(sa) * math.sqrt(sb)
+                out.append(acc / den if den else math.nan)
             return pd.Series(out, dtype="float64")
         if A.shape[1] == 0:
             # empty vectors: the fold yields 0.0/(0.0*0.0) = NaN

@@ -62,7 +62,8 @@ class PageResult:
     # per-stage wall ms — the reference's pdf_timings keys
     # (src/parse/utils/pdf_timings.h:32-99, aggregated page.h:1076-1111):
     # tokenize≙decode_contents-parse, interpret≙interprete_ops_total,
-    # merge≙create_word_cells/create_line_cells (+dedup/sanitize)
+    # words≙create_word_cells/create_line_cells; dedup and sanitize time
+    # remove_duplicate_cells and sanitize_text, order the rest of the finish
     timings: dict = field(default_factory=dict)
 
 
@@ -166,18 +167,23 @@ def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig,
     if rotate:
         rotate_cells(cells, rotate, width, height)
 
+    t3 = _clock()
     cells = remove_duplicate_cells(cells)
+    t4 = _clock()
     sanitize_text(cells)
+    t5 = _clock()
 
     if not config.emit_invisible_text:
         cells = [c for c in cells if c.rendering_mode != 3]
 
+    t6 = _clock()
     if config.output_unit == "word":
         out_cells = create_word_cells(cells, copy=False)  # char cells are ours
     elif config.output_unit == "line":
         out_cells = create_line_cells(cells, copy=False)
     else:
         out_cells = [c for c in cells if c.text.strip() != ""]
+    t7 = _clock()
 
     res.cells = out_cells
     res.bitmaps = interp.bitmaps
@@ -215,5 +221,10 @@ def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig,
         order = xy_cut_order([it[5] for it in items])
         items = [items[i] for i in order]
     res.spans = [(kind, text, ref) for _, _, kind, text, ref, _ in items]
-    res.timings["merge"] = (_clock() - t2) * 1000.0
+    # the four keys split the page finish since t2; order is the remainder
+    dedup, sanitize, words = t4 - t3, t5 - t4, t7 - t6
+    res.timings["dedup"] = dedup * 1000.0
+    res.timings["sanitize"] = sanitize * 1000.0
+    res.timings["words"] = words * 1000.0
+    res.timings["order"] = (_clock() - t2 - dedup - sanitize - words) * 1000.0
     return res

@@ -65,7 +65,7 @@ def remove_duplicate_cells(cells: list[Cell], eps: float = EPS_DEDUP) -> list[Ce
     first j with |y0_i - y0_j| > eps), but organized as consecutive
     exactly-equal-y runs with per-run x-buckets: a line of k glyphs costs
     ~O(k) bucket probes instead of O(k²) pair checks — this was the hottest
-    merge-stage kernel (tools/stage_breakdown.py). Deactivations are
+    page-finish kernel (the ``dedup`` stage key). Deactivations are
     independent and idempotent, so probing candidates bucket-first instead of
     index-order yields the same final active set."""
     n = len(cells)

@@ -27,13 +27,3 @@ SPANS_TABLE_SCHEMA = T.StructType(
         T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
     ]
 )
-
-# Work-unit rows fed to the decode UDF: one row per (doc, page) for PDF docs
-# (page-granularity salting — mirrors the reference's page-level task queue,
-# src/pybind/docling_threaded_base.h:104-105), one row per doc for HTML.
-# ``page`` is the deterministic content-order key: reassembly sorts on it,
-# never on partition arrival order (the reference re-sorts threaded
-# completion-order results the same way: docling_parse/pdf_parser.py:1583-1602).
-WORK_UNIT_DDL = (
-    "doc_id string, page int, unit_kind string, payload string, resources string"
-)

@@ -6,11 +6,14 @@ index-aligned golden comparison (tests/test_parse.py:177-244) and its
 threaded == sequential invariant (tests/test_threaded_parse.py:278).
 """
 
+import os
+import re
+
 import pytest
 
 from docling_parse_spark.corpus import corpus_to_spark_rows, generate_corpus
 from docling_parse_spark.document import decode_document
-from docling_parse_spark.extract import extract_spans
+from docling_parse_spark.extract import STAGE_KEYS, extract_cells, extract_spans
 from docling_parse_spark.schemas import SPANS_TABLE_SCHEMA
 
 N_DOCS = 60
@@ -32,9 +35,9 @@ def oracle_result(corpus):
     }
 
 
-def spark_result(spark, corpus, num_partitions):
+def spark_result(spark, corpus, num_partitions, **kwargs):
     docs_df = spark.createDataFrame(corpus_to_spark_rows(corpus), schema=SPANS_TABLE_SCHEMA)
-    out = extract_spans(docs_df, num_partitions=num_partitions)
+    out = extract_spans(docs_df, num_partitions=num_partitions, **kwargs)
     rows = out.collect()
     return {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
@@ -43,10 +46,14 @@ def spark_result(spark, corpus, num_partitions):
 
 
 def test_spark_matches_oracle(spark, corpus, oracle_result):
-    got = spark_result(spark, corpus, num_partitions=8)
-    assert set(got) == set(oracle_result)
-    for doc_id in oracle_result:
-        assert got[doc_id] == oracle_result[doc_id], f"span mismatch in {doc_id}"
+    """Every routing split gives the oracle: threshold 0 splits every
+    non-empty doc, 10**6 keeps every doc whole, 1 and 24 (the default) mix
+    the two kinds of routed row."""
+    for threshold in (24, 0, 1, 10**6):
+        got = spark_result(spark, corpus, num_partitions=8, heavy_span_threshold=threshold)
+        assert set(got) == set(oracle_result)
+        for doc_id in oracle_result:
+            assert got[doc_id] == oracle_result[doc_id], f"span mismatch in {doc_id} at {threshold}"
 
 
 def test_partitioning_invariance(spark, corpus, oracle_result):
@@ -69,6 +76,12 @@ def test_metrics(spark, corpus):
     assert sum(r["decode_failures"] for r in m) == 0
     assert sum(r["cells_emitted"] for r in m) > 0
     assert all(r["lineage"] == "test-run" for r in m)
+    # one fixed column per stage; the old merge bucket is split in four
+    assert [c for c in metrics.columns if c.endswith("_ms_total")] == (
+        ["decode_ms_total"] + [f"{k}_ms_total" for k in STAGE_KEYS])
+    assert "merge_ms_total" not in metrics.columns
+    for k in ("dedup", "sanitize", "words", "order"):
+        assert sum(r[f"{k}_ms_total"] for r in m) > 0, k
 
 
 def test_page_range_scan(spark, corpus, oracle_result):
@@ -87,6 +100,13 @@ def test_page_range_scan(spark, corpus, oracle_result):
         assert len(sub) <= len(full)
     # at least one multi-page doc was actually truncated
     assert any(len(got[d]) < len(oracle_result[d]) for d in got)
+    # the metrics pass decodes the same units: same spans, one page per doc
+    spans, metrics = extract_spans(docs_df, num_partitions=4, page_numbers=[0],
+                                   with_metrics=True)
+    assert {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]]
+            for r in spans.collect()} == got
+    assert sum(r["pages_parsed"] for r in metrics.collect()) == len(corpus)
+    spans.persisted_source.unpersist()
 
 
 def test_output_schema(spark, corpus):
@@ -135,8 +155,10 @@ def test_null_spans_row_flows_as_empty_doc(spark):
     from docling_parse_spark.schemas import SPANS_TABLE_SCHEMA
 
     docs = spark.createDataFrame([("doc-null", None)], schema=SPANS_TABLE_SCHEMA)
-    out = extract_spans(docs, num_partitions=2).collect()
-    assert len(out) == 1 and out[0]["doc_id"] == "doc-null" and out[0]["spans"] == []
+    for kwargs in ({}, {"page_numbers": [0]}, {"heavy_span_threshold": 0}):
+        out = extract_spans(docs, num_partitions=2, **kwargs).collect()
+        assert len(out) == 1 and out[0]["doc_id"] == "doc-null" and out[0]["spans"] == []
+    assert extract_cells(docs, num_partitions=2).collect() == []
     meta = extract_doc_meta(docs).collect()
     assert len(meta) == 1
 
@@ -209,3 +231,56 @@ def test_doc_level_content_filters_reach_decode(spark):
         {"kind": "pdf_ops", "text": stream.decode("ascii"), "media_ref": None, "offset": 2},
     ]
     assert decode_document("d", spans) == decode_document("d", bare)
+
+
+def test_extract_cells_matches_fixture(spark):
+    """extract_cells over the mini corpus equals the sequential-kernel
+    fixture (tools/make_fixtures.py) row for row, values exact."""
+    import pyarrow.parquet as pq
+
+    from docling_parse_spark.corpus import generate_pdf_file_docs
+
+    cols = ["doc_id", "page", "cell_idx", "text", "x0", "y0", "x1", "y1", "rendering_mode"]
+    fixture = pq.read_table(os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                                         "fixtures", "mini_cells.parquet"), columns=cols)
+    want = sorted(zip(*(fixture.column(c).to_pylist() for c in cols)))
+    docs = generate_corpus(60, seed=42) + generate_pdf_file_docs(encrypted=False)
+    docs_df = spark.createDataFrame(corpus_to_spark_rows(docs), schema=SPANS_TABLE_SCHEMA)
+    got = sorted(tuple(r) for r in extract_cells(docs_df, num_partitions=4).select(*cols).collect())
+    assert len(got) == len(want) > 0
+    assert got == want
+
+
+def _final_exchanges(plan: str) -> int:
+    """Exchange nodes of an executed adaptive plan, read from the final-plan
+    sections only (the initial plans repeat them)."""
+    n, skip_at = 0, None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" "))
+        if skip_at is not None and indent > skip_at:
+            continue
+        skip_at = None
+        if "== Initial Plan ==" in line:
+            skip_at = indent
+        elif re.search(r"(?<!Reused)Exchange \w+partitioning|Exchange SinglePartition", line):
+            n += 1
+    return n
+
+
+@pytest.mark.parametrize("case,exchanges", [
+    ("spans", 2), ("spans_metrics", 2), ("page_numbers", 3), ("cells", 1),
+])
+def test_extract_plans_are_arrow_only(spark, corpus, case, exchanges):
+    """Every Python step of the extract paths is a mapInArrow, and each
+    path keeps its exchange count."""
+    docs_df = spark.createDataFrame(corpus_to_spark_rows(corpus), schema=SPANS_TABLE_SCHEMA)
+    df = {
+        "spans": lambda: extract_spans(docs_df, num_partitions=4),
+        "spans_metrics": lambda: extract_spans(docs_df, num_partitions=4, with_metrics=True)[0],
+        "page_numbers": lambda: extract_spans(docs_df, num_partitions=4, page_numbers=[0]),
+        "cells": lambda: extract_cells(docs_df, num_partitions=4),
+    }[case]()
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "MapInArrow" in plan
+    assert _final_exchanges(plan) == exchanges

@@ -776,3 +776,66 @@ def test_banded_pair_dedup_at_join_time(spark, docs):
             if any((sa >> (16 * bb)) & 0xFFFF == (sb >> (16 * bb)) & 0xFFFF for bb in range(4)):
                 expected[(a, b)] = bin(sa ^ sb).count("1")
     assert {(r["id_a"], r["id_b"]): r["hamming"] for r in out} == expected
+
+
+def _cosine_expr(a, b):
+    """The pure-JVM expression cosine (zip_with + aggregate, no UDF) that
+    ``cosine_arrow`` must equal bit for bit."""
+    def fold(arr):
+        return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+    dot = fold(F.zip_with(a, b, lambda x, y: x * y))
+    na = F.sqrt(fold(F.transform(a, lambda x: x * x)))
+    nb = F.sqrt(fold(F.transform(b, lambda x: x * x)))
+    return dot / (na * nb)
+
+
+@pytest.mark.parametrize("hostile_rows", [False, True], ids=["vectorized", "row_fallback"])
+def test_cosine_arrow_bit_identical_to_expression(spark, hostile_rows):
+    """200 random 64-dim pairs score exactly as the expression form. A null
+    and a ragged row in the same batch send it down the row-by-row fallback,
+    which must match too (both forms score those rows null)."""
+    import random
+
+    from docling_parse_spark.operators.dedup import cosine_arrow
+
+    rng = random.Random(64)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(64)], [rng.gauss(0, 1) for _ in range(64)])
+            for i in range(200)]
+    if hostile_rows:
+        rows += [(200, None, [1.0] * 64), (201, [1.0, 2.0], [1.0, 2.0, 3.0])]
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>").coalesce(1)
+    got = df.select(
+        "id",
+        cosine_arrow(F.col("a"), F.col("b")).alias("fast"),
+        _cosine_expr(F.col("a"), F.col("b")).alias("expr"),
+    ).collect()
+    assert len(got) == len(rows)
+    assert all(r["fast"] == r["expr"] for r in got if r["id"] < 200)
+    assert all(r["fast"] is None and r["expr"] is None for r in got if r["id"] >= 200)
+
+
+@pytest.mark.parametrize("empty_row", [False, True], ids=["zero_vector", "empty_and_zero"])
+def test_cosine_arrow_zero_denominator_is_null(spark, empty_row):
+    """A zero or empty vector scores null instead of killing the task
+    (an empty vector among 8-dim ones used to raise ZeroDivisionError in the
+    row-by-row fallback); the other rows in the batch keep their scores."""
+    import math
+    import random
+
+    from docling_parse_spark.operators.dedup import cosine_arrow
+
+    rng = random.Random(8)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)], [rng.uniform(-1, 1) for _ in range(8)])
+            for i in range(20)]
+    rows.append((20, [0.0] * 8, [1.0] * 8))
+    if empty_row:
+        rows.append((21, [], []))
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>").coalesce(1)
+    got = {r["id"]: r["c"] for r in
+           df.select("id", cosine_arrow(F.col("a"), F.col("b")).alias("c")).collect()}
+    assert set(got) == {r[0] for r in rows}
+    assert got[20] is None and got.get(21) is None
+    for i, a, b in rows[:20]:
+        norms = math.sqrt(sum(x * x for x in a) * sum(y * y for y in b))
+        assert got[i] == pytest.approx(sum(x * y for x, y in zip(a, b)) / norms)

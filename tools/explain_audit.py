@@ -217,7 +217,7 @@ def main():
     checks = [
         ("exactly one reassembly exchange after decode (fused path)",
          p.count("Exchange (") <= 4),  # repartition + unit hash + reassembly + union sides
-        ("arrow-batched python (MapInPandas / FlatMapGroups)", "MapInPandas" in p or "ArrowEvalPython" in p),
+        ("arrow-batched python (MapInArrow only)", "MapInArrow" in p and "MapInPandas" not in p),
         ("objectized agg for collect_list", "ObjectHashAggregate" in p or "SortAggregate" in p),
     ]
     out.append("\n## extract_spans pipeline\n")
