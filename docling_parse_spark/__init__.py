@@ -5,7 +5,7 @@ surveyed in SURVEY.md) as a Spark-first pipeline:
 
 - per-document compute (PDF content-stream tokenization + interpretation, font/
   encoding resolution, cell assembly, word/line merging, HTML boilerplate
-  stripping) lives in vectorized pandas UDFs (``mapInPandas``);
+  stripping) runs batched in Arrow UDFs (``mapInArrow``);
 - cross-document compute (ordering, reassembly, dedup, metrics, skew handling)
   is relational (DataFrame/SQL, Catalyst-optimized).
 

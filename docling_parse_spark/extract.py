@@ -34,7 +34,6 @@ from __future__ import annotations
 import time
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from docling_parse_spark.document import decode_unit, doc_to_units
@@ -233,13 +232,18 @@ DOC_META_DDL = (
 def extract_doc_meta(docs_df: DataFrame) -> DataFrame:
     """Doc-level metadata table: XMP-style info + flattened outline (TOC) +
     AcroForm field summary (reference document.h:140-181,
-    pdf_parser.py:796-899). Narrow mapInPandas — no shuffle, one row per doc."""
+    pdf_parser.py:796-899). Narrow mapInArrow — no shuffle, one row per doc."""
     from docling_parse_spark.document import doc_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    schema = _arrow_schema(DOC_META_DDL)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
             rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+            for doc_id, spans in zip(batch.column("doc_id").to_pylist(),
+                                     batch.column("spans").to_pylist()):
                 m = doc_meta(spans if spans is not None else [])
                 meta = m["meta"]
                 rows.append((
@@ -248,13 +252,9 @@ def extract_doc_meta(docs_df: DataFrame) -> DataFrame:
                     [{"level": l, "title": t, "page": p} for l, t, p in m["outline"]],
                     len(m["fields"]), m["fields"],
                 ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "title", "author", "subject", "keywords",
-                         "created", "modified", "outline", "n_fields", "field_names"],
-            )
+            yield pa.RecordBatch.from_arrays(_columns(rows, schema), schema=schema)
 
-    return docs_df.mapInPandas(run, schema=DOC_META_DDL)
+    return docs_df.mapInArrow(run, schema=DOC_META_DDL)
 
 
 def reassemble(decoded_df: DataFrame) -> DataFrame:

@@ -15,14 +15,24 @@ block-classification ideas:
 
 Emits ordered ``(kind, text, media_ref)`` spans: one ``text`` span per
 content block, one ``media`` span per <img> inside content, in DOM order.
-Pure Python (stdlib html.parser) — runs batched inside ``mapInPandas``.
+
+Pure Python, run per HTML unit by the ``mapInArrow`` decode loop.
+``segment_blocks`` is one regex-driven pass that feeds the block state
+machine directly. It sees exactly the events CPython 3.11's
+``html.parser.HTMLParser(convert_charrefs=True)`` delivers for
+``feed(doc); close()``: lowercased tags; text split at every tag and stray
+``<``, then charref-decoded; script/style bodies as raw text (dropped when
+unclosed); comments, declarations and PIs skipped; the same end-of-input
+rules; and the same early stop on a marked section html.parser rejects
+(``<![x[``). tests/test_html.py keeps the stdlib-parser segmenter as the
+reference this must equal block for block.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
+from html import unescape
 
 BLOCK_TAGS = {
     "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "td", "th",
@@ -32,24 +42,68 @@ BLOCK_TAGS = {
 BOILERPLATE_CONTAINERS = {"nav", "header", "footer", "aside", "form", "menu"}
 SKIP_CONTENT = {"script", "style", "noscript", "template", "svg", "iframe"}
 HEADING_TAGS = {"h1", "h2", "h3", "h4", "h5", "h6", "title"}
+# tags whose start and end both close the open block
+_FLUSH_TAGS = BLOCK_TAGS | BOILERPLATE_CONTAINERS
 
 MIN_WORDS = 5
 MAX_LINK_DENSITY = 0.33
-_WS = re.compile(r"\s+")
+
+# Tokenizer patterns of CPython 3.11's html/parser.py and _markupbase.py,
+# copied verbatim so every tag, attribute and declaration ends exactly
+# where the stdlib parser ends it.
+_TAGFIND = r'([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*'
+_ATTRFIND = (
+    r'((?<=[\'"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*'
+    r'(\'[^\']*\'|"[^"]*"|(?![\'"])[^>\s]*))?(?:\s|/(?!>))*')
+_tagfind = re.compile(_TAGFIND).match
+_attrfind = re.compile(_ATTRFIND).match
+# the tag name plus html.parser's attribute loop in one match: it stops
+# where that loop stops whenever the loop stays inside the tag
+_tag_attrs = re.compile(_TAGFIND + "(?:" + _ATTRFIND + ")*").match
+_locate_starttag_end = re.compile(r"""
+  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
+  (?:[\s/]*                          # optional whitespace before attribute name
+    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+      (?:\s*=+\s*                    # value indicator
+        (?:'[^']*'                   # LITA-enclosed value
+          |"[^"]*"                   # LIT-enclosed value
+          |(?!['"])[^>\s]*           # bare value
+         )
+        \s*                          # possibly followed by a space
+       )?(?:\s|/(?!>))*
+     )*
+   )?
+  \s*                                # trailing whitespace
+""", re.VERBOSE).match
+_endtag = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>").match
+_commentclose = re.compile(r"--\s*>").search
+_declname = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*").match
+_markedsectionclose = re.compile(r"]\s*]\s*>").search
+_msmarkedsectionclose = re.compile(r"]\s*>").search
+_rawtext_close = {t: re.compile(r"</\s*%s\s*>" % t, re.I).search for t in ("script", "style")}
+# a start tag with an alphanumeric name whose attributes are all
+# name="value" (or name='value'), each after whitespace: the locate,
+# tag-name and attribute patterns above all end it at its '>', so
+# html.parser reads it as a plain tag
+_simple_starttag = re.compile(
+    r"<([a-zA-Z][a-zA-Z0-9]*)"
+    r"(?:[ \t\n\r\f]+[a-zA-Z_:][-a-zA-Z0-9_:.]*=(?:\"[^\"]*\"|'[^']*'))*"
+    r"[ \t\n\r\f]*(/?)>").match
+# the characters that end a tag name ('>' among them)
+_TAG_NAME_ENDS = "\t\n\r\f />\x00"
+# a character that, right after a start tag's attributes, means the tag
+# runs on past the end of input
+_TAG_RUNS_ON = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=")
 
 
 @dataclass
 class Block:
     tag: str = "p"
-    text_parts: list = field(default_factory=list)
-    anchor_chars: int = 0
+    text: str = ""
     total_chars: int = 0
+    anchor_chars: int = 0
     in_boilerplate: bool = False
-    images: list = field(default_factory=list)  # (position_in_block, src)
-
-    @property
-    def text(self) -> str:
-        return _WS.sub(" ", "".join(self.text_parts)).strip()
+    images: list = field(default_factory=list)  # (text parts before the image, src)
 
     @property
     def link_density(self) -> float:
@@ -63,94 +117,223 @@ class Block:
         return self.tag in HEADING_TAGS
 
 
-class _BlockParser(HTMLParser):
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
-        self._current: Block | None = None
-        self._anchor_depth = 0
-        self._boiler_depth = 0
-        self._skip_depth = 0
+def _img_src(html: str, i: int, endpos: int) -> str | None:
+    """The ``src`` html.parser reports for the <img ...> tag at ``html[i:endpos]``
+    (the last ``src`` attribute wins, as in ``dict(attrs)``)."""
+    src = None
+    k = _tagfind(html, i + 1).end()
+    while k < endpos:
+        m = _attrfind(html, k)
+        if not m:
+            break
+        name, rest, value = m.group(1, 2, 3)
+        if name.lower() == "src":
+            if not rest:
+                value = None
+            elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+                value = value[1:-1]
+            if value:
+                value = unescape(value)
+            src = value
+        k = m.end()
+    return src
 
-    def _flush(self):
-        if self._current is not None and (self._current.text or self._current.images):
-            self.blocks.append(self._current)
-        self._current = None
 
-    def _ensure(self, tag: str = "p"):
-        if self._current is None:
-            self._current = Block(tag=tag, in_boilerplate=self._boiler_depth > 0)
-        return self._current
-
-    def handle_starttag(self, tag, attrs):
-        if tag in SKIP_CONTENT:
-            self._skip_depth += 1
-            return
-        if tag in BOILERPLATE_CONTAINERS:
-            self._flush()
-            self._boiler_depth += 1
-        if tag in BLOCK_TAGS:
-            self._flush()
-            self._ensure(tag)
-        if tag == "a":
-            self._anchor_depth += 1
-        if tag == "br":
-            b = self._current
-            if b is not None:
-                b.text_parts.append(" ")
-        if tag == "img":
-            src = dict(attrs).get("src")
-            if src and self._skip_depth == 0:
-                b = self._ensure()
-                b.images.append((len(b.text_parts), src))
-
-    def handle_startendtag(self, tag, attrs):
-        self.handle_starttag(tag, attrs)
-
-    def handle_endtag(self, tag):
-        if tag in SKIP_CONTENT:
-            self._skip_depth = max(0, self._skip_depth - 1)
-            return
-        if tag in BOILERPLATE_CONTAINERS:
-            self._flush()
-            self._boiler_depth = max(0, self._boiler_depth - 1)
-        if tag in BLOCK_TAGS:
-            self._flush()
-        if tag == "a":
-            self._anchor_depth = max(0, self._anchor_depth - 1)
-
-    def handle_data(self, data):
-        if self._skip_depth > 0:
-            return
-        if not data.strip():
-            # a whitespace-only text node between inline elements
-            # ("<i>one</i> <i>two</i>") is still a word separator: append
-            # one space to an OPEN block (round-4 review — dropping it
-            # merged adjacent words), but never open a block for it and
-            # never count it toward char/link densities
-            if self._current is not None and self._current.text_parts:
-                self._current.text_parts.append(" ")
-            return
-        b = self._ensure()
-        b.text_parts.append(data)
-        n = len(data.strip())
-        b.total_chars += n
-        if self._anchor_depth > 0:
-            b.anchor_chars += n
-
-    def close(self):
-        super().close()
-        self._flush()
+def _scan_markup(html: str, i: int, tail: int) -> tuple:
+    """The markup at ``html[i] == '<'`` that the fast paths in
+    ``segment_blocks`` leave, read as html.parser reads it. ``tail`` is the
+    offset past the last character that can end a tag name. Returns
+    ``(end, tag, is_end, selfclose, src, data)``: a tag event (``tag`` set)
+    or a text event (``data`` set) or neither (skipped markup) ending at
+    ``end``; ``end`` is -1 where html.parser raises and stops."""
+    n = len(html)
+    tag = src = data = None
+    is_end = selfclose = False
+    c = html[i + 1:i + 2]
+    if c == "/":
+        # </ name junk>; </> and bogus comments are skipped
+        k = html.find(">", i + 1)
+        if k >= 0:
+            m = _tagfind(html, i + 2)
+            if m:
+                tag, is_end = m.group(1).lower(), True
+            k += 1
+    elif "a" <= c <= "z" or "A" <= c <= "Z":
+        if i + 1 >= tail:
+            # the tag name runs to the end of input: unterminated. Skipping
+            # the scan keeps a run of unclosed "<a" linear
+            k = -1
+        else:
+            m = _locate_starttag_end(html, i)
+            k = m.end()
+            nxt = html[k:k + 1]
+            if nxt == ">":
+                k += 1
+            elif nxt == "/":
+                k = k + 2 if html.startswith("/>", k) else -1
+            elif not nxt or nxt in _TAG_RUNS_ON:
+                k = -1
+        if k >= 0:
+            m = _tag_attrs(html, i + 1)
+            end = html[m.end():k].strip()
+            if end == ">" or end == "/>":
+                tag, selfclose = m.group(1).lower(), end == "/>"
+                if tag == "img":
+                    src = _img_src(html, i, k)
+            else:
+                data = html[i:k]
+    elif c == "!":
+        if html.startswith("<!--", i):
+            m = _commentclose(html, i + 4)
+            k = m.end() if m else -1
+        elif html.startswith("<![", i):
+            m = _declname(html, i + 3)
+            if i + 3 == n or (m and m.end() == n):
+                k = -1
+            elif not m:
+                return -1, None, False, False, None, None
+            else:
+                section = m.group().strip().lower()
+                if section in ("temp", "cdata", "ignore", "include", "rcdata"):
+                    m = _markedsectionclose(html, i + 3)
+                elif section in ("if", "else", "endif"):
+                    m = _msmarkedsectionclose(html, i + 3)
+                else:
+                    return -1, None, False, False, None, None
+                k = m.end() if m else -1
+        else:  # <!doctype ...>, bogus comment
+            k = html.find(">", i + 2)
+            k = k + 1 if k >= 0 else -1
+    elif c == "?":
+        k = html.find(">", i + 2)
+        k = k + 1 if k >= 0 else -1
+    else:  # a stray '<', trailing or not
+        return i + 1, None, False, False, None, "<"
+    if k < 0:
+        # unterminated markup: text up to the next '>' (or '<')
+        k = html.find(">", i + 1) if i + 1 < tail else -1
+        if k < 0:
+            k = html.find("<", i + 1)
+            if k < 0:
+                k = i + 1
+        else:
+            k += 1
+        data = unescape(html[i:k])
+    return k, tag, is_end, selfclose, src, data
 
 
 def segment_blocks(html: str) -> list[Block]:
-    p = _BlockParser()
-    try:
-        p.feed(html)
-        p.close()
-    except Exception:
-        p._flush()
-    return p.blocks
+    """Text blocks of ``html`` in document order. A block opens at a block
+    tag (or at the first text or image outside one) and closes at the next
+    block or boilerplate-container boundary; blocks with neither text nor
+    images are dropped."""
+    blocks: list[Block] = []
+    find = html.find
+    n = len(html)
+    i = 0
+    # the open block: ``tag`` is None when there is none
+    tag = None
+    parts: list[str] = []
+    images: list = []
+    total = anchor = 0
+    in_bp = False
+    a_depth = bp_depth = skip_depth = 0
+    tail = None  # see _scan_markup; found on first use
+    while i < n:
+        if html[i] != "<":
+            j = find("<", i)
+            if j < 0:
+                j = n
+            data = html[i:j]
+            i = j
+            if skip_depth:
+                continue
+            if "&" in data:
+                data = unescape(data)
+        else:
+            m = _simple_starttag(html, i)
+            if m:
+                name, is_end, selfclose = m.group(1).lower(), False, m.group(2)
+                src = _img_src(html, i, m.end()) if name == "img" else None
+                i = m.end()
+            else:
+                m = _endtag(html, i)
+                if m:
+                    name, is_end = m.group(1).lower(), True
+                    i = m.end()
+                else:
+                    if tail is None:
+                        tail = max(map(html.rfind, _TAG_NAME_ENDS)) + 1
+                    i, name, is_end, selfclose, src, data = _scan_markup(html, i, tail)
+                    if i < 0:
+                        break  # html.parser raises here; keep the blocks so far
+            if name is not None:
+                if name in SKIP_CONTENT:
+                    if is_end:
+                        if skip_depth:
+                            skip_depth -= 1
+                        continue
+                    skip_depth += 1
+                    if not selfclose and name in _rawtext_close:
+                        # raw text up to the matching end tag; unclosed, the
+                        # rest of the document is dropped
+                        close = _rawtext_close[name]
+                        while True:
+                            m = close(html, i)
+                            if m is None:
+                                i = n
+                                break
+                            i = m.end()
+                            m = _endtag(html, m.start())
+                            if m and m.group(1).lower() == name:
+                                skip_depth -= 1
+                                break
+                elif name in _FLUSH_TAGS:
+                    if tag is not None:
+                        if total or images:
+                            blocks.append(Block(tag, " ".join("".join(parts).split()),
+                                                total, anchor, in_bp, images))
+                        tag = None
+                    if name in BOILERPLATE_CONTAINERS:
+                        if not is_end:
+                            bp_depth += 1
+                        elif bp_depth:
+                            bp_depth -= 1
+                    elif not is_end:
+                        tag, parts, images, total, anchor, in_bp = name, [], [], 0, 0, bp_depth > 0
+                elif is_end:
+                    if name == "a" and a_depth:
+                        a_depth -= 1
+                elif name == "a":
+                    a_depth += 1
+                elif name == "br":
+                    if tag is not None:
+                        parts.append(" ")
+                elif name == "img" and src and not skip_depth:
+                    if tag is None:
+                        tag, parts, images, total, anchor, in_bp = "p", [], [], 0, 0, bp_depth > 0
+                    images.append((len(parts), src))
+                continue
+            if data is None or skip_depth:
+                continue
+        stripped = data.strip()
+        if not stripped:
+            # a whitespace-only text node between inline elements
+            # ("<i>one</i> <i>two</i>") is still a word separator: append
+            # one space to an OPEN block, but never open a block for it and
+            # never count it toward char/link densities
+            if tag is not None and parts:
+                parts.append(" ")
+            continue
+        if tag is None:
+            tag, parts, images, total, anchor, in_bp = "p", [], [], 0, 0, bp_depth > 0
+        parts.append(data)
+        total += len(stripped)
+        if a_depth:
+            anchor += len(stripped)
+    if tag is not None and (total or images):
+        blocks.append(Block(tag, " ".join("".join(parts).split()), total, anchor, in_bp, images))
+    return blocks
 
 
 def classify_blocks(blocks: list[Block]) -> list[bool]:

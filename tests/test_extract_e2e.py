@@ -13,7 +13,7 @@ import pytest
 
 from docling_parse_spark.corpus import corpus_to_spark_rows, generate_corpus
 from docling_parse_spark.document import decode_document
-from docling_parse_spark.extract import STAGE_KEYS, extract_cells, extract_spans
+from docling_parse_spark.extract import STAGE_KEYS, extract_cells, extract_doc_meta, extract_spans
 from docling_parse_spark.schemas import SPANS_TABLE_SCHEMA
 
 N_DOCS = 60
@@ -161,6 +161,8 @@ def test_null_spans_row_flows_as_empty_doc(spark):
     assert extract_cells(docs, num_partitions=2).collect() == []
     meta = extract_doc_meta(docs).collect()
     assert len(meta) == 1
+    assert meta[0]["doc_id"] == "doc-null" and meta[0]["title"] is None
+    assert meta[0]["outline"] == [] and meta[0]["n_fields"] == 0
 
 
 def test_extract_cells_survives_malformed_font_blob(spark):
@@ -251,6 +253,26 @@ def test_extract_cells_matches_fixture(spark):
     assert got == want
 
 
+def test_extract_doc_meta_matches_sequential(spark):
+    """extract_doc_meta gives document.doc_meta's record for every doc of
+    the mini corpus, field for field."""
+    from docling_parse_spark.corpus import generate_pdf_file_docs
+    from docling_parse_spark.document import doc_meta
+
+    docs = generate_corpus(60, seed=42) + generate_pdf_file_docs(encrypted=False)
+    docs_df = spark.createDataFrame(corpus_to_spark_rows(docs), schema=SPANS_TABLE_SCHEMA)
+    got = {r["doc_id"]: r for r in extract_doc_meta(docs_df).collect()}
+    assert set(got) == {d["doc_id"] for d in docs}
+    assert any(got[d]["outline"] for d in got) and any(got[d]["n_fields"] for d in got)
+    for d in docs:
+        exp = doc_meta(d["spans"])
+        row = got[d["doc_id"]]
+        assert {k: row[k] for k in exp["meta"]} == exp["meta"]
+        assert [(o["level"], o["title"], o["page"]) for o in row["outline"]] == exp["outline"]
+        assert row["n_fields"] == len(exp["fields"])
+        assert list(row["field_names"]) == exp["fields"]
+
+
 def _final_exchanges(plan: str) -> int:
     """Exchange nodes of an executed adaptive plan, read from the final-plan
     sections only (the initial plans repeat them)."""
@@ -268,7 +290,7 @@ def _final_exchanges(plan: str) -> int:
 
 
 @pytest.mark.parametrize("case,exchanges", [
-    ("spans", 2), ("spans_metrics", 2), ("page_numbers", 3), ("cells", 1),
+    ("spans", 2), ("spans_metrics", 2), ("page_numbers", 3), ("cells", 1), ("doc_meta", 0),
 ])
 def test_extract_plans_are_arrow_only(spark, corpus, case, exchanges):
     """Every Python step of the extract paths is a mapInArrow, and each
@@ -279,6 +301,7 @@ def test_extract_plans_are_arrow_only(spark, corpus, case, exchanges):
         "spans_metrics": lambda: extract_spans(docs_df, num_partitions=4, with_metrics=True)[0],
         "page_numbers": lambda: extract_spans(docs_df, num_partitions=4, page_numbers=[0]),
         "cells": lambda: extract_cells(docs_df, num_partitions=4),
+        "doc_meta": lambda: extract_doc_meta(docs_df),
     }[case]()
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()

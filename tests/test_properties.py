@@ -11,6 +11,7 @@ from docling_parse_spark.web.boilerplate import extract_html_spans
 from docling_parse_spark.pdf.fonts import font_from_json, parse_cmap
 from docling_parse_spark.pdf.page import build_fonts, decode_page
 from docling_parse_spark.pdf.tokenizer import tokenize
+from test_html import assert_matches_reference
 
 FONT = json.dumps({"font_key": "F1", "base_font": "Helvetica", "subtype": "Type1",
                    "encoding": "WinAnsiEncoding", "first_char": 32, "widths": [500.0] * 95})
@@ -35,12 +36,69 @@ def test_decode_page_never_crashes_never_nondeterministic(data):
     assert not r1.failed or r1.error
 
 
-@given(st.text(max_size=400))
-@settings(max_examples=150, deadline=None)
+_HTML_TAGS = (
+    "p", "div", "h2", "title", "li", "td",  # block
+    "nav", "header", "footer", "aside", "form",  # boilerplate containers
+    "script", "style", "noscript", "svg",  # skipped content
+    "span", "i", "b", "x-y", "x&amp;",  # inline
+    "a", "br", "img",
+)
+_HTML_CASE = st.sampled_from([str.lower, str.upper, str.title, str.swapcase])
+_HTML_ENTITIES = ("&amp;", "&lt;", "&#169;", "&#x41;", "&#0;", "&copy", "&nbsp;",
+                  "&", "&#", "&#x", "&am")
+_HTML_MARKUP = (
+    "<!-- c -->", "<!--", "-->", "<!-- a -- >", "<!DOCTYPE html>", "<!doctype",
+    "<!x>", "<?xml v?>", "<?", "<![CDATA[x]]>", "<![CDATA[", "<![if x]>", "<![endif]>",
+    "<![x[", "<![ ", "<![", "</>", "</ p>", "</", "<", "<3", " < ",
+    "<script>a<b</p>'", "</script>", "<style>p{}</ style>", "</STYLE >",
+)
+_HTML_TEXT = st.sampled_from((
+    "alpha beta gamma delta epsilon", "zeta eta theta", "one", " ", "  \n ", "\t",
+    "\xa0", "\u3000", "\x00", "\udcff", "©", "x=y", "'", '"', ">", "/",
+))
+
+
+@st.composite
+def _html_attr(draw):
+    name = draw(st.sampled_from(("src", "SRC", "href", "alt", "class", "x")))
+    if draw(st.booleans()):
+        return name
+    quote = draw(st.sampled_from(('"', "'", "")))
+    value = draw(st.sampled_from(("a.png", "x>y", "b&amp;c.png", "&lt;i.png", "&", "&#",
+                                  "&#x4", "", "q r", "/t/x", '"x')))
+    return f"{name}{draw(st.sampled_from(('=', ' = ', '==')))}{quote}{value}{quote}"
+
+
+@st.composite
+def _html_tag(draw):
+    name = draw(_HTML_CASE)(draw(st.sampled_from(_HTML_TAGS)))
+    if draw(st.integers(0, 3)) == 0:
+        return f"</{name}{draw(st.sampled_from(('', ' ', ' x', '/')))}>"
+    attrs = "".join(draw(st.sampled_from((" ", "  ", "\n", "/"))) + draw(_html_attr())
+                    for _ in range(draw(st.integers(0, 3))))
+    return f"<{name}{attrs}{draw(st.sampled_from(('>', '>', '/>', ' />', ' >', '/ >', '')))}"
+
+
+# tag soup from a small grammar: tags of every class the segmenter treats
+# differently (mixed case, self-closing, quoted '>' in attributes),
+# entities (truncated ones too), comments, declarations, marked sections,
+# raw-text elements, unterminated markup and stray '<'
+_HTML_SOUP = st.lists(
+    st.one_of(_html_tag(), _HTML_TEXT, st.sampled_from(_HTML_ENTITIES),
+              st.sampled_from(_HTML_MARKUP)),
+    max_size=40,
+).map("".join)
+
+
+@given(st.one_of(st.text(max_size=400), _HTML_SOUP))
+@settings(max_examples=2000, deadline=None, derandomize=True)
 def test_html_extractor_never_crashes(html):
+    """Arbitrary text and grammar-built tag soup: the one-pass segmenter
+    never raises and equals the stdlib html.parser reference."""
     spans = extract_html_spans(html)
     for kind, text, ref in spans:
         assert kind in ("text", "media")
+    assert_matches_reference(html)
 
 
 @given(st.text(alphabet="0123456789abcdefABCDEF<> \nbeginbfcharrange", max_size=300))
