@@ -17,12 +17,14 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from docling_parse_spark.extract import extract_spans
 from docling_parse_spark.pdf.page import DecodeConfig
 
 COMMIT_LOG = "_commits.jsonl"
+# per-bucket sums of these metrics columns go into each commit record
+_COUNTS = ("pages_parsed", "cells_emitted", "decode_failures")
 
 
 def input_signature_of(docs_df: DataFrame) -> str | None:
@@ -74,7 +76,7 @@ def run_with_checkpoint(
     different input raises instead of silently skipping incompatible or
     mismatched ``pmod(B)`` slices.
 
-    Returns a summary dict {buckets_run, buckets_skipped, docs, spans}.
+    Returns a summary dict {buckets_run, buckets_skipped, out_dir}.
     """
     os.makedirs(out_dir, exist_ok=True)
     if input_signature is None:
@@ -113,12 +115,9 @@ def run_with_checkpoint(
         spans_path = os.path.join(out_dir, "spans", f"bucket={b}")
         metrics_path = os.path.join(out_dir, "metrics", f"bucket={b}")
         spans.write.mode("overwrite").parquet(spans_path)
-        metrics.write.mode("overwrite").parquet(metrics_path)
-        m = metrics.agg(
-            F.sum("pages_parsed").alias("pages"),
-            F.sum("cells_emitted").alias("cells"),
-            F.sum("decode_failures").alias("failures"),
-        ).collect()[0]
+        totals = Observation()
+        metrics.observe(totals, *[F.sum(c).alias(c) for c in _COUNTS]).write.mode(
+            "overwrite").parquet(metrics_path)
         spans.persisted_source.unpersist()
         _append_commit(
             out_dir,
@@ -128,9 +127,7 @@ def run_with_checkpoint(
                 "input_signature": input_signature,
                 "run_id": run_id,
                 "lineage": lineage,
-                "pages_parsed": int(m["pages"] or 0),
-                "cells_emitted": int(m["cells"] or 0),
-                "decode_failures": int(m["failures"] or 0),
+                **{c: int(v or 0) for c, v in totals.get.items()},
                 "wall_sec": round(time.time() - t0, 3),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },

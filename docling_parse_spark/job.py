@@ -43,7 +43,7 @@ def main(argv=None) -> int:
     p.add_argument("--run-id", default="job")
     args = p.parse_args(argv)
 
-    from docling_parse_spark.checkpoint import run_with_checkpoint
+    from docling_parse_spark.checkpoint import committed_buckets, run_with_checkpoint
     from docling_parse_spark.corpus import corpus_df
     from docling_parse_spark.pdf.page import DecodeConfig
     from docling_parse_spark.session import get_spark
@@ -91,12 +91,12 @@ def main(argv=None) -> int:
                 glob="*.pdf", recursive=True, password=args.password,
             ).write.mode("overwrite").parquet(f"{args.out}/ingest")
         staged = spark.read.parquet(f"{args.out}/ingest")
-        errors = staged.filter(F.col("error").isNotNull()).select("doc_id", "error")
-        errors.write.mode("overwrite").parquet(f"{args.out}/ingest_errors")
-        n_ingest_failures = spark.read.parquet(f"{args.out}/ingest_errors").count()
-        if n_ingest_failures:
-            for row in errors.limit(20).collect():
-                print(f"ingest failure: {row['doc_id']}: {row['error']}", file=sys.stderr)
+        staged.filter(F.col("error").isNotNull()).select("doc_id", "error").write.mode(
+            "overwrite").parquet(f"{args.out}/ingest_errors")
+        errors = spark.read.parquet(f"{args.out}/ingest_errors").collect()
+        n_ingest_failures = len(errors)
+        for row in errors[:20]:
+            print(f"ingest failure: {row['doc_id']}: {row['error']}", file=sys.stderr)
         docs = staged.filter(F.col("error").isNull()).drop("error")
     elif args.n_docs:
         docs = corpus_df(spark, args.n_docs, seed=args.seed)
@@ -115,15 +115,10 @@ def main(argv=None) -> int:
     )
     wall = time.time() - t0
 
-    out_spans = spark.read.parquet(f"{args.out}/spans")
-    out_metrics = spark.read.parquet(f"{args.out}/metrics")
-    n_docs = out_spans.count()
-    agg = out_metrics.agg(
-        F.sum("pages_parsed").alias("pages"),
-        F.sum("cells_emitted").alias("cells"),
-        F.sum("decode_failures").alias("failures"),
-    ).collect()[0]
-    n_spans = out_spans.select(F.sum(F.size("spans"))).collect()[0][0]
+    n_docs, n_spans = spark.read.parquet(f"{args.out}/spans").select(
+        F.count("*"), F.sum(F.size("spans"))).collect()[0]
+    # each commit record carries its bucket's metrics-table sums
+    commits = committed_buckets(args.out).values()
 
     print(
         json.dumps(
@@ -131,9 +126,9 @@ def main(argv=None) -> int:
                 "job": "span_extraction",
                 "master": spark.sparkContext.master,
                 "docs": n_docs,
-                "pages": int(agg["pages"] or 0),
-                "cells": int(agg["cells"] or 0),
-                "decode_failures": int(agg["failures"] or 0),
+                "pages": sum(c["pages_parsed"] for c in commits),
+                "cells": sum(c["cells_emitted"] for c in commits),
+                "decode_failures": sum(c["decode_failures"] for c in commits),
                 "ingest_failures": n_ingest_failures,
                 "spans": int(n_spans or 0),
                 "wall_sec": round(wall, 3),

@@ -18,8 +18,8 @@ the north-rule span rows the rest of the engine consumes:
 
 ``parse_pdf_spans(data)`` returns the ``(kind, text, media_ref,
 offset)`` span list for one document — feed it to ``decode_document`` or
-the distributed pipeline. ``ingest_pdf_files`` wraps it over
-``spark.read.format("binaryFile")`` with per-file failure accounting.
+the distributed pipeline. ``ingest_pdf_files`` and ``ingest_pdf_media``
+run it and ``parse_pdf_media`` in one per-file ``mapInArrow`` loop.
 
 Encrypted files (standard security handler) decrypt via
 :mod:`docling_parse_spark.pdf.crypt` (RC4 / AES-128 / AES-256 from spec).
@@ -1214,75 +1214,6 @@ def _parse_pdf_spans(data: bytes, doc_id: str = "", password=None) -> list[dict]
     return spans
 
 
-PDF_DOCS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>, error string")
-
-
-def pdf_files_to_docs(files_df, max_file_bytes: int = 512 << 20,
-                      password=None):
-    """(path, content) binaryFile frame -> north-rule docs rows with
-    per-file failure accounting. Shared by batch ``ingest_pdf_files`` and
-    ``streaming.stream_ingest_pdf_files`` so the two stay semantically
-    identical by construction.
-
-    ``max_file_bytes`` (default 512 MiB) error-accounts oversized files
-    instead of parsing them: one outlier GB-scale file in a web corpus
-    would otherwise hold a whole Arrow batch + parse working set in one
-    task's memory. The check uses the already-read payload length, so it
-    works for both the batch scan and the streaming source."""
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf_batch in batches:
-            rows = []
-            for p, content in zip(pdf_batch["path"], pdf_batch["content"]):
-                doc_id = p.split("://", 1)[-1].removeprefix("file:")
-                if max_file_bytes and len(content) > max_file_bytes:
-                    rows.append((doc_id, [],
-                                 f"FileTooLarge: {len(content)} bytes "
-                                 f"> max_file_bytes={max_file_bytes}"))
-                    continue
-                try:
-                    rows.append((doc_id,
-                                 parse_pdf_spans(bytes(content), doc_id,
-                                                 password=password),
-                                 None))
-                except Exception as e:
-                    rows.append((doc_id, [], f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans", "error"])
-
-    return files_df.select("path", "content").mapInPandas(
-        run, schema=PDF_DOCS_DDL
-    ).select("doc_id", "spans", "error")
-
-
-def ingest_pdf_files(spark, path: str, num_partitions: int | None = None,
-                     glob: str | None = None, recursive: bool = False,
-                     password=None):
-    """Directory/glob of .pdf files -> north-rule docs table with per-file
-    failure accounting (failed files surface with an empty spans array +
-    error column). ``doc_id`` is the scheme-stripped file path — the bare
-    basename collided for same-named files in different directories
-    (r4 review). ``glob`` maps to binaryFile's pathGlobFilter (e.g.
-    '*.pdf'), ``recursive`` to recursiveFileLookup.
-
-    Output order is whatever the scan produced: no global sort here — a
-    corpus-wide ``orderBy(doc_id)`` would range-shuffle every span payload
-    in the default ingest path for nothing (r4 verdict; downstream
-    ``extract_spans`` hash-repartitions immediately, and deterministic
-    ordering belongs at the sink — sort there if you need it)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    files = reader.load(path)
-    if num_partitions:
-        files = files.repartition(num_partitions)
-    return pdf_files_to_docs(files, password=password)
-
-
 _IMAGE_FORMATS = {
     "DCTDecode": "jpeg", "DCT": "jpeg",
     "JPXDecode": "jp2",
@@ -1368,9 +1299,111 @@ def _parse_pdf_media(data: bytes, doc_id: str = "", password=None) -> list[dict]
     return rows
 
 
+PDF_DOCS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
+                "media_ref:string,offset:int>>, error string")
 MEDIA_FILE_DDL = ("doc_id string, media_ref string, content_type string, "
                   "width int, height int, bits int, colorspace string, "
                   "payload binary, error string")
+_MAX_FILE_BYTES = 512 << 20
+
+
+def _spans_of(doc_id: str, data: bytes, password) -> list[tuple]:
+    return [(doc_id, parse_pdf_spans(data, doc_id, password=password), None)]
+
+
+def _media_of(doc_id: str, data: bytes, password) -> list[tuple]:
+    return [(doc_id, m["media_ref"], m["content_type"], m["width"], m["height"],
+             m["bits"], m["colorspace"], m["payload"], None)
+            for m in parse_pdf_media(data, doc_id, password=password)]
+
+
+# per lane: output DDL, the rows of one parsed file, and the columns between
+# doc_id and error that a failed file's single error row leaves blank
+_LANES = {
+    "spans": (PDF_DOCS_DDL, _spans_of, ([],)),
+    "media": (MEDIA_FILE_DDL, _media_of, (None,) * 7),
+}
+
+
+def _read_pdf_files(spark, path: str, num_partitions: int | None,
+                    glob: str | None, recursive: bool):
+    """The (path, content) binaryFile scan both file lanes read."""
+    reader = spark.read.format("binaryFile")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    files = reader.load(path).select("path", "content")
+    return files.repartition(num_partitions) if num_partitions else files
+
+
+def _per_file(files_df, lane: str, password=None,
+              max_file_bytes: int = _MAX_FILE_BYTES):
+    """Both file lanes' per-file ``mapInArrow`` loop over a (path, content)
+    frame. A file over ``max_file_bytes`` gives one FileTooLarge error row
+    without leaving Arrow; any other file gives the lane's rows, or one
+    error row if its parse raises."""
+    from docling_parse_spark.extract import _arrow_schema, _columns
+
+    ddl, rows_of, blank = _LANES[lane]
+    schema = _arrow_schema(ddl)
+
+    def run(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            contents = batch.column("content")
+            sizes = pc.binary_length(contents).to_pylist()
+            rows = []
+            for i, p in enumerate(batch.column("path").to_pylist()):
+                doc_id = p.split("://", 1)[-1].removeprefix("file:")
+                if max_file_bytes and (sizes[i] or 0) > max_file_bytes:
+                    rows.append((doc_id, *blank, f"FileTooLarge: {sizes[i]} bytes "
+                                 f"> max_file_bytes={max_file_bytes}"))
+                    continue
+                try:
+                    rows += rows_of(doc_id, contents[i].as_py(), password)
+                except Exception as e:
+                    rows.append((doc_id, *blank, f"{type(e).__name__}: {e}"))
+            yield pa.RecordBatch.from_arrays(_columns(rows, schema), schema=schema)
+
+    return files_df.select("path", "content").mapInArrow(run, schema=ddl)
+
+
+def pdf_files_to_docs(files_df, max_file_bytes: int = _MAX_FILE_BYTES,
+                      password=None):
+    """(path, content) binaryFile frame -> north-rule docs rows with
+    per-file failure accounting. Shared by batch ``ingest_pdf_files`` and
+    ``streaming.stream_ingest_pdf_files`` so the two stay semantically
+    identical by construction.
+
+    ``max_file_bytes`` (default 512 MiB) error-accounts oversized files
+    instead of parsing them: one outlier GB-scale file in a web corpus
+    would otherwise hold a whole Arrow batch + parse working set in one
+    task's memory. The check uses the already-read payload length, so it
+    works for both the batch scan and the streaming source."""
+    return _per_file(files_df, "spans", password, max_file_bytes)
+
+
+def ingest_pdf_files(spark, path: str, num_partitions: int | None = None,
+                     glob: str | None = None, recursive: bool = False,
+                     password=None):
+    """Directory/glob of .pdf files -> north-rule docs table with per-file
+    failure accounting (failed files surface with an empty spans array +
+    error column). ``doc_id`` is the scheme-stripped file path — the bare
+    basename collided for same-named files in different directories
+    (r4 review). ``glob`` maps to binaryFile's pathGlobFilter (e.g.
+    '*.pdf'), ``recursive`` to recursiveFileLookup.
+
+    Output order is whatever the scan produced: no global sort here — a
+    corpus-wide ``orderBy(doc_id)`` would range-shuffle every span payload
+    in the default ingest path for nothing (r4 verdict; downstream
+    ``extract_spans`` hash-repartitions immediately, and deterministic
+    ordering belongs at the sink — sort there if you need it)."""
+    return pdf_files_to_docs(
+        _read_pdf_files(spark, path, num_partitions, glob, recursive),
+        password=password)
 
 
 def ingest_pdf_media(spark, path: str, num_partitions: int | None = None,
@@ -1378,37 +1411,9 @@ def ingest_pdf_media(spark, path: str, num_partitions: int | None = None,
                      password: str | bytes | None = None):
     """Directory/glob of .pdf files -> embedded-image payload table
     (one row per image XObject, joinable with ingest_pdf_files' media
-    spans on media_ref). Per-file failure accounting like ingest_pdf_files;
-    files without images simply contribute no rows. ``glob``/``recursive``/
-    ``password`` mirror ingest_pdf_files so the two scans select — and can
-    open — the same file set."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    files = reader.load(path).select("path", "content")
-    if num_partitions:
-        files = files.repartition(num_partitions)
-
-    def run(batches):
-        import pandas as pd
-
-        cols = ["doc_id", "media_ref", "content_type", "width", "height",
-                "bits", "colorspace", "payload", "error"]
-        for pdf_batch in batches:
-            rows = []
-            for p, content in zip(pdf_batch["path"], pdf_batch["content"]):
-                doc_id = p.split("://", 1)[-1].removeprefix("file:")
-                try:
-                    for m in parse_pdf_media(bytes(content), doc_id,
-                                             password=password):
-                        rows.append((doc_id, m["media_ref"], m["content_type"],
-                                     m["width"], m["height"], m["bits"],
-                                     m["colorspace"], m["payload"], None))
-                except Exception as e:
-                    rows.append((doc_id, None, None, None, None, None, None,
-                                 None, f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=MEDIA_FILE_DDL)
+    spans on media_ref). Per-file failure accounting and the size gate
+    are ingest_pdf_files' own; files without images simply contribute no
+    rows. ``glob``/``recursive``/``password`` mirror ingest_pdf_files so
+    the two scans select — and can open — the same file set."""
+    return _per_file(_read_pdf_files(spark, path, num_partitions, glob, recursive),
+                     "media", password)

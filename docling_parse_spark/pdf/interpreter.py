@@ -3,7 +3,7 @@
 Re-implements the reference's operator dispatch (reference:
 src/parse/pdf_decoders/stream.h:511-1129) and text-state machine
 (src/parse/pdf_states/text.h) from the published PDF 32000-1:2008 semantics.
-Runs one page at a time inside a pandas-UDF batch — never parallelize within a
+Runs one page at a time inside a mapInArrow batch — never parallelize within a
 page: cell order IS the data model's backbone (cells are appended in
 content-stream execution order, text.h:308-323).
 

@@ -57,6 +57,38 @@ def test_metrics_written(spark, docs_df, tmp_path):
     assert m.filter("decode_failures > 0").count() == 0
 
 
+def test_commit_records_equal_bucket_metrics_sums(spark, tmp_path):
+    """Each commit record's counts are the sums over its own
+    ``metrics/bucket=N`` table, failures included; an empty bucket commits
+    zeros."""
+    from pyspark.sql import functions as F
+
+    corpus = generate_corpus(30, seed=7)
+    corpus.append({"doc_id": "doc-corrupt", "spans": [
+        {"kind": "pdf_font", "text": '{"font_key": "F1", "widths": "NOT-A-LIST"}',
+         "media_ref": None, "offset": 0},
+        {"kind": "pdf_ops", "text": "BT /F1 10 Tf (x) Tj ET", "media_ref": None, "offset": 1},
+    ]})
+    docs = spark.createDataFrame(corpus_to_spark_rows(corpus), schema=SPANS_TABLE_SCHEMA)
+    out = str(tmp_path / "ckpt")
+    run_with_checkpoint(docs, out, buckets=2, run_id="v", num_partitions=4)
+    keys = ("pages_parsed", "cells_emitted", "decode_failures")
+    recs = committed_buckets(out)
+    for b, rec in recs.items():
+        sums = spark.read.parquet(f"{out}/metrics/bucket={b}").agg(
+            *[F.sum(k).alias(k) for k in keys]).collect()[0]
+        assert {k: rec[k] for k in keys} == sums.asDict()
+        assert rec["pages_parsed"] > 0 and rec["cells_emitted"] > 0
+    assert sum(r["decode_failures"] for r in recs.values()) == 1
+
+    one = spark.createDataFrame(corpus_to_spark_rows(corpus[:1]), schema=SPANS_TABLE_SCHEMA)
+    run_with_checkpoint(one, str(tmp_path / "one"), buckets=2, num_partitions=2,
+                        input_signature="one")
+    counts = sorted(tuple(r[k] for k in keys)
+                    for r in committed_buckets(str(tmp_path / "one")).values())
+    assert counts[0] == (0, 0, 0) and counts[1][0] > 0
+
+
 def test_resume_with_swapped_input_raises(spark, tmp_path):
     """The commit log pins the input snapshot (file-list signature): resuming
     the same out_dir against a DIFFERENT parquet input is refused (VERDICT
@@ -103,7 +135,7 @@ def test_resume_refuses_commit_record_missing_buckets(spark, tmp_path):
         run_with_checkpoint(docs, out, buckets=2)
 
 
-def test_pdf_dir_job_resume_survives_staging(spark, tmp_path):
+def test_pdf_dir_job_resume_survives_staging(spark, tmp_path, capsys):
     """r6 review: the --input-pdf-dir job stages ingest output under
     args.out, but the checkpoint signature must come from the STABLE
     source .pdf list — a killed-then---resume'd job previously tripped the
@@ -129,10 +161,26 @@ def test_pdf_dir_job_resume_survives_staging(spark, tmp_path):
         }
         (pdf_dir / f"doc{i}.pdf").write_bytes(build_classic_pdf(objs, root=1))
 
+    (pdf_dir / "broken.pdf").write_bytes(b"%PDF-1.7 truncated")
+
+    def printed_matches_tables():
+        from pyspark.sql import functions as F
+
+        captured = capsys.readouterr()
+        printed = json.loads(captured.out.strip().splitlines()[-1])
+        sums = spark.read.parquet(f"{out}/metrics").agg(
+            F.sum("pages_parsed"), F.sum("cells_emitted"), F.sum("decode_failures")
+        ).collect()[0]
+        assert (printed["pages"], printed["cells"], printed["decode_failures"]) == tuple(sums)
+        assert printed["pages"] == 6 and printed["cells"] > 0
+        assert printed["ingest_failures"] == 1
+        assert "broken.pdf: ValueError" in captured.err
+
     out = str(tmp_path / "out")
     job.main(["--input-pdf-dir", str(pdf_dir), "--out", out,
               "--buckets", "3", "--partitions", "2"])
     assert spark.read.parquet(f"{out}/spans").count() == 6
+    printed_matches_tables()
 
     # crash simulation: last bucket uncommitted
     log = os.path.join(out, "_commits.jsonl")
@@ -147,3 +195,4 @@ def test_pdf_dir_job_resume_survives_staging(spark, tmp_path):
     job.main(["--input-pdf-dir", str(pdf_dir), "--out", out,
               "--buckets", "3", "--partitions", "2", "--resume"])
     assert spark.read.parquet(f"{out}/spans").count() == 6
+    printed_matches_tables()

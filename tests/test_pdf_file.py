@@ -886,6 +886,116 @@ def test_oversized_file_is_error_accounted(spark, tmp_path):
     assert rows["big.pdf"]["spans"] == []
 
 
+def _image_pdf() -> bytes:
+    """One page placing a Flate image and a DCT (pass-through) image."""
+    zpix = zlib.compress(bytes(range(64)))
+    fake_jpeg = b"\xff\xd8\xff\xe0FAKEJPEGBYTES\xff\xd9"
+    objs = minimal_objects(CONTENT + b" q 8 0 0 8 10 10 cm /ImA Do Q q /ImB Do Q")
+    objs[3] = (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
+               b"/Resources << /Font << /F1 5 0 R >> "
+               b"/XObject << /ImA 6 0 R /ImB 7 0 R >> >> >>")
+    objs[6] = (f"<< /Type /XObject /Subtype /Image /Width 8 /Height 8 "
+               f"/ColorSpace /DeviceGray /BitsPerComponent 8 "
+               f"/Filter /FlateDecode /Length {len(zpix)} >>\nstream\n".encode()
+               + zpix + b"\nendstream")
+    objs[7] = (f"<< /Type /XObject /Subtype /Image /Width 4 /Height 4 "
+               f"/ColorSpace /DeviceRGB /BitsPerComponent 8 "
+               f"/Filter /DCTDecode /Length {len(fake_jpeg)} >>\nstream\n".encode()
+               + fake_jpeg + b"\nendstream")
+    return build_classic_pdf(objs, root=1)
+
+
+def test_media_lane_oversized_file_is_error_accounted(spark, tmp_path):
+    """The media lane shares the spans lane's per-file loop, size gate
+    included: a file over the limit gives one FileTooLarge error row and
+    no payload rows, while a file under it still yields its images."""
+    from docling_parse_spark.pdf.file import _per_file
+
+    ok = _image_pdf()
+    assert len(ok) < 2048
+    (tmp_path / "ok.pdf").write_bytes(ok)
+    (tmp_path / "big.pdf").write_bytes(b"%PDF-1.7\n" + b"\x00" * 4096)
+    files = spark.read.format("binaryFile").load(str(tmp_path))
+    rows = _per_file(files, "media", max_file_bytes=2048).collect()
+    big = [r for r in rows if r["doc_id"].endswith("big.pdf")]
+    assert len(big) == 1
+    assert big[0]["error"] == "FileTooLarge: 4105 bytes > max_file_bytes=2048"
+    assert big[0]["media_ref"] is None and big[0]["payload"] is None
+    ok_rows = [r for r in rows if r["doc_id"].endswith("ok.pdf")]
+    assert len(ok_rows) == 2 and all(r["error"] is None for r in ok_rows)
+
+
+def test_hostile_files_one_error_row_per_lane(spark, tmp_path):
+    """A 0-byte file, non-PDF bytes and a truncated PDF next to a valid one:
+    no task dies, each bad file gives exactly one error row in each lane,
+    the valid file's rows equal the sequential parsers', and a second run
+    gives identical rows.
+
+    Spark's file index drops zero-length files before any task runs, so
+    the 0-byte file never reaches either lane's scan; the per-file loop
+    itself error-accounts empty content, checked on an in-memory frame."""
+    from docling_parse_spark.pdf.file import (
+        _per_file,
+        ingest_pdf_files,
+        ingest_pdf_media,
+        parse_pdf_media,
+        pdf_files_to_docs,
+    )
+
+    good = _image_pdf()
+    (tmp_path / "good.pdf").write_bytes(good)
+    (tmp_path / "empty.pdf").write_bytes(b"")
+    (tmp_path / "notpdf.pdf").write_bytes(b"GIF89a\x01\x00\x01\x00\x00\xff" * 9)
+    (tmp_path / "truncated.pdf").write_bytes(good[: len(good) // 2])
+    bad = {"notpdf.pdf", "truncated.pdf"}
+
+    def run():
+        spans = sorted((r["doc_id"], [s.asDict() for s in r["spans"]], r["error"])
+                       for r in ingest_pdf_files(spark, str(tmp_path)).collect())
+        media = sorted((r.asDict() for r in ingest_pdf_media(spark, str(tmp_path)).collect()),
+                       key=lambda m: (m["doc_id"], m["media_ref"] or ""))
+        return spans, media
+
+    spans, media = run()
+    good_id = str(tmp_path / "good.pdf")
+    name = lambda doc_id: doc_id.rsplit("/", 1)[-1]  # noqa: E731
+    assert sorted(name(d) for d, _, err in spans if err) == sorted(bad)
+    assert sorted(name(m["doc_id"]) for m in media if m["error"]) == sorted(bad)
+    assert all(s == [] for _, s, err in spans if err)
+    assert all(m["media_ref"] is None and m["payload"] is None for m in media if m["error"])
+    assert [(s, err) for d, s, err in spans if d == good_id] == [
+        (parse_pdf_spans(good, good_id), None)]
+    assert [m for m in media if m["doc_id"] == good_id] == [
+        {"doc_id": good_id, **m, "error": None}
+        for m in sorted(parse_pdf_media(good, good_id), key=lambda m: m["media_ref"])]
+    assert "empty.pdf" not in {name(d) for d, _, _ in spans} | {name(m["doc_id"]) for m in media}
+    assert run() == (spans, media)
+
+    empty = spark.createDataFrame([("file:/x/empty.pdf", b"")], "path string, content binary")
+    for lane in (pdf_files_to_docs(empty), _per_file(empty, "media")):
+        rows = lane.collect()
+        assert len(rows) == 1 and rows[0]["doc_id"] == "/x/empty.pdf"
+        assert rows[0]["error"] == "ValueError: not a PDF (missing %PDF- header)"
+
+
+@pytest.mark.parametrize("lane", ["ingest_pdf_files", "ingest_pdf_media",
+                                  "pdf_files_to_docs"])
+def test_file_lane_plans_are_arrow_only(spark, tmp_path, lane):
+    """Both file lanes run their per-file loop as a mapInArrow."""
+    from docling_parse_spark.pdf import file
+
+    (tmp_path / "a.pdf").write_bytes(_image_pdf())
+    df = {
+        "ingest_pdf_files": lambda: file.ingest_pdf_files(spark, str(tmp_path), 2),
+        "ingest_pdf_media": lambda: file.ingest_pdf_media(spark, str(tmp_path), 2),
+        "pdf_files_to_docs": lambda: file.pdf_files_to_docs(
+            spark.read.format("binaryFile").load(str(tmp_path))),
+    }[lane]()
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "MapInArrow" in plan
+
+
 def test_freed_object_is_not_resurrected():
     """An incremental update that FREES an object must shadow the older
     section's 'n' entry — references read as null (§7.5.4), they do not

@@ -252,8 +252,8 @@ def main():
     p = plan_of(ingest_pdf_files(spark, ingest_dir, num_partitions=4))
     checks = [
         ("binaryFile scan (no driver-side file reads)", "binaryFile" in p),
-        ("file parse Arrow-batched (MapInPandas/MapInArrow)",
-         "MapInPandas" in p or "MapInArrow" in p),
+        ("file parse is one mapInArrow (no MapInPandas)",
+         "MapInArrow" in p and "MapInPandas" not in p),
         ("single spread exchange (the parallelism repartition)",
          p.count("Exchange (") <= 1),
     ]
