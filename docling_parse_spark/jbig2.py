@@ -42,11 +42,10 @@ that guards both sides against silent drift.
 
 Performance posture: the arithmetic path is a per-pixel Python loop —
 correctness-grade, like the scalar AES fallback. At Spark level JBIG2
-payloads come off the media table (``pdf.file.ingest_pdf_media``, a
-mapInArrow file loop) and decode in ``operators.multimodal.decode_media``'s
-Arrow-batched stage, so throughput scales with executors; a vectorized
-row-kernel is possible (contexts slide left-to-right) but not worth the
-complexity until scan corpora dominate.
+payloads decode in ``operators.multimodal.decode_media``'s Arrow-batched
+stage over the media table, so throughput scales with executors; a
+vectorized row-kernel is possible (contexts slide left-to-right) but not
+worth the complexity until scan corpora dominate.
 """
 
 from __future__ import annotations

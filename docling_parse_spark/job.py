@@ -15,12 +15,13 @@ Prints one JSON summary line: docs/sec, spans, failures, scaling inputs.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import shutil
 import sys
 import time
 
-from pyspark.sql import functions as F
+from pyspark.sql import Observation, functions as F
 
 
 def main(argv=None) -> int:
@@ -60,7 +61,7 @@ def main(argv=None) -> int:
     elif args.input_pdf_dir:
         import os
 
-        from docling_parse_spark.pdf.file import ingest_pdf_files
+        from docling_parse_spark.pdf.file import ingest_pdf_files, pdf_files_to_docs
 
         # The checkpoint input signature must come from the STABLE source
         # .pdf list, not the staged parquet below (whose part-file names
@@ -71,13 +72,9 @@ def main(argv=None) -> int:
             for r, _dirs, fs in os.walk(args.input_pdf_dir)
             for f in fs if f.endswith(".pdf")
         )
-        import hashlib
-
-        sig_body = "\n".join(
-            f"{p}\t{os.path.getsize(p)}" for p in src_files)
-        input_signature = (
-            f"pdfdir:{len(src_files)}:"
-            f"{hashlib.md5(sig_body.encode()).hexdigest()}")
+        sizes = [os.path.getsize(p) for p in src_files]
+        sig_body = "\n".join(f"{p}\t{n}" for p, n in zip(src_files, sizes))
+        input_signature = f"pdfdir:{len(src_files)}:{hashlib.md5(sig_body.encode()).hexdigest()}"
 
         # Stage the ingest output once: the checkpointed job reads docs per
         # bucket, and staging means each raw PDF is parsed exactly once
@@ -86,16 +83,25 @@ def main(argv=None) -> int:
         # On --resume an already-staged ingest is reused so the commit log
         # (and half-finished buckets) stay valid.
         if not (args.resume and os.path.exists(f"{args.out}/ingest/_SUCCESS")):
-            ingest_pdf_files(
+            ingested = ingest_pdf_files(
                 spark, args.input_pdf_dir, num_partitions=args.partitions,
                 glob="*.pdf", recursive=True, password=args.password,
-            ).write.mode("overwrite").parquet(f"{args.out}/ingest")
+            )
+            # Spark's file index drops zero-length files before any task
+            # runs; the same per-file loop gives each of them its error row.
+            empty = [(f"file:{os.path.abspath(p)}", b"")
+                     for p, n in zip(src_files, sizes) if not n]
+            if empty:
+                ingested = ingested.unionByName(pdf_files_to_docs(
+                    spark.createDataFrame(empty, "path string, content binary")))
+            ingested.write.mode("overwrite").parquet(f"{args.out}/ingest")
         staged = spark.read.parquet(f"{args.out}/ingest")
-        staged.filter(F.col("error").isNotNull()).select("doc_id", "error").write.mode(
-            "overwrite").parquet(f"{args.out}/ingest_errors")
-        errors = spark.read.parquet(f"{args.out}/ingest_errors").collect()
-        n_ingest_failures = len(errors)
-        for row in errors[:20]:
+        failures = Observation()
+        staged.filter(F.col("error").isNotNull()).select("doc_id", "error").observe(
+            failures, F.count("*").alias("n")).write.mode("overwrite").parquet(
+            f"{args.out}/ingest_errors")
+        n_ingest_failures = failures.get["n"]
+        for row in spark.read.parquet(f"{args.out}/ingest_errors").limit(20).collect():
             print(f"ingest failure: {row['doc_id']}: {row['error']}", file=sys.stderr)
         docs = staged.filter(F.col("error").isNull()).drop("error")
     elif args.n_docs:

@@ -1306,23 +1306,16 @@ MEDIA_FILE_DDL = ("doc_id string, media_ref string, content_type string, "
                   "payload binary, error string")
 _MAX_FILE_BYTES = 512 << 20
 
-
-def _spans_of(doc_id: str, data: bytes, password) -> list[tuple]:
-    return [(doc_id, parse_pdf_spans(data, doc_id, password=password), None)]
-
-
-def _media_of(doc_id: str, data: bytes, password) -> list[tuple]:
-    return [(doc_id, m["media_ref"], m["content_type"], m["width"], m["height"],
-             m["bits"], m["colorspace"], m["payload"], None)
-            for m in parse_pdf_media(data, doc_id, password=password)]
+# A file lane: output DDL, the rows of one parsed file (columns a row leaves
+# out are null), and a failed file's error row besides doc_id and error.
+_SPANS_LANE = (PDF_DOCS_DDL, lambda doc_id, data, pw: [
+    {"doc_id": doc_id, "spans": parse_pdf_spans(data, doc_id, password=pw)}], {"spans": []})
+_MEDIA_LANE = (MEDIA_FILE_DDL, lambda doc_id, data, pw: [
+    {"doc_id": doc_id, **m} for m in parse_pdf_media(data, doc_id, password=pw)], {})
 
 
-# per lane: output DDL, the rows of one parsed file, and the columns between
-# doc_id and error that a failed file's single error row leaves blank
-_LANES = {
-    "spans": (PDF_DOCS_DDL, _spans_of, ([],)),
-    "media": (MEDIA_FILE_DDL, _media_of, (None,) * 7),
-}
+class FileTooLarge(Exception):
+    """A file over the lanes' ``max_file_bytes``; it is never parsed."""
 
 
 def _read_pdf_files(spark, path: str, num_partitions: int | None,
@@ -1337,15 +1330,15 @@ def _read_pdf_files(spark, path: str, num_partitions: int | None,
     return files.repartition(num_partitions) if num_partitions else files
 
 
-def _per_file(files_df, lane: str, password=None,
-              max_file_bytes: int = _MAX_FILE_BYTES):
+def _per_file(files_df, lane, password=None, max_file_bytes: int = _MAX_FILE_BYTES):
     """Both file lanes' per-file ``mapInArrow`` loop over a (path, content)
     frame. A file over ``max_file_bytes`` gives one FileTooLarge error row
     without leaving Arrow; any other file gives the lane's rows, or one
-    error row if its parse raises."""
-    from docling_parse_spark.extract import _arrow_schema, _columns
+    error row if its parse raises or its rows do not fit the lane's schema
+    (say an image /Width beyond int32)."""
+    from docling_parse_spark.extract import _arrow_schema
 
-    ddl, rows_of, blank = _LANES[lane]
+    ddl, rows_of, blank = lane
     schema = _arrow_schema(ddl)
 
     def run(batches):
@@ -1355,18 +1348,19 @@ def _per_file(files_df, lane: str, password=None,
         for batch in batches:
             contents = batch.column("content")
             sizes = pc.binary_length(contents).to_pylist()
-            rows = []
+            parts = []
             for i, p in enumerate(batch.column("path").to_pylist()):
                 doc_id = p.split("://", 1)[-1].removeprefix("file:")
-                if max_file_bytes and (sizes[i] or 0) > max_file_bytes:
-                    rows.append((doc_id, *blank, f"FileTooLarge: {sizes[i]} bytes "
-                                 f"> max_file_bytes={max_file_bytes}"))
-                    continue
                 try:
-                    rows += rows_of(doc_id, contents[i].as_py(), password)
+                    if max_file_bytes and (sizes[i] or 0) > max_file_bytes:
+                        raise FileTooLarge(f"{sizes[i]} bytes > max_file_bytes={max_file_bytes}")
+                    rows = rows_of(doc_id, contents[i].as_py(), password)
+                    parts.append(pa.RecordBatch.from_pylist(rows, schema=schema))
                 except Exception as e:
-                    rows.append((doc_id, *blank, f"{type(e).__name__}: {e}"))
-            yield pa.RecordBatch.from_arrays(_columns(rows, schema), schema=schema)
+                    parts.append(pa.RecordBatch.from_pylist([
+                        {"doc_id": doc_id, **blank, "error": f"{type(e).__name__}: {e}"}],
+                        schema=schema))
+            yield from pa.Table.from_batches(parts, schema=schema).combine_chunks().to_batches()
 
     return files_df.select("path", "content").mapInArrow(run, schema=ddl)
 
@@ -1383,7 +1377,7 @@ def pdf_files_to_docs(files_df, max_file_bytes: int = _MAX_FILE_BYTES,
     would otherwise hold a whole Arrow batch + parse working set in one
     task's memory. The check uses the already-read payload length, so it
     works for both the batch scan and the streaming source."""
-    return _per_file(files_df, "spans", password, max_file_bytes)
+    return _per_file(files_df, _SPANS_LANE, password, max_file_bytes)
 
 
 def ingest_pdf_files(spark, path: str, num_partitions: int | None = None,
@@ -1416,4 +1410,4 @@ def ingest_pdf_media(spark, path: str, num_partitions: int | None = None,
     rows. ``glob``/``recursive``/``password`` mirror ingest_pdf_files so
     the two scans select — and can open — the same file set."""
     return _per_file(_read_pdf_files(spark, path, num_partitions, glob, recursive),
-                     "media", password)
+                     _MEDIA_LANE, password)

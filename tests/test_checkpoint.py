@@ -162,6 +162,7 @@ def test_pdf_dir_job_resume_survives_staging(spark, tmp_path, capsys):
         (pdf_dir / f"doc{i}.pdf").write_bytes(build_classic_pdf(objs, root=1))
 
     (pdf_dir / "broken.pdf").write_bytes(b"%PDF-1.7 truncated")
+    (pdf_dir / "empty.pdf").write_bytes(b"")
 
     def printed_matches_tables():
         from pyspark.sql import functions as F
@@ -173,8 +174,9 @@ def test_pdf_dir_job_resume_survives_staging(spark, tmp_path, capsys):
         ).collect()[0]
         assert (printed["pages"], printed["cells"], printed["decode_failures"]) == tuple(sums)
         assert printed["pages"] == 6 and printed["cells"] > 0
-        assert printed["ingest_failures"] == 1
+        assert printed["ingest_failures"] == 2
         assert "broken.pdf: ValueError" in captured.err
+        assert "empty.pdf: ValueError: not a PDF" in captured.err
 
     out = str(tmp_path / "out")
     job.main(["--input-pdf-dir", str(pdf_dir), "--out", out,

@@ -886,7 +886,7 @@ def test_oversized_file_is_error_accounted(spark, tmp_path):
     assert rows["big.pdf"]["spans"] == []
 
 
-def _image_pdf() -> bytes:
+def _image_pdf(dct_width: int = 4) -> bytes:
     """One page placing a Flate image and a DCT (pass-through) image."""
     zpix = zlib.compress(bytes(range(64)))
     fake_jpeg = b"\xff\xd8\xff\xe0FAKEJPEGBYTES\xff\xd9"
@@ -898,7 +898,7 @@ def _image_pdf() -> bytes:
                f"/ColorSpace /DeviceGray /BitsPerComponent 8 "
                f"/Filter /FlateDecode /Length {len(zpix)} >>\nstream\n".encode()
                + zpix + b"\nendstream")
-    objs[7] = (f"<< /Type /XObject /Subtype /Image /Width 4 /Height 4 "
+    objs[7] = (f"<< /Type /XObject /Subtype /Image /Width {dct_width} /Height 4 "
                f"/ColorSpace /DeviceRGB /BitsPerComponent 8 "
                f"/Filter /DCTDecode /Length {len(fake_jpeg)} >>\nstream\n".encode()
                + fake_jpeg + b"\nendstream")
@@ -909,14 +909,14 @@ def test_media_lane_oversized_file_is_error_accounted(spark, tmp_path):
     """The media lane shares the spans lane's per-file loop, size gate
     included: a file over the limit gives one FileTooLarge error row and
     no payload rows, while a file under it still yields its images."""
-    from docling_parse_spark.pdf.file import _per_file
+    from docling_parse_spark.pdf.file import _MEDIA_LANE, _per_file
 
     ok = _image_pdf()
     assert len(ok) < 2048
     (tmp_path / "ok.pdf").write_bytes(ok)
     (tmp_path / "big.pdf").write_bytes(b"%PDF-1.7\n" + b"\x00" * 4096)
     files = spark.read.format("binaryFile").load(str(tmp_path))
-    rows = _per_file(files, "media", max_file_bytes=2048).collect()
+    rows = _per_file(files, _MEDIA_LANE, max_file_bytes=2048).collect()
     big = [r for r in rows if r["doc_id"].endswith("big.pdf")]
     assert len(big) == 1
     assert big[0]["error"] == "FileTooLarge: 4105 bytes > max_file_bytes=2048"
@@ -926,15 +926,15 @@ def test_media_lane_oversized_file_is_error_accounted(spark, tmp_path):
 
 
 def test_hostile_files_one_error_row_per_lane(spark, tmp_path):
-    """A 0-byte file, non-PDF bytes and a truncated PDF next to a valid one:
-    no task dies, each bad file gives exactly one error row in each lane,
-    the valid file's rows equal the sequential parsers', and a second run
-    gives identical rows.
-
-    Spark's file index drops zero-length files before any task runs, so
-    the 0-byte file never reaches either lane's scan; the per-file loop
-    itself error-accounts empty content, checked on an in-memory frame."""
+    """Non-PDF bytes, a truncated PDF and an image whose /Width overflows
+    the media schema's int next to a valid file: no task dies, each bad
+    file gives exactly one error row in each lane it is bad for, the valid
+    file's rows equal the sequential parsers', and a second run gives
+    identical rows. The loop also error-accounts empty content, checked on
+    an in-memory frame (a 0-byte file on disk never reaches the scan; see
+    ``test_zero_byte_file_gives_one_error_row_per_lane``)."""
     from docling_parse_spark.pdf.file import (
+        _MEDIA_LANE,
         _per_file,
         ingest_pdf_files,
         ingest_pdf_media,
@@ -944,9 +944,9 @@ def test_hostile_files_one_error_row_per_lane(spark, tmp_path):
 
     good = _image_pdf()
     (tmp_path / "good.pdf").write_bytes(good)
-    (tmp_path / "empty.pdf").write_bytes(b"")
     (tmp_path / "notpdf.pdf").write_bytes(b"GIF89a\x01\x00\x01\x00\x00\xff" * 9)
     (tmp_path / "truncated.pdf").write_bytes(good[: len(good) // 2])
+    (tmp_path / "wide.pdf").write_bytes(_image_pdf(dct_width=1 << 32))
     bad = {"notpdf.pdf", "truncated.pdf"}
 
     def run():
@@ -960,22 +960,37 @@ def test_hostile_files_one_error_row_per_lane(spark, tmp_path):
     good_id = str(tmp_path / "good.pdf")
     name = lambda doc_id: doc_id.rsplit("/", 1)[-1]  # noqa: E731
     assert sorted(name(d) for d, _, err in spans if err) == sorted(bad)
-    assert sorted(name(m["doc_id"]) for m in media if m["error"]) == sorted(bad)
+    assert sorted(name(m["doc_id"]) for m in media if m["error"]) == sorted(bad | {"wide.pdf"})
     assert all(s == [] for _, s, err in spans if err)
     assert all(m["media_ref"] is None and m["payload"] is None for m in media if m["error"])
+    assert [m["error"] for m in media if name(m["doc_id"]) == "wide.pdf"] == [
+        "ArrowInvalid: Value 4294967296 too large to fit in C integer type"]
     assert [(s, err) for d, s, err in spans if d == good_id] == [
         (parse_pdf_spans(good, good_id), None)]
     assert [m for m in media if m["doc_id"] == good_id] == [
         {"doc_id": good_id, **m, "error": None}
         for m in sorted(parse_pdf_media(good, good_id), key=lambda m: m["media_ref"])]
-    assert "empty.pdf" not in {name(d) for d, _, _ in spans} | {name(m["doc_id"]) for m in media}
     assert run() == (spans, media)
 
     empty = spark.createDataFrame([("file:/x/empty.pdf", b"")], "path string, content binary")
-    for lane in (pdf_files_to_docs(empty), _per_file(empty, "media")):
+    for lane in (pdf_files_to_docs(empty), _per_file(empty, _MEDIA_LANE)):
         rows = lane.collect()
         assert len(rows) == 1 and rows[0]["doc_id"] == "/x/empty.pdf"
         assert rows[0]["error"] == "ValueError: not a PDF (missing %PDF- header)"
+
+
+@pytest.mark.xfail(strict=True, reason="Spark's file index drops zero-length files before "
+                   "any task runs, so neither lane sees them (FOUND in CHANGES.md)")
+def test_zero_byte_file_gives_one_error_row_per_lane(spark, tmp_path):
+    """A 0-byte .pdf should give one error row in each file lane."""
+    from docling_parse_spark.pdf.file import ingest_pdf_files, ingest_pdf_media
+
+    (tmp_path / "good.pdf").write_bytes(_image_pdf())
+    (tmp_path / "empty.pdf").write_bytes(b"")
+    for lane in (ingest_pdf_files, ingest_pdf_media):
+        rows = [r for r in lane(spark, str(tmp_path)).collect()
+                if r["doc_id"].endswith("/empty.pdf")]
+        assert [r["error"] for r in rows] == ["ValueError: not a PDF (missing %PDF- header)"]
 
 
 @pytest.mark.parametrize("lane", ["ingest_pdf_files", "ingest_pdf_media",
