@@ -471,15 +471,41 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     """Algorithm 2.B (ISO 32000-2 §7.6.4.3.4): iterated SHA-256/384/512
     with an AES-128-CBC feedback — used by the /R 6 revision."""
     k = hashlib.sha256(password + salt + udata).digest()
-    i = 0
-    while True:
-        k1 = (password + k + udata) * 64
-        e = aes_cbc_encrypt(k[:16], k[16:32], k1)
-        mod = sum(e[:16]) % 3
-        k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[mod](e).digest()
-        i += 1
-        if i >= 64 and e[-1] <= i - 32:
-            return k[:32]
+    encrypt = aes_cbc_encrypt
+    evp = _load_evp()
+    ctx = None
+    if evp is not None:
+        # one EVP context for all ~70 rounds, re-keyed per round: building
+        # a context (and looking up its cipher) per call cost more than
+        # the encryption itself
+        ctypes, lib = evp
+        ctx = lib.EVP_CIPHER_CTX_new()
+        if ctx and lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None, None, None, 1) == 1:
+            lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
+            out = ctypes.create_string_buffer(64 * (len(password) + 64 + len(udata)) + 16)
+            outl = ctypes.c_int(0)
+            outl_p = ctypes.byref(outl)
+            init, update = lib.EVP_CipherInit_ex, lib.EVP_CipherUpdate
+
+            def encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+                n = len(data)
+                if (init(ctx, None, None, key, iv, 1) == 1
+                        and update(ctx, out, outl_p, data, n) == 1 and outl.value == n):
+                    return out[:n]
+                return aes_cbc_encrypt(key, iv, data)
+    try:
+        i = 0
+        while True:
+            k1 = (password + k + udata) * 64
+            e = encrypt(k[:16], k[16:32], k1)
+            mod = sum(e[:16]) % 3
+            k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[mod](e).digest()
+            i += 1
+            if i >= 64 and e[-1] <= i - 32:
+                return k[:32]
+    finally:
+        if ctx:
+            lib.EVP_CIPHER_CTX_free(ctx)
 
 
 def _prep_password(password) -> bytes:

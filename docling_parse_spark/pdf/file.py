@@ -39,6 +39,7 @@ from dataclasses import dataclass
 from docling_parse_spark.pdf.filters import apply_filters
 
 _WS = b"\x00\t\n\x0c\r "
+_HEX_BODY_RE = re.compile(rb"[0-9A-Fa-f\x00\t\n\x0c\r ]*")  # a hex string's digits and whitespace
 _DELIM = b"()<>[]{}/%"
 
 # PDFDocEncoding (ISO 32000-1 Annex D.2) deltas vs Latin-1: 0x18-0x1F are
@@ -208,22 +209,17 @@ class _Lexer:
 
     def _hex_string(self) -> bytes:
         d = self.data
-        self.pos += 1
-        digits = bytearray()
-        while self.pos < len(d) and d[self.pos] != 0x3E:
-            if d[self.pos] in b"0123456789abcdefABCDEF":
-                digits.append(d[self.pos])
-            elif d[self.pos] not in _WS:
-                # strict posture (ADVICE r4): silently skipping a corrupt
-                # byte decodes to SHIFTED bytes; surface as a per-file
-                # failure like every other malformed construct here
-                raise ValueError(
-                    f"invalid byte 0x{d[self.pos]:02x} in hex string at {self.pos}"
-                )
-            self.pos += 1
-        self.pos += 1  # '>'
+        body = _HEX_BODY_RE.match(d, self.pos + 1)
+        end = body.end()
+        if end < len(d) and d[end] != 0x3E:
+            # strict posture (ADVICE r4): silently skipping a corrupt
+            # byte decodes to SHIFTED bytes; surface as a per-file
+            # failure like every other malformed construct here
+            raise ValueError(f"invalid byte 0x{d[end]:02x} in hex string at {end}")
+        self.pos = end + 1  # '>'
+        digits = body.group().translate(None, _WS)
         if len(digits) % 2:
-            digits.append(0x30)
+            digits += b"0"
         return bytes.fromhex(digits.decode())
 
     def _dict(self):

@@ -23,6 +23,9 @@ src/parse/page_item_sanitators/cells.h, src/parse/pdf_sanitators/constants.h):
 from __future__ import annotations
 
 import math
+from bisect import bisect_right
+from itertools import compress, count, repeat
+from operator import add, and_, attrgetter, le, mul, ne, sub
 
 from docling_parse_spark.pdf.interpreter import Cell
 
@@ -52,119 +55,161 @@ _NORM.update(_LIGATURES)
 _NORM_TABLE = str.maketrans(_NORM)
 
 _LIGATURE_CHARS = set(_LIGATURES) | {"ffi", "ffl", "fi", "fl", "ff"}
+# the last characters of a text that can pass the ligature test
+_LIGATURE_TAILS = frozenset(_LIGATURES) | {"i", "l"}
+
+_ACTIVE = attrgetter("active")
+_TEXT = attrgetter("text")
+_TEXT_FONT = attrgetter("text", "font_key")
+_X0 = attrgetter("r_x0")
+_CODE_MASK = (1 << 20) - 1  # text hash bits in the dedup sort key
+_SPAN_LIMIT = 2.0 ** 40  # a page whose |r_x0| sum is larger takes the exact path
 
 
 def sanitize_text(cells: list[Cell]) -> None:
     for c in cells:
-        c.text = c.text.translate(_NORM_TABLE)
+        t = c.text
+        if not t.isascii():  # the table maps non-ASCII characters only
+            c.text = t.translate(_NORM_TABLE)
 
 
 def remove_duplicate_cells(cells: list[Cell], eps: float = EPS_DEDUP) -> list[Cell]:
-    """Semantics identical to the naive same-line window scan (deactivate j>i
-    when text+font equal and all quad corners within eps, scanning until the
-    first j with |y0_i - y0_j| > eps), but organized as consecutive
-    exactly-equal-y runs with per-run x-buckets: a line of k glyphs costs
-    ~O(k) bucket probes instead of O(k²) pair checks — this was the hottest
-    page-finish kernel (the ``dedup`` stage key). Deactivations are
-    independent and idempotent, so probing candidates bucket-first instead of
-    index-order yields the same final active set."""
-    n = len(cells)
-    if n < 2:
-        return [c for c in cells if c.active]
-    # intern (text, font_key) to small ints: deactivation requires text+font
-    # equality, so cells whose key is unique can neither deactivate nor be
-    # deactivated — the common duplicate-free page returns after one dict
-    # pass, and the bucket key below carries the id so probes only ever see
-    # true same-text candidates (no string compares in the inner loop)
-    key_ids: dict = {}
-    tids = [-1] * n
-    counts: list[int] = []
-    any_dup = False
-    for i, c in enumerate(cells):
-        if not c.active:
-            continue
-        k = (c.text, c.font_key)
-        t = key_ids.get(k)
-        if t is None:
-            key_ids[k] = len(counts)
-            tids[i] = len(counts)
-            counts.append(1)
-        else:
-            counts[t] += 1
-            tids[i] = t
-            any_dup = True
-    if not any_dup:
-        return [c for c in cells if c.active]
-    ys = [c.r_y0 for c in cells]
-    xs = [c.r_x0 for c in cells]
-    # consecutive exactly-equal-y runs (glyphs on one baseline share the
-    # float bit pattern); windows are evaluated once per RUN, not per cell
-    runs: list[tuple[int, int, float]] = []
-    run_of = [0] * n
-    s = 0
-    for i in range(1, n + 1):
-        if i == n or ys[i] != ys[s]:
-            runs.append((s, i, ys[s]))
-            r = len(runs) - 1
-            for j in range(s, i):
-                run_of[j] = r
-            s = i
+    """Same-line window scan (cells.h:307-347): in index order, each still
+    active cell i deactivates every still active j > i with the same
+    (text, font_key) whose r_x0, r_x1, r_y1, r_x2, r_y2, r_x3 and r_y3 are
+    within eps of i's, provided no cell between them (inactive ones
+    included) has |r_y0 - r_y0_i| > eps: the window closes at the first
+    such cell.
+
+    Reject first: only a same-key pair within eps in x can deactivate
+    anything, and on most pages the repeated glyphs (every 'e' of a page
+    shares one key) lie far apart. Sorting the float ``code · w + r_x0``,
+    where code is a hash of the text and w exceeds twice the largest
+    |r_x0|, keeps each code's cells together and in x order, so every such
+    pair shows up as a small gap between neighbours; a page without one
+    returns after a few C-level passes. Only the neighbours around a small
+    gap get the exact tests, and only the pairs that pass them go through
+    the window logic."""
+    act = _active(cells)
+    m = len(act)
+    if m < 2:
+        return act
+    xs = list(map(_X0, act))
     inv = 1.0 / eps
-    # flat int bucket keys (x-bucket * K + tid): neighbor buckets are then
-    # just key +- K — pure int hashing, no tuple alloc per probe
-    K = len(counts)
-    buckets: list[dict[int, list[int]]] = []
-    for a, b, _y in runs:
-        d: dict[int, list[int]] = {}
-        for j in range(a, b):
-            t = tids[j]
-            if t >= 0 and counts[t] > 1:
-                d.setdefault(int(xs[j] * inv) * K + t, []).append(j)
-        buckets.append(d)
-    n_runs = len(runs)
-    for i in range(n):
-        ti_id = tids[i]
-        if ti_id < 0 or counts[ti_id] < 2:
+    span = sum(map(abs, xs))
+    if span * inv < _SPAN_LIMIT:  # all finite, none huge
+        codes = list(map(and_, map(hash, map(_TEXT, act)), repeat(_CODE_MASK)))
+        w = 2.0 ** (int(span).bit_length() + 2)
+        enc = list(map(add, map(mul, codes, repeat(w)), xs))
+        # rounding in ``enc`` moves a gap by a few ulps of its magnitude
+        slack = ((_CODE_MASK + 1) * w + span) * 2.0 ** -48
+        ends = sorted(enc)
+        cand = list(compress(range(1, m), map(le, map(sub, ends[1:], ends), repeat(eps + 3 * slack))))
+        if not cand:
+            return act
+        order = sorted(range(m), key=enc.__getitem__)
+        lim = eps + slack
+    else:  # a non-finite or huge r_x0: the exact order, checked everywhere
+        codes = _key_ids(act)
+        order = sorted(_finite_x_positions(codes, xs, inv), key=lambda k: (codes[k], xs[k]))
+        cand = range(1, len(order))
+        lim = eps
+    pairs = []
+    for q in cand:
+        k = order[q]
+        code = codes[k]
+        x = xs[k]
+        c = act[k]
+        key = (c.text, c.font_key)
+        p = q - 1
+        while p >= 0:
+            k2 = order[p]
+            x2 = xs[k2]
+            if codes[k2] != code or x - x2 > lim:
+                break
+            o = act[k2]
+            if (
+                abs(x - x2) <= eps
+                and abs(c.r_x1 - o.r_x1) <= eps
+                and abs(c.r_y1 - o.r_y1) <= eps
+                and abs(c.r_x2 - o.r_x2) <= eps
+                and abs(c.r_y2 - o.r_y2) <= eps
+                and abs(c.r_x3 - o.r_x3) <= eps
+                and abs(c.r_y3 - o.r_y3) <= eps
+                and (o.text, o.font_key) == key
+            ):
+                pairs.append((k2, k) if k2 < k else (k, k2))
+            p -= 1
+    if not pairs:
+        return act
+    _deactivate_within_window(cells, act, pairs, eps)
+    return [c for c in act if c.active]
+
+
+def _key_ids(act: list[Cell]) -> list[int]:
+    """(text, font_key) interned to small ints, equal keys equal ids."""
+    ids: dict = {}
+    return list(map(ids.setdefault, map(_TEXT_FONT, act), count()))
+
+
+def _finite_x_positions(key_ids: list[int], xs: list[float], inv: float) -> list[int]:
+    """Positions whose r_x0 · (1/eps) is finite. The bucketed scan this
+    kernel replaced took ``int(r_x0 / eps)`` of every cell whose key
+    repeats, so such a cell with a non-finite product fails the page with
+    the same error, raised here for the first one in index order; a cell
+    with a unique key can never pair and is only left out."""
+    seen: dict[int, int] = {}
+    for t in key_ids:
+        seen[t] = seen.get(t, 0) + 1
+    keep = []
+    for k, x in enumerate(xs):
+        if math.isfinite(x * inv):
+            keep.append(k)
+        elif seen[key_ids[k]] > 1:
+            int(x * inv)  # ValueError (NaN) / OverflowError (inf)
+    return keep
+
+
+def _deactivate_within_window(cells: list[Cell], act: list[Cell], pairs: list[tuple[int, int]], eps: float) -> None:
+    """Apply the candidate pairs (positions in ``act``, lo < hi) in index
+    order. The window of cell i ends at the first later cell of ``cells``
+    whose r_y0 is more than eps from r_y0_i; cells sharing a r_y0 with
+    their predecessor form one run, so the search steps run by run."""
+    n = len(cells)
+    if len(act) == n:
+        pos = range(n)
+    else:
+        pos = [i for i, c in enumerate(cells) if c.active]
+    ys = [c.r_y0 for c in cells]
+    # run starts: index 0 and every cell whose r_y0 differs from the one
+    # before it (NaN differs from everything, as in the old run split)
+    starts = [0]
+    starts += compress(range(1, n), map(ne, ys[1:], ys))
+    ends: dict[int, int] = {}
+    pairs.sort()
+    for lo, hi in pairs:
+        a, b = act[lo], act[hi]
+        if not a.active or not b.active:
             continue
-        ci = cells[i]
-        if not ci.active:
-            continue
-        xi = xs[i]
-        yi = ys[i]
-        kb = int(xi * inv) * K + ti_id
-        for rj in range(run_of[i], n_runs):
-            if abs(yi - runs[rj][2]) > eps:
-                break  # same-line window closed (run ys are exact)
-            d = buckets[rj]
-            for key in (kb - K, kb, kb + K):
-                for j in d.get(key, ()):
-                    if j <= i:
-                        continue
-                    cj = cells[j]
-                    if not cj.active:
-                        continue
-                    # tid equality already implies text + font_key equality
-                    if (
-                        abs(xi - xs[j]) <= eps
-                        and abs(ci.r_x1 - cj.r_x1) <= eps
-                        and abs(ci.r_y1 - cj.r_y1) <= eps
-                        and abs(ci.r_x2 - cj.r_x2) <= eps
-                        and abs(ci.r_y2 - cj.r_y2) <= eps
-                        and abs(ci.r_x3 - cj.r_x3) <= eps
-                        and abs(ci.r_y3 - cj.r_y3) <= eps
-                    ):
-                        cj.active = False
-    return [c for c in cells if c.active]
+        i = pos[lo]
+        end = ends.get(i)
+        if end is None:
+            yi = ys[i]
+            end = n
+            for r in range(bisect_right(starts, i), len(starts)):
+                s = starts[r]
+                if abs(yi - ys[s]) > eps:
+                    end = s
+                    break
+            ends[i] = end
+        if pos[hi] < end:
+            b.active = False
 
 
 def _pair_avg_char_width(a: Cell, b: Cell) -> float:
     total_w = a.width() + b.width()
     total_n = max(1, len(a.text) + len(b.text))
     return total_w / total_n
-
-
-def _is_space_cell(c: Cell) -> bool:
-    return c.text.strip() == ""
 
 
 def _ends_with_ligature(c: Cell) -> bool:
@@ -230,80 +275,111 @@ def _merge_pass_forward(cells: list[Cell], factor: float, block_spaces: bool, ga
     """L2R forward pass: each active cell greedily absorbs its successor while
     adjacent; break on first failure (order-sensitive by design).
 
-    The adjacency predicate is inlined (same float expressions as
-    :func:`_adjacent`, which the other passes still use) with a's geometry
-    cached in locals across the inner loop — a's right edge, diagonal
-    length and text length only change when a merge succeeds, so the scan
-    of a long word re-derives them once per merge instead of once per
-    probe. Bit-identical decisions: the cached values are the same floats
-    the per-call recomputation produced."""
+    One loop: the adjacency predicate (same float expressions as
+    :func:`_adjacent`) and the merge (as :func:`_merge_into`) are inlined,
+    and the growing cell's text and geometry live in locals that are
+    written back once when its run ends. Every cell the run passed over is
+    inactive afterwards, so the scan resumes at the cell that ended it.
+
+    The word pass's space-barrier cap of :func:`_adjacent` is not tested:
+    the cap is ``avg * 2·factor``, at least eps in size, so a gap beyond it
+    fails the eps test as well."""
     changed = False
     n = len(cells)
-    max_f = SPACE_BARRIER_FACTOR * factor if block_spaces else None
     sqrt = math.sqrt
+    dist = math.dist
+    ligatures = _LIGATURE_CHARS
+    tails = _LIGATURE_TAILS
     i = 0
     while i < n:
         a = cells[i]
         if not a.active or (block_spaces and not a.text.strip()):
             i += 1
             continue
-        # a-side cache (refreshed after each successful merge)
         a_font = a.font_key
-        wx = a.r_x1 - a.r_x0
-        wy = a.r_y1 - a.r_y0
-        wa = sqrt(wx * wx + wy * wy)
-        a_len = len(a.text)
+        a_ltr = a.left_to_right
+        a_text = a.text
+        a_len = len(a_text)
+        a_x0 = a.r_x0
+        a_y0 = a.r_y0
         a_x1 = a.r_x1
         a_y1 = a.r_y1
         a_x2 = a.r_x2
         a_y2 = a.r_y2
-        a_lig = _ends_with_ligature(a)
+        a_y3 = a.r_y3
+        a_instr = a.instr_count
+        wx = a_x1 - a_x0
+        wy = a_y1 - a_y0
+        wa = sqrt(wx * wx + wy * wy)
+        a_lig = a_text[-1:] in tails and (a_text[-1] in ligatures or a_text.endswith(("ffi", "ffl")))
+        merged = False
         j = i + 1
         while j < n:
             b = cells[j]
             if not b.active:
                 j += 1
                 continue
-            if block_spaces and not b.text.strip():
+            b_text = b.text
+            if block_spaces and not b_text.strip():
                 break  # space is a hard barrier for word merging
             if a_font != b.font_key:
                 break
-            # --- inlined _adjacent(a, b, factor, max_f) ---
-            vx = b.r_x1 - b.r_x0
-            vy = b.r_y1 - b.r_y0
-            total_n = a_len + len(b.text)
-            avg = (wa + sqrt(vx * vx + vy * vy)) / (
-                total_n if total_n > 1 else 1
-            )
+            b_x0 = b.r_x0
+            b_y0 = b.r_y0
+            b_x1 = b.r_x1
+            b_y1 = b.r_y1
+            vx = b_x1 - b_x0
+            vy = b_y1 - b_y0
+            total_n = a_len + len(b_text)
+            avg = (wa + sqrt(vx * vx + vy * vy)) / (total_n if total_n > 1 else 1)
             eps = avg * factor
-            dx = b.r_x0 - a_x1
-            dy = b.r_y0 - a_y1
-            d_bottom2 = dx * dx + dy * dy
-            if max_f is not None:
-                cap = avg * max_f
-                if d_bottom2 > cap * cap:
-                    break
-            if d_bottom2 >= eps * eps:
+            dx = b_x0 - a_x1
+            dy = b_y0 - a_y1
+            if dx * dx + dy * dy >= eps * eps:
                 break
-            eps1 = eps * (2.0 if a_lig else 1.0)
+            eps1 = eps * 2.0 if a_lig else eps
             dx = b.r_x3 - a_x2
             dy = b.r_y3 - a_y2
             if dx * dx + dy * dy >= eps1 * eps1:
                 break
-            # --- adjacency holds: merge and refresh the a-cache ---
-            _merge_into(a, b, gap_space_factor)
-            changed = True
-            wx = a.r_x1 - a.r_x0
-            wy = a.r_y1 - a.r_y0
+            # adjacency holds: merge b into the run
+            ltr = a_ltr or b.left_to_right
+            if gap_space_factor is not None and dist((a_x1, a_y1), (b_x0, b_y0)) > gap_space_factor * avg:
+                b_text = " " + b_text if ltr else b_text + " "
+            a_text = a_text + b_text if ltr else b_text + a_text  # RTL prepends
+            a_len = len(a_text)
+            a_x1 = b_x1
+            a_y1 = b_y1
+            a_x2 = b.r_x2
+            a_y2 = b.r_y2
+            if b_y0 < a_y0:
+                a_y0 = b_y0
+            b_y3 = b.r_y3
+            if b_y3 > a_y3:
+                a_y3 = b_y3
+            b_instr = b.instr_count
+            if b_instr < a_instr:
+                a_instr = b_instr
+            b.active = False
+            merged = True
+            wx = a_x1 - a_x0
+            wy = a_y1 - a_y0
             wa = sqrt(wx * wx + wy * wy)
-            a_len = len(a.text)
-            a_x1 = a.r_x1
-            a_y1 = a.r_y1
-            a_x2 = a.r_x2
-            a_y2 = a.r_y2
-            a_lig = _ends_with_ligature(a)
+            a_lig = a_text[-1:] in tails and (a_text[-1] in ligatures or a_text.endswith(("ffi", "ffl")))
             j += 1
-        i += 1
+        if merged:
+            a.text = a_text
+            a.r_x1 = a_x1
+            a.r_y1 = a_y1
+            a.r_x2 = a_x2
+            a.r_y2 = a_y2
+            a.r_y0 = a_y0
+            a.r_y3 = a_y3
+            a.instr_count = a_instr
+            changed = True
+            i = j
+        else:
+            i += 1
     return changed
 
 
@@ -367,17 +443,17 @@ def merge_cells(
     gap_space_factor: float | None = None,
 ) -> list[Cell]:
     """The 3-pass contraction (cells.h:441-609). Mutates and compacts."""
-    work = [c for c in cells if c.active]
+    work = _active(cells)
     _merge_pass_forward(work, factor, block_spaces, gap_space_factor)
-    work = [c for c in work if c.active]
+    work = _active(work)
     _merge_pass_backward_rtl(work, factor)
-    work = [c for c in work if c.active]
+    work = _active(work)
     _merge_pass_reverse_adjacency(work, factor, gap_space_factor)
-    return [c for c in work if c.active]
+    return _active(work)
 
 
-def _clone(c: Cell) -> Cell:
-    return c.clone()
+def _active(cells: list[Cell]) -> list[Cell]:
+    return list(compress(cells, map(_ACTIVE, cells)))
 
 
 def create_word_cells(char_cells: list[Cell], copy: bool = True) -> list[Cell]:
@@ -385,21 +461,16 @@ def create_word_cells(char_cells: list[Cell], copy: bool = True) -> list[Cell]:
     erase space cells, dedup. ``copy=False`` lets a caller that owns the char
     cells (and never reads them again — decode_page) skip the defensive
     clone of every glyph cell."""
-    work = [_clone(c) for c in char_cells if c.active] if copy else [
-        c for c in char_cells if c.active
-    ]
+    work = [c.clone() for c in char_cells if c.active] if copy else char_cells
     merged = merge_cells(work, WORD_FACTOR, block_spaces=True, gap_space_factor=None)
-    merged = [c for c in merged if not _is_space_cell(c)]
-    return remove_duplicate_cells(merged)
+    return remove_duplicate_cells([c for c in merged if c.text.strip()])
 
 
 def create_line_cells(char_cells: list[Cell], copy: bool = True) -> list[Cell]:
     """page.h:1842-1858: merge factor 1.0, inject ' ' when gap > 0.33·avg."""
-    work = [_clone(c) for c in char_cells if c.active] if copy else [
-        c for c in char_cells if c.active
-    ]
+    work = [c.clone() for c in char_cells if c.active] if copy else char_cells
     merged = merge_cells(work, LINE_FACTOR, block_spaces=False, gap_space_factor=GAP_SPACE_FACTOR)
-    return [c for c in merged if c.text.strip() != ""]
+    return [c for c in merged if c.text.strip()]
 
 
 # ---------------------------------------------------------------- rotation

@@ -25,286 +25,257 @@ from __future__ import annotations
 
 import re
 
-_WHITESPACE = b"\x00\t\n\x0c\r "
-_DELIMS = b"()<>[]{}/%"
-# C-level scanners for the hottest per-byte loops (identical byte classes):
-# whitespace runs + %-comments-to-EOL, and bare tokens (non-ws, non-delim)
-_WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
-_HEX_DIGITS = frozenset(b"0123456789abcdefABCDEF")
-_BARE_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
-_NUM_RE = re.compile(rb"^[+-]?(\d+\.?\d*|\.\d+)$")
+# The stream is lexed as latin-1 text, one character per byte: operators
+# come out as ``str`` with no per-token decode, and byte strings are
+# encoded back with the same codec.
+_BARE = r"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"  # a byte of a bare token
+_NUMBER = r"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)"
+# Skipped before each token: whitespace, %-comments to end of line, and the
+# stray ')', '{', '}' and single '>' that nothing else consumes. The
+# comment's lookahead stops a failed match at end of input from giving
+# back the tail of a comment as a token.
+_SKIP = r"(?:[\x00\t\n\x0c\r ){}]|>(?!>)|%[^\r\n]*(?![^\r\n]))*"
+# One alternative per token kind, numbered by capture group (m.lastindex).
+# Every byte that is not skipped starts some alternative, so a match fails
+# only at end of input.
+_TOKEN_RE = re.compile(
+    _SKIP
+    + "(?:"
+    + "(" + _NUMBER + ")(?!" + _BARE + ")"  # 1 number
+    + "|(true|false|null)(?!" + _BARE + ")"  # 2 constant
+    + r"|([^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9]" + _BARE + "*)"  # 3 operator
+    + "|/(" + _BARE + "*)"  # 4 name
+    + r"|\(([^()\\]*)\)"  # 5 literal string without escapes or nesting
+    + r"|(\[)"  # 6 array open
+    + r"|(\])"  # 7 array close
+    + "|(" + _BARE + "+)"  # 8 other bare token (sign, dot or digit first)
+    + "|(<<)"  # 9 dict open
+    + "|(>>)"  # 10 dict close
+    + "|<([^>]*)>?"  # 11 hex string (to the first '>', or end of input)
+    + r"|(\()"  # 12 literal string with escapes or nesting
+    + ")"
+)
+_NON_HEX_RE = re.compile(r"[^0-9a-fA-F]+")
+_LITERAL_RUN_RE = re.compile(r"[^()\\]+")
+_LEADING_MINUS_RE = re.compile(r"-{2,}([0-9]+\.?[0-9]*|\.[0-9]+)")
 # a token that is number-shaped except for embedded '-' signs
-_MALFORMED_NUM_RE = re.compile(rb"^[+-]{0,2}(\d+\.?\d*|\.\d+)(-+(\d+\.?\d*|\.\d+))+$")
-_LEADING_MINUS_RE = re.compile(rb"^-{2,}((\d+\.?\d*|\.\d+))$")
+_MALFORMED_NUM_RE = re.compile(
+    r"[+-]{0,2}([0-9]+\.?[0-9]*|\.[0-9]+)(-+([0-9]+\.?[0-9]*|\.[0-9]+))+"
+)
+_EI_RE = re.compile(r"(?<=[\x00\t\n\x0c\r ])EI(?=[\x00\t\n\x0c\r ]|\Z)")
+_EI_FLUSH_RE = re.compile(r"EI(?=[\x00\t\n\x0c\r ]|\Z)")
+_HEX_DIGITS = frozenset(b"0123456789abcdefABCDEF")
+_DICT_MARK = ("__dict__",)
 
 _ESCAPES = {
-    ord("n"): b"\n",
-    ord("r"): b"\r",
-    ord("t"): b"\t",
-    ord("b"): b"\b",
-    ord("f"): b"\x0c",
-    ord("("): b"(",
-    ord(")"): b")",
-    ord("\\"): b"\\",
+    "n": "\n",
+    "r": "\r",
+    "t": "\t",
+    "b": "\b",
+    "f": "\x0c",
+    "(": "(",
+    ")": ")",
+    "\\": "\\",
 }
-
-
-class Lexer:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.n = len(data)
-
-    def _skip_ws(self) -> None:
-        m = _WS_RE.match(self.data, self.pos)
-        if m:
-            self.pos = m.end()
-
-    def next_token(self):
-        """Return (kind, value) or None at EOF.
-
-        kinds: num (float), str (bytes), name (str), kw (bytes),
-               arr_open/arr_close/dict_open/dict_close (None).
-        Malformed run-together numbers are returned as kind 'nums' with a
-        list of floats (the repair path). Iterative (never recursive): the
-        loop re-enters after skipping noise bytes. Single-method dispatch
-        (the old next_token/_next_token_once split cost one extra call +
-        a skip-tuple compare per token on the hottest decode loop)."""
-        d = self.data
-        n = self.n
-        pos = self.pos
-        while True:
-            m = _WS_RE.match(d, pos)
-            if m:
-                pos = m.end()
-            if pos >= n:
-                self.pos = pos
-                return None
-            c = d[pos]
-            if c == 40:  # (
-                self.pos = pos
-                return ("str", self._literal_string())
-            if c == 60:  # <
-                if pos + 1 < n and d[pos + 1] == 60:
-                    self.pos = pos + 2
-                    return ("dict_open", None)
-                self.pos = pos
-                return ("str", self._hex_string())
-            if c == 62:  # >
-                if pos + 1 < n and d[pos + 1] == 62:
-                    self.pos = pos + 2
-                    return ("dict_close", None)
-                pos += 1  # stray '>' — drop
-                continue
-            if c == 91:  # [
-                self.pos = pos + 1
-                return ("arr_open", None)
-            if c == 93:  # ]
-                self.pos = pos + 1
-                return ("arr_close", None)
-            if c == 47:  # /
-                self.pos = pos
-                return ("name", self._name())
-            if c == 123 or c == 125 or c == 41:  # braces / stray ')' — skip
-                pos += 1
-                continue
-            # bare token: number, keyword, or operator
-            m = _BARE_RE.match(d, pos)
-            if m is None:  # lone delimiter byte that no branch consumed
-                pos += 1
-                continue
-            tok = m.group()
-            self.pos = m.end()
-            if _NUM_RE.match(tok):
-                return ("num", float(tok))
-            m = _LEADING_MINUS_RE.match(tok)
-            if m:  # '--12.3' -> -12.3
-                return ("num", -float(m.group(1)))
-            if _MALFORMED_NUM_RE.match(tok):  # '1.23-45' -> [1.23, -45.0]
-                return ("nums", _split_run_together(tok))
-            return ("kw", tok)
-
-    def _literal_string(self) -> bytes:
-        # '(' already at pos; balanced parens, backslash escapes (PDF §7.3.4.2)
-        d, n = self.data, self.n
-        self.pos += 1
-        depth = 1
-        out = bytearray()
-        while self.pos < n:
-            c = d[self.pos]
-            if c == 92:  # backslash
-                self.pos += 1
-                if self.pos >= n:
-                    break
-                e = d[self.pos]
-                if e in _ESCAPES:
-                    out += _ESCAPES[e]
-                    self.pos += 1
-                elif 0x30 <= e <= 0x37:  # octal, up to 3 digits
-                    oct_digits = bytearray()
-                    while self.pos < n and len(oct_digits) < 3 and 0x30 <= d[self.pos] <= 0x37:
-                        oct_digits.append(d[self.pos])
-                        self.pos += 1
-                    out.append(int(bytes(oct_digits), 8) & 0xFF)
-                elif e in (10, 13):  # line continuation
-                    self.pos += 1
-                    if e == 13 and self.pos < n and d[self.pos] == 10:
-                        self.pos += 1
-                else:  # unknown escape: keep the char
-                    out.append(e)
-                    self.pos += 1
-            elif c == 40:  # (
-                depth += 1
-                out.append(c)
-                self.pos += 1
-            elif c == 41:  # )
-                depth -= 1
-                self.pos += 1
-                if depth == 0:
-                    break
-                out.append(c)
-            else:
-                out.append(c)
-                self.pos += 1
-        return bytes(out)
-
-    def _hex_string(self) -> bytes:
-        d, n = self.data, self.n
-        self.pos += 1  # '<'
-        digits = bytearray()
-        while self.pos < n and d[self.pos] != 62:  # >
-            c = d[self.pos]
-            if c in b"0123456789abcdefABCDEF":
-                digits.append(c)
-            # non-hex bytes inside a hex string are dropped (malformed input)
-            self.pos += 1
-        self.pos += 1  # '>'
-        if len(digits) % 2:
-            digits.append(ord("0"))  # PDF: odd count padded with 0
-        return bytes.fromhex(digits.decode("ascii"))
-
-    def _name(self) -> str:
-        d = self.data
-        self.pos += 1  # '/'
-        m = _BARE_RE.match(d, self.pos)
-        raw = m.group() if m else b""
-        if m:
-            self.pos = m.end()
-        # #xx hex escapes in names (PDF §7.3.5)
-        if b"#" in raw:
-            out = bytearray()
-            i = 0
-            while i < len(raw):
-                # PDF 7.3.5: exactly two hex digits; a truncated escape at
-                # end-of-name stays literal
-                if (raw[i] == ord("#") and i + 2 < len(raw)
-                        and raw[i + 1] in _HEX_DIGITS and raw[i + 2] in _HEX_DIGITS):
-                    # strict two-hex-digit check: int(b'+4', 16) would
-                    # accept sign characters (r4 review)
-                    out.append(int(raw[i + 1 : i + 3], 16))
-                    i += 3
-                    continue
-                out.append(raw[i])
-                i += 1
-            raw = bytes(out)
-        return raw.decode("utf-8", "replace")
-
-
-def _split_run_together(tok: bytes) -> list[float]:
-    """'1.23-45-6' -> [1.23, -45.0, -6.0]; leading sign kept on the first."""
-    s = tok.decode("ascii")
-    # collapse any leading '-' run to one
-    sign = ""
-    i = 0
-    while i < len(s) and s[i] in "+-":
-        if s[i] == "-":
-            sign = "-"
-        i += 1
-    body = s[i:]
-    parts = body.split("-")
-    out = [float(sign + parts[0])]
-    out.extend(-float(p) for p in parts[1:] if p)
-    return out
 
 
 def tokenize(data: bytes) -> list[tuple[str, list]]:
     """Tokenize a content stream into [(operator, operands), ...].
 
+    One master regex matches a token and the noise before it; the capture
+    group that matched names the kind. Only a literal string with escapes
+    or nested parentheses and an inline image leave the regex scan: each
+    is consumed by hand, then the scan restarts after it.
+
     Inline-image payloads are skipped: ``BI``/``ID``/``EI`` are emitted as
     bare operators with no operands so the interpreter can no-op them exactly
     like the reference (stream.h:779-795).
     """
-    lex = Lexer(data)
-    next_token = lex.next_token
+    text = data.decode("latin-1")
     instructions: list[tuple[str, list]] = []
     operands: list = []
     stack: list[list] = []  # open arrays/dict-item lists
-    # hot path first (num/str/name operands, then operators); emit_value is
-    # inlined — the closure call per operand was measurable in the decode loop
+    top = operands  # where the next operand goes: the innermost open list
+    pos = 0
     while True:
-        tok = next_token()
-        if tok is None:
-            break
-        kind, val = tok
-        if kind == "num" or kind == "str" or kind == "name":
-            (stack[-1] if stack else operands).append(val)
-        elif kind == "kw":
-            if val == b"true":
-                (stack[-1] if stack else operands).append(True)
-            elif val == b"false":
-                (stack[-1] if stack else operands).append(False)
-            elif val == b"null":
-                # reference: null params -> [] (stream_decoder.h:120-124)
-                (stack[-1] if stack else operands).append([])
-            else:
-                op = val.decode("latin-1")
+        # scanner().match: each call matches at the end of the previous
+        # match, and returns None at end of input
+        for m in iter(_TOKEN_RE.scanner(text, pos).match, None):
+            g = m.lastindex
+            if g == 1:
+                top.append(float(m[1]))
+            elif g == 3:
+                op = m[3]
                 if op == "ID":
-                    # skip binary inline-image payload to the EI delimiter
+                    # skip the binary inline-image payload to its EI
                     instructions.append(("ID", []))
-                    _skip_inline_image(lex)
                     instructions.append(("EI", []))
+                    pos = _skip_inline_image(text, m.end())
                     operands = []
-                    continue
+                    top = stack[-1] if stack else operands
+                    break
                 instructions.append((op, operands))
                 operands = []
-        elif kind == "nums":
-            for v in val:
-                (stack[-1] if stack else operands).append(v)
-        elif kind == "arr_open" or kind == "dict_open":
-            stack.append([("__dict__",)] if kind == "dict_open" else [])
-        elif kind == "arr_close":
-            if stack:
-                v = stack.pop()
-                (stack[-1] if stack else operands).append(v)
-        elif kind == "dict_close":
-            if stack:
-                items = stack.pop()
-                items = [x for x in items if x != ("__dict__",)]
-                d = {}
-                for k, v in zip(items[0::2], items[1::2]):
-                    try:
-                        d[k] = v
-                    except TypeError:
-                        # malformed dict with a non-name (unhashable) key:
-                        # skip the pair, keep the page (r4 review — the
-                        # tokenizer repairs garbage everywhere else)
-                        continue
-                (stack[-1] if stack else operands).append(d)
-    return instructions
+                if not stack:
+                    top = operands
+            elif g == 4:
+                name = m[4]
+                top.append(name if name.isascii() and "#" not in name else _name(name))
+            elif g == 5:
+                top.append(m[5].encode("latin-1"))
+            elif g == 6:
+                top = []
+                stack.append(top)
+            elif g == 7:
+                if stack:
+                    v = stack.pop()
+                    top = stack[-1] if stack else operands
+                    top.append(v)
+            elif g == 2:
+                # reference: null params -> [] (stream_decoder.h:120-124)
+                v = m[2]
+                top.append(True if v == "true" else False if v == "false" else [])
+            elif g == 8:
+                tok = m[8]
+                mm = _LEADING_MINUS_RE.fullmatch(tok)
+                if mm:  # '--12.3' -> -12.3
+                    top.append(-float(mm[1]))
+                elif _MALFORMED_NUM_RE.fullmatch(tok):  # '1.23-45' -> 1.23, -45.0
+                    top.extend(_split_run_together(tok))
+                else:
+                    instructions.append((tok, operands))
+                    operands = []
+                    if not stack:
+                        top = operands
+            elif g == 9:
+                top = [_DICT_MARK]
+                stack.append(top)
+            elif g == 10:
+                if stack:
+                    items = [x for x in stack.pop() if x != _DICT_MARK]
+                    d = {}
+                    for k, v in zip(items[0::2], items[1::2]):
+                        try:
+                            d[k] = v
+                        except TypeError:
+                            # malformed dict with a non-name (unhashable)
+                            # key: skip the pair, keep the page
+                            continue
+                    top = stack[-1] if stack else operands
+                    top.append(d)
+            elif g == 11:
+                top.append(_hex_string(m[11]))
+            else:  # 12: literal string the regex does not take whole
+                v, pos = _literal_string(text, m.end())
+                top.append(v)
+                break
+        else:
+            return instructions
 
 
-def _skip_inline_image(lex: Lexer) -> None:
-    d, n = lex.data, lex.n
-    i = lex.pos + 1  # one whitespace byte follows ID
-    relaxed = None
-    while i + 1 < n:
-        if d[i] == ord("E") and d[i + 1] == ord("I"):
-            before_ok = i == 0 or d[i - 1] in _WHITESPACE
-            after_ok = i + 2 >= n or d[i + 2] in _WHITESPACE
-            if before_ok and after_ok:
-                lex.pos = i + 2
-                return
-            if after_ok and relaxed is None:
-                relaxed = i + 2  # binary ran flush into EI
+def _literal_string(text: str, pos: int) -> tuple[bytes, int]:
+    """The string after the '(' at ``pos - 1``: balanced parens, backslash
+    escapes (PDF §7.3.4.2). Returns (bytes, end); an unterminated string
+    runs to the end of input."""
+    n = len(text)
+    depth = 1
+    out: list[str] = []
+    run = _LITERAL_RUN_RE.match
+    while pos < n:
+        c = text[pos]
+        if c == "\\":
+            pos += 1
+            if pos >= n:
+                break
+            e = text[pos]
+            if e in _ESCAPES:
+                out.append(_ESCAPES[e])
+                pos += 1
+            elif "0" <= e <= "7":  # octal, up to 3 digits
+                end = pos + 1
+                while end < n and end - pos < 3 and "0" <= text[end] <= "7":
+                    end += 1
+                out.append(chr(int(text[pos:end], 8) & 0xFF))
+                pos = end
+            elif e == "\n" or e == "\r":  # line continuation
+                pos += 1
+                if e == "\r" and pos < n and text[pos] == "\n":
+                    pos += 1
+            else:  # unknown escape: keep the char
+                out.append(e)
+                pos += 1
+        elif c == "(":
+            depth += 1
+            out.append(c)
+            pos += 1
+        elif c == ")":
+            depth -= 1
+            pos += 1
+            if depth == 0:
+                break
+            out.append(c)
+        else:
+            m = run(text, pos)
+            out.append(m[0])
+            pos = m.end()
+    return "".join(out).encode("latin-1"), pos
+
+
+def _hex_string(body: str) -> bytes:
+    """Non-hex bytes inside a hex string are dropped (malformed input); an
+    odd digit count is padded with 0 (PDF §7.3.4.3)."""
+    try:
+        # takes the well-formed body whole (it skips whitespace between
+        # digit pairs only, which the filter below drops too)
+        return bytes.fromhex(body)
+    except ValueError:
+        digits = _NON_HEX_RE.sub("", body)
+        if len(digits) % 2:
+            digits += "0"
+        return bytes.fromhex(digits)
+
+
+def _name(raw_text: str) -> str:
+    """A name's bytes with #xx hex escapes (PDF §7.3.5), as UTF-8."""
+    raw = raw_text.encode("latin-1")
+    if b"#" in raw:
+        out = bytearray()
+        i = 0
+        while i < len(raw):
+            # PDF 7.3.5: exactly two hex digits; a truncated escape at
+            # end-of-name stays literal
+            if (raw[i] == ord("#") and i + 2 < len(raw)
+                    and raw[i + 1] in _HEX_DIGITS and raw[i + 2] in _HEX_DIGITS):
+                # strict two-hex-digit check: int(b'+4', 16) would
+                # accept sign characters
+                out.append(int(raw[i + 1 : i + 3], 16))
+                i += 3
+                continue
+            out.append(raw[i])
+            i += 1
+        raw = bytes(out)
+    return raw.decode("utf-8", "replace")
+
+
+def _split_run_together(tok: str) -> list[float]:
+    """'1.23-45-6' -> [1.23, -45.0, -6.0]; leading sign kept on the first."""
+    # collapse any leading '-' run to one
+    sign = ""
+    i = 0
+    while i < len(tok) and tok[i] in "+-":
+        if tok[i] == "-":
+            sign = "-"
         i += 1
-    lex.pos = relaxed if relaxed is not None else n
+    parts = tok[i:].split("-")
+    out = [float(sign + parts[0])]
+    out.extend(-float(p) for p in parts[1:] if p)
+    return out
+
+
+def _skip_inline_image(text: str, pos: int) -> int:
+    """End of the inline-image payload after the ``ID`` ending at ``pos``
+    (one whitespace byte follows ID): the first ``EI`` with whitespace on
+    both sides, else the first one with whitespace after it (binary ran
+    flush into EI), else the end of input."""
+    m = _EI_RE.search(text, pos + 1) or _EI_FLUSH_RE.search(text, pos + 1)
+    return m.end() if m else len(text)
