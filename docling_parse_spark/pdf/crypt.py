@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
+from contextlib import contextmanager
 
 # --------------------------------------------------------------------- RC4
 
@@ -242,6 +243,42 @@ def _evp_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes | None:
         return out.raw[: outl.value]
     finally:
         lib.EVP_CIPHER_CTX_free(ctx)
+
+
+@contextmanager
+def _aes128_cbc_encryptor(max_len: int):
+    """Yield ``encrypt(key, iv, data)`` (AES-128-CBC, no padding) that
+    re-keys one EVP context per call, for data up to ``max_len`` bytes.
+    Algorithm 2.B runs ~70 short encryptions per password check, and a
+    fresh context per call (with its cipher lookup) cost more than the
+    encryption itself. Without libcrypto it yields ``aes_cbc_encrypt``."""
+    evp = _load_evp()
+    ctx = None
+    if evp is not None:
+        ctypes, lib = evp
+        ctx = lib.EVP_CIPHER_CTX_new()
+    try:
+        if not ctx or lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None, None, None, 1) != 1:
+            yield aes_cbc_encrypt
+            return
+        lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
+        out = ctypes.create_string_buffer(max_len + 16)
+        outl = ctypes.c_int(0)
+        outl_p = ctypes.byref(outl)
+        init, update = lib.EVP_CipherInit_ex, lib.EVP_CipherUpdate
+
+        def encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+            n = len(data)
+            if (n <= max_len and len(key) == 16 and len(iv) == 16
+                    and init(ctx, None, None, key, iv, 1) == 1
+                    and update(ctx, out, outl_p, data, n) == 1 and outl.value == n):
+                return out[:n]
+            return aes_cbc_encrypt(key, iv, data)
+
+        yield encrypt
+    finally:
+        if ctx:
+            lib.EVP_CIPHER_CTX_free(ctx)
 
 
 # Fused forward T-tables (FIPS-197 §5.1 as 32-bit words): Te0[x] is the
@@ -471,29 +508,8 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     """Algorithm 2.B (ISO 32000-2 §7.6.4.3.4): iterated SHA-256/384/512
     with an AES-128-CBC feedback — used by the /R 6 revision."""
     k = hashlib.sha256(password + salt + udata).digest()
-    encrypt = aes_cbc_encrypt
-    evp = _load_evp()
-    ctx = None
-    if evp is not None:
-        # one EVP context for all ~70 rounds, re-keyed per round: building
-        # a context (and looking up its cipher) per call cost more than
-        # the encryption itself
-        ctypes, lib = evp
-        ctx = lib.EVP_CIPHER_CTX_new()
-        if ctx and lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None, None, None, 1) == 1:
-            lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
-            out = ctypes.create_string_buffer(64 * (len(password) + 64 + len(udata)) + 16)
-            outl = ctypes.c_int(0)
-            outl_p = ctypes.byref(outl)
-            init, update = lib.EVP_CipherInit_ex, lib.EVP_CipherUpdate
-
-            def encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-                n = len(data)
-                if (init(ctx, None, None, key, iv, 1) == 1
-                        and update(ctx, out, outl_p, data, n) == 1 and outl.value == n):
-                    return out[:n]
-                return aes_cbc_encrypt(key, iv, data)
-    try:
+    # k is 32, 48 or 64 bytes, so the longest block is 64·(|pw| + 64 + |u|)
+    with _aes128_cbc_encryptor(64 * (len(password) + 64 + len(udata))) as encrypt:
         i = 0
         while True:
             k1 = (password + k + udata) * 64
@@ -503,9 +519,6 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
             i += 1
             if i >= 64 and e[-1] <= i - 32:
                 return k[:32]
-    finally:
-        if ctx:
-            lib.EVP_CIPHER_CTX_free(ctx)
 
 
 def _prep_password(password) -> bytes:

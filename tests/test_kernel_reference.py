@@ -75,10 +75,12 @@ def _digits(code: int, radices) -> list[int]:
 # just over eps from its base, so pairs land on both sides of every test;
 # now and then one coordinate is non-finite, huge or a signed zero.
 _JITTER = (0.0, 0.25, -0.25, 0.5, -0.5, 0.4999999, -0.5000001, 0.5000001, 1.0, -0.0)
+_COPY_JITTER = (0.0, 0.0, 0.0, 0.0) + _JITTER
 _SPECIAL = (math.nan, math.inf, -math.inf, -0.0, 0.0, 1e308, -1e308)
 _XS = (10.0, 10.5, 11.0, 20.0, 0.0, -0.5, 30.25)
 _YS = (100.0, 100.25, 100.5, 101.0, 112.0, 99.5, 100.0000001)
-_DEDUP_RADICES = (len(_XS), 4, *[len(_JITTER)] * 8, 8 * len(_SPECIAL) * 4, 5, 3, 10)
+_NO_SPECIAL = 8 * len(_SPECIAL) * 9  # one cell in 10 gets a special coordinate
+_DEDUP_RADICES = (len(_XS), 4, *[len(_JITTER)] * 8, _NO_SPECIAL + 8 * len(_SPECIAL), 5, 3, 10)
 
 
 @st.composite
@@ -93,19 +95,26 @@ def overprint_cells(draw):
         w = 5.0 if x < 20 else 6.0
         base = [x, y, x + w, y, x + w, y + 8.0, x, y + 8.0]
         quad = [v + _JITTER[k] for v, k in zip(base, jit)]
-        if special < 8 * len(_SPECIAL):
+        special -= _NO_SPECIAL  # the top digits only, so 0 means none
+        if special >= 0:
             quad[special % 8] = _SPECIAL[special // 8]
         cells.append(make_cell(("a", "e", "a", "ab", "")[text], quad, font=("F1", "F2", "F1")[font],
                                active=active != 1))
     if cells and draw(st.booleans()):
-        # an exact overprint of a stretch of the page (fake bold), drawn
-        # later in the stream
+        # an overprint of a stretch of the page (fake bold): the stretch
+        # drawn again right after itself, or each glyph twice in a row;
+        # each copy's corners moved by one of the offsets above (most often
+        # by none), now and then in the other font
         a = draw(st.integers(0, len(cells) - 1))
         b = draw(st.integers(a, len(cells)))
-        for c in cells[a:b]:
-            d = c.clone()
-            d.active = True
-            cells.append(d)
+        in_place = draw(st.booleans())
+        radices = [len(_COPY_JITTER)] * 8 + [4]
+        for k in range(b - 1, a - 1, -1):
+            c = cells[k]
+            *jit, font = _digits(draw(st.integers(0, math.prod(radices) - 1)), radices)
+            d = make_cell(c.text, [getattr(c, f) + _COPY_JITTER[j] for f, j in zip(_FIELDS, jit)],
+                          font=c.font_key if font else ("F1" if c.font_key == "F2" else "F2"))
+            cells.insert(k + 1 if in_place else b, d)
     return cells
 
 
@@ -147,7 +156,9 @@ def test_dedup_nonfinite_x_raises_like_reference():
 _GLYPHS = ("f", "i", "f", "l", "a", "ﬁ", "ﬃ", " ", "", "ab")
 _GAPS = (0.0, 0.1, 0.0, 0.5, 0.6, 0.9, 1.2, 2.0, 4.0, -1.0)
 _DYS = (0.0, 0.3, 0.0, -0.3, 0.0, 2.0, -12.0)
-_WORD_RADICES = (3, len(_DYS), len(_GLYPHS), 4, 5, 6, 13, len(_GAPS), 8 * len(_SPECIAL) * 5)
+_HEIGHTS = (10.0, 12.0, 10.0, 8.0)  # unequal heights part the top gap from the bottom one
+_WORD_RADICES = (3, len(_DYS), len(_GLYPHS), 4, 5, 6, 13, len(_GAPS), _NO_SPECIAL + 8 * len(_SPECIAL),
+                 len(_HEIGHTS))
 
 
 @st.composite
@@ -155,10 +166,12 @@ def word_cells(draw):
     x, y = draw(st.sampled_from([0.0, 72.0, -3.5])), 700.0
     cells = []
     for code in draw(st.lists(st.integers(0, math.prod(_WORD_RADICES) - 1), max_size=20)):
-        wi, dyi, glyph, font, ltr, instr, active, gap, special = _digits(code, _WORD_RADICES)
+        wi, dyi, glyph, font, ltr, instr, active, gap, special, hi = _digits(code, _WORD_RADICES)
+        h = _HEIGHTS[hi]
         w, dy = (5.0, 6.0, 2.5)[wi], _DYS[dyi]
-        quad = [x, y + dy, x + w, y + dy, x + w, y + dy + 10.0, x, y + dy + 10.0]
-        if special < 8 * len(_SPECIAL):
+        quad = [x, y + dy, x + w, y + dy, x + w, y + dy + h, x, y + dy + h]
+        special -= _NO_SPECIAL  # the top digits only, so 0 means none
+        if special >= 0:
             quad[special % 8] = _SPECIAL[special // 8]
         cells.append(make_cell(_GLYPHS[glyph], quad, font=("F1", "F1", "F2", "F1")[font],
                                ltr=ltr != 1, instr=instr, active=active != 1))
