@@ -109,8 +109,9 @@ def remove_duplicate_cells(cells: list[Cell], eps: float = EPS_DEDUP) -> list[Ce
             return act
         order = sorted(range(m), key=enc.__getitem__)
         lim = eps + slack
-    else:  # a non-finite or huge r_x0: the exact order, checked everywhere
-        codes = _key_ids(act)
+    else:  # a non-finite or huge r_x0: exact key ids and order, checked everywhere
+        ids: dict = {}
+        codes = list(map(ids.setdefault, map(_TEXT_FONT, act), count()))
         order = sorted(_finite_x_positions(codes, xs, inv), key=lambda k: (codes[k], xs[k]))
         cand = range(1, len(order))
         lim = eps
@@ -144,12 +145,6 @@ def remove_duplicate_cells(cells: list[Cell], eps: float = EPS_DEDUP) -> list[Ce
         return act
     _deactivate_within_window(cells, act, pairs, eps)
     return [c for c in act if c.active]
-
-
-def _key_ids(act: list[Cell]) -> list[int]:
-    """(text, font_key) interned to small ints, equal keys equal ids."""
-    ids: dict = {}
-    return list(map(ids.setdefault, map(_TEXT_FONT, act), count()))
 
 
 def _finite_x_positions(key_ids: list[int], xs: list[float], inv: float) -> list[int]:
