@@ -604,7 +604,7 @@ def generate_pdf_file_docs(encrypted: bool = True) -> list[dict]:
     docs.append(("file-doc-3", pdf3))
 
     # --- file-doc-4: AES-256/R6-encrypted (empty user pw) or its twin
-    # puts Algorithm 2.B + the vectorized AES-CBC decrypt under the
+    # puts Algorithm 2.B + the AES-CBC decrypt under the
     # driver oracle the same plain-twin way as the RC4 doc (r6)
     from docling_parse_spark.pdf.build import encrypt_classic_aes256
 

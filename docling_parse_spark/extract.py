@@ -10,7 +10,8 @@ decode → groupBy → stamp → sink). Every Python step is a ``mapInArrow``:
    6400-page doc becomes 6400 independent units instead of one straggler
    task (reference analog: the page-level task queue,
    src/pybind/docling_threaded_base.h:104-105). Threshold 0 splits every
-   non-empty doc; ``page_numbers`` and ``extract_cells`` route that way.
+   non-empty doc; ``page_numbers`` and ``extract_cells`` route that way,
+   and ``page_numbers`` keeps only the listed unit numbers per doc.
 2. ``repartition(n, doc_id, page)``: hash shuffle spreads the routed rows
    across executors regardless of document skew, and widens the small scans
    that would otherwise serialize the compute-heavy decode.
@@ -84,13 +85,23 @@ def _columns(rows: list[tuple], schema) -> list:
     return [pa.array(c, f.type) for c, f in zip(cols, schema)]
 
 
-def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
+def route_units(docs_df: DataFrame, heavy_span_threshold: int,
+                page_numbers: list[int] | None = None) -> DataFrame:
     """Single-scan skew routing (cheap, no decode): light docs pass through
     whole (one ``'__doc__'`` row, spans attached, page 0) so their decode
     stays fused; docs over ``heavy_span_threshold`` input spans are split to
     page units so one mega-doc never serializes a task (SURVEY.md §7.4 #4).
-    A NULL spans array routes as an empty doc, not a crash (round-4 review)."""
+    A NULL spans array routes as an empty doc, not a crash (round-4 review).
+
+    ``page_numbers`` splits every non-empty doc (the threshold is ignored)
+    and keeps a doc's ``i``-th unit, in page order, when ``i`` is in the
+    set; an empty or NULL doc's ``'__doc__'`` row is unit 0. A doc that
+    keeps no unit routes no row."""
     schema = _arrow_schema(ROUTED_DDL)
+    keep = None
+    if page_numbers is not None:
+        heavy_span_threshold = 0
+        keep = frozenset(int(p) for p in page_numbers)
 
     def route(batches):
         import pyarrow as pa
@@ -103,7 +114,7 @@ def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
                                heavy_span_threshold)
             light = batch.filter(pc.invert(heavy))
             n = light.num_rows
-            if n:
+            if n and (keep is None or 0 in keep):
                 yield pa.RecordBatch.from_arrays(
                     [light.column("doc_id").cast(pa.string()),
                      pa.repeat(pa.scalar(0, pa.int32()), n), pa.repeat(pa.scalar("__doc__"), n),
@@ -117,7 +128,8 @@ def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
                     (u["doc_id"], u["page"], u["unit_kind"], u["payload"], u["resources"], None)
                     for doc_id, doc_spans in zip(split.column("doc_id").to_pylist(),
                                                  split.column("spans").to_pylist())
-                    for u in doc_to_units(doc_id, doc_spans)
+                    for i, u in enumerate(doc_to_units(doc_id, doc_spans))
+                    if keep is None or i in keep
                 ]
                 yield pa.RecordBatch.from_arrays(_columns(units, schema), schema=schema)
 
@@ -375,7 +387,7 @@ def extract_spans(
 
     ``page_numbers`` restricts decoding to a unit subset per doc (the
     reference's page-range scheduling, document.h:372-384) — every doc is
-    split to units and the filter on the unit number runs before the decode,
+    split to units and ``route_units`` keeps only the listed unit numbers,
     so skipped pages are never decoded.
 
     Two-path skew handling in ONE scan: ``route_units`` keeps docs with
@@ -389,20 +401,7 @@ def extract_spans(
     ``spark.sql.shuffle.partitions``)."""
     spark = docs_df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if page_numbers is None:
-        routed = route_units(docs_df, heavy_span_threshold)
-    else:
-        from pyspark.sql import Window
-
-        # unit subset: the nth decodable units per doc (the pdf page number
-        # for pdf docs)
-        w = Window.partitionBy("doc_id").orderBy("page")
-        routed = (
-            route_units(docs_df, 0)
-            .withColumn("unit_no", F.row_number().over(w) - 1)
-            .filter(F.col("unit_no").isin([int(p) for p in page_numbers]))
-            .drop("unit_no")
-        )
+    routed = route_units(docs_df, heavy_span_threshold, page_numbers)
     decoded = _decode(routed.repartition(n, "doc_id", "page"), config, with_metrics)
     if not with_metrics:
         return reassemble(decoded)

@@ -241,7 +241,7 @@ def encrypt_classic_aes256(objects: dict[int, bytes], root: int,
     (ISO 32000-2): /AESV3 crypt filter, Algorithm 2.B password hashes,
     per-stream 16-byte IV + CBC + RFC 2898 padding. Same calling contract
     as :func:`encrypt_classic_rc4`. Used by the ingest throughput bench to
-    exercise the vectorized AES decrypt path at corpus scale."""
+    exercise AES-256 decryption at corpus scale."""
     from docling_parse_spark.pdf.crypt import aes_cbc_encrypt
 
     filekey, u, ue, o, oe = _aes256_auth(user_password, owner_password)

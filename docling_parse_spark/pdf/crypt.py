@@ -13,9 +13,11 @@ implemented here from the spec:
 * AES-256 (/V 5, /R 5 revision and the ISO 32000-2 /R 6 revision with
   the Algorithm-2.B iterated SHA-256/384/512 hash), file key unwrapped
   from /UE via AES-CBC.
-* AES itself is a from-spec (FIPS-197) table implementation — encrypt is
-  needed too, because Algorithm 2.B's hash loop runs AES-128-CBC in the
-  forward direction.
+* AES-CBC has one path per host: the system libcrypto's EVP cipher
+  (loaded through ctypes) where it loads, otherwise the from-spec FIPS-197
+  byte-wise blocks in a plain CBC loop. The byte-wise blocks are also the
+  reference the tests hold EVP to. Encrypt is needed too, because
+  Algorithm 2.B's hash loop runs AES-128-CBC in the forward direction.
 
 Files that need a NON-empty password, use a non-/Standard handler, or an
 unsupported /V raise ValueError with a clear message and surface through
@@ -26,7 +28,6 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from contextlib import contextmanager
 
 # --------------------------------------------------------------------- RC4
 
@@ -153,26 +154,39 @@ def _decrypt_block(rk: list[list[int]], block: bytes) -> bytes:
     return bytes(_INV_SBOX[s[_INV_SHIFT[i]]] ^ k for i, k in zip(range(16), rk[0]))
 
 
-# ------------------------------------------------- platform AES (OpenSSL)
-# CPython's ssl module links the system libcrypto, so the EVP AES-CBC
-# primitives are ALREADY on this machine — use them when loadable (native
-# speed: ~1 GB/s vs ~1-20 MB/s for the pure-Python paths below) and fall
-# back to the from-spec FIPS-197 implementation otherwise. The pure path
-# stays the tested REFERENCE: tests/test_pdf_crypt.py pins both paths
-# bit-identical, and SPARK_GRAFT_PURE_AES=1 forces the fallback.
+def _pure_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes:
+    """AES-CBC over the byte-wise blocks above, no padding: the path where
+    libcrypto does not load, and the reference the EVP path is tested
+    against."""
+    rk = _expand_key(key)
+    out = bytearray()
+    prev = iv
+    for i in range(0, len(data), 16):
+        blk = data[i : i + 16]
+        if encrypt:
+            prev = _encrypt_block(rk, bytes(a ^ b for a, b in zip(blk, prev)))
+            out += prev
+        else:
+            out += bytes(a ^ b for a, b in zip(_decrypt_block(rk, blk), prev))
+            prev = blk
+    return bytes(out)
 
-_EVP = None  # (lib, cipher_by_keylen) or False once probing failed
+
+# ----------------------------------------------------- libcrypto AES (EVP)
+# CPython's ssl module links the system libcrypto, so its EVP AES-CBC is on
+# every host that has ssl. Where it loads, every AES call goes through it;
+# where it does not, ``_pure_cbc`` runs instead. On one Xeon core with
+# OpenSSL 3.0, EVP takes about 1.6 µs a block and the byte-wise blocks
+# about 56 µs: a faster pure path would still be far behind EVP, so the
+# fallback only has to be correct.
+
+_EVP = None  # (ctypes, lib, cipher by key length) once loaded, False once loading failed
 
 
 def _load_evp():
     global _EVP
     if _EVP is not None:
         return _EVP or None
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PURE_AES"):
-        _EVP = False
-        return None
     try:
         import ctypes
         import ctypes.util
@@ -187,6 +201,7 @@ def _load_evp():
                 cand = ctypes.CDLL(name)
                 cand.EVP_CIPHER_CTX_new  # symbol probe
                 cand.EVP_aes_128_cbc
+                cand.EVP_Cipher
                 lib = cand
                 break
             except (OSError, AttributeError):
@@ -195,298 +210,107 @@ def _load_evp():
             _EVP = False
             return None
         c_void_p, c_int, c_char_p = ctypes.c_void_p, ctypes.c_int, ctypes.c_char_p
+        lib.EVP_CIPHER_CTX_new.argtypes = []
         lib.EVP_CIPHER_CTX_new.restype = c_void_p
         lib.EVP_CIPHER_CTX_free.argtypes = [c_void_p]
-        for f in ("EVP_aes_128_cbc", "EVP_aes_192_cbc", "EVP_aes_256_cbc"):
-            getattr(lib, f).restype = c_void_p
+        lib.EVP_CIPHER_CTX_free.restype = None
+        ciphers = {}
+        for n in (16, 24, 32):
+            f = getattr(lib, f"EVP_aes_{8 * n}_cbc")
+            f.argtypes = []
+            f.restype = c_void_p
+            ciphers[n] = f()
         lib.EVP_CipherInit_ex.restype = c_int
         lib.EVP_CipherInit_ex.argtypes = [c_void_p, c_void_p, c_void_p,
                                           c_char_p, c_char_p, c_int]
-        lib.EVP_CIPHER_CTX_set_padding.argtypes = [c_void_p, c_int]
-        lib.EVP_CipherUpdate.restype = c_int
-        lib.EVP_CipherUpdate.argtypes = [c_void_p, c_char_p,
-                                         ctypes.POINTER(c_int), c_char_p, c_int]
-        _EVP = (ctypes, lib)
+        lib.EVP_Cipher.restype = c_int
+        lib.EVP_Cipher.argtypes = [c_void_p, c_char_p, c_char_p, ctypes.c_uint]
+        _EVP = (ctypes, lib, ciphers)
     except Exception:
         _EVP = False
         return None
     return _EVP
 
 
-def _evp_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes | None:
-    """AES-CBC via the system libcrypto; None = unavailable (caller falls
-    back to the pure path). No padding — callers align/unpad themselves."""
-    evp = _load_evp()
-    if evp is None:
-        return None
-    ctypes, lib = evp
-    fn = {16: lib.EVP_aes_128_cbc, 24: lib.EVP_aes_192_cbc,
-          32: lib.EVP_aes_256_cbc}.get(len(key))
-    if fn is None:
-        return None
-    cipher = fn()
-    ctx = lib.EVP_CIPHER_CTX_new()
-    if not ctx:
-        return None
-    try:
-        if lib.EVP_CipherInit_ex(ctx, cipher, None, key, iv,
-                                 1 if encrypt else 0) != 1:
-            return None
-        lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
-        out = ctypes.create_string_buffer(len(data) + 16)
-        outl = ctypes.c_int(0)
-        if lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl), data,
-                                len(data)) != 1:
-            return None
-        if outl.value != len(data):  # block-aligned, padding off -> exact
-            return None
-        return out.raw[: outl.value]
-    finally:
-        lib.EVP_CIPHER_CTX_free(ctx)
+class _EvpCbc:
+    """AES-CBC without padding over one EVP context, for ``key_len``-byte
+    keys and block-aligned data up to ``max_len`` bytes:
+    ``with _EvpCbc(16, True, n) as cbc: cbc(key, iv, data)``. The first call
+    sets the cipher and the key together and later calls only re-key, so a
+    one-shot call costs one init and Algorithm 2.B keeps one context over
+    its ~70 encryptions, where a fresh context per call cost more than the
+    encryption itself. Calls of another key length, longer data, or every
+    call when libcrypto does not load run ``_pure_cbc``."""
 
+    __slots__ = ("key_len", "encrypt", "max_len", "lib", "ctx")
 
-@contextmanager
-def _aes128_cbc_encryptor(max_len: int):
-    """Yield ``encrypt(key, iv, data)`` (AES-128-CBC, no padding) that
-    re-keys one EVP context per call, for data up to ``max_len`` bytes.
-    Algorithm 2.B runs ~70 short encryptions per password check, and a
-    fresh context per call (with its cipher lookup) cost more than the
-    encryption itself. Without libcrypto it yields ``aes_cbc_encrypt``."""
-    evp = _load_evp()
-    ctx = None
-    if evp is not None:
-        ctypes, lib = evp
-        ctx = lib.EVP_CIPHER_CTX_new()
-    try:
-        if not ctx or lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None, None, None, 1) != 1:
-            yield aes_cbc_encrypt
-            return
-        lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
-        out = ctypes.create_string_buffer(max_len + 16)
-        outl = ctypes.c_int(0)
-        outl_p = ctypes.byref(outl)
-        init, update = lib.EVP_CipherInit_ex, lib.EVP_CipherUpdate
+    def __init__(self, key_len: int, encrypt: bool, max_len: int):
+        self.key_len, self.encrypt, self.max_len = key_len, encrypt, max_len
+        self.ctx = None
 
-        def encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    def __enter__(self):
+        key_len, encrypt, max_len = self.key_len, self.encrypt, self.max_len
+        evp = _load_evp()
+        if evp is None or key_len not in evp[2]:
+            return lambda key, iv, data: _pure_cbc(key, iv, data, encrypt)
+        ctypes, lib, ciphers = evp
+        cipher = ciphers[key_len]
+        out = (ctypes.c_char * (max_len + 16))()
+        init, run = lib.EVP_CipherInit_ex, lib.EVP_Cipher
+        self.lib = lib
+        ctx = self.ctx = lib.EVP_CIPHER_CTX_new()
+
+        def cbc(key, iv, data):
+            nonlocal cipher
             n = len(data)
-            if (n <= max_len and len(key) == 16 and len(iv) == 16
-                    and init(ctx, None, None, key, iv, 1) == 1
-                    and update(ctx, out, outl_p, data, n) == 1 and outl.value == n):
-                return out[:n]
-            return aes_cbc_encrypt(key, iv, data)
+            if ctx and n <= max_len and len(key) == key_len and len(iv) == 16:
+                ok = init(ctx, cipher, None, key, iv, encrypt) == 1
+                cipher = None
+                # EVP_Cipher is the raw block-aligned cipher: no padding and
+                # no held-back block. It returns the byte count on OpenSSL 3
+                # and 1 on 1.1, so > 0 is success on both.
+                if ok and run(ctx, out, data, n) > 0:
+                    return out[:n]
+            return _pure_cbc(key, iv, data, encrypt)
 
-        yield encrypt
-    finally:
-        if ctx:
-            lib.EVP_CIPHER_CTX_free(ctx)
+        return cbc
 
-
-# Fused forward T-tables (FIPS-197 §5.1 as 32-bit words): Te0[x] is the
-# column word (2·S[x], S[x], S[x], 3·S[x]) big-endian; Te1-3 its byte
-# rotations. One AES round becomes 16 table lookups + xors instead of the
-# byte-wise SubBytes/ShiftRows/MixColumns above — ~4x on the Algorithm 2.B
-# hash loop, which runs AES-128-CBC forward over ~2 KB × ~70 rounds per
-# encrypted-file open (the dominant cost of opening AES-256 PDFs; CBC
-# ENCRYPTION is chain-serial, so the numpy block-parallel trick that
-# vectorizes decryption below cannot apply here).
-_TE0 = [0] * 256
-_TE1 = [0] * 256
-_TE2 = [0] * 256
-_TE3 = [0] * 256
-for _c in range(256):
-    _s = _SBOX[_c]
-    _t = (_MUL[2][_s] << 24) | (_s << 16) | (_s << 8) | _MUL[3][_s]
-    _TE0[_c] = _t
-    _TE1[_c] = ((_t >> 8) | (_t << 24)) & 0xFFFFFFFF
-    _TE2[_c] = ((_t >> 16) | (_t << 16)) & 0xFFFFFFFF
-    _TE3[_c] = ((_t >> 24) | (_t << 8)) & 0xFFFFFFFF
-del _c, _s, _t
+    def __exit__(self, *exc):
+        if self.ctx:
+            self.lib.EVP_CIPHER_CTX_free(self.ctx)
+            self.ctx = None
 
 
-def _expand_key_words(key: bytes) -> list[tuple[int, int, int, int]]:
-    return [
-        tuple((k[4 * i] << 24) | (k[4 * i + 1] << 16) | (k[4 * i + 2] << 8)
-              | k[4 * i + 3] for i in range(4))
-        for k in _expand_key(key)
-    ]
-
-
-def _encrypt_block_words(mid_rounds, k0, klast, s0, s1, s2, s3):
-    """One block as four 32-bit column words -> four words.
-    ``mid_rounds`` = round-key tuples 1..Nr-1, ``k0``/``klast`` the first/
-    last (hoisted by the CBC loop so per-block slicing isn't repaid)."""
-    s0 ^= k0[0]
-    s1 ^= k0[1]
-    s2 ^= k0[2]
-    s3 ^= k0[3]
-    e0, e1, e2, e3 = _TE0, _TE1, _TE2, _TE3
-    for k in mid_rounds:
-        t0 = e0[s0 >> 24] ^ e1[(s1 >> 16) & 255] ^ e2[(s2 >> 8) & 255] ^ e3[s3 & 255] ^ k[0]
-        t1 = e0[s1 >> 24] ^ e1[(s2 >> 16) & 255] ^ e2[(s3 >> 8) & 255] ^ e3[s0 & 255] ^ k[1]
-        t2 = e0[s2 >> 24] ^ e1[(s3 >> 16) & 255] ^ e2[(s0 >> 8) & 255] ^ e3[s1 & 255] ^ k[2]
-        t3 = e0[s3 >> 24] ^ e1[(s0 >> 16) & 255] ^ e2[(s1 >> 8) & 255] ^ e3[s2 & 255] ^ k[3]
-        s0, s1, s2, s3 = t0, t1, t2, t3
-    b = _SBOX
-    return (
-        ((b[s0 >> 24] << 24) | (b[(s1 >> 16) & 255] << 16)
-         | (b[(s2 >> 8) & 255] << 8) | b[s3 & 255]) ^ klast[0],
-        ((b[s1 >> 24] << 24) | (b[(s2 >> 16) & 255] << 16)
-         | (b[(s3 >> 8) & 255] << 8) | b[s0 & 255]) ^ klast[1],
-        ((b[s2 >> 24] << 24) | (b[(s3 >> 16) & 255] << 16)
-         | (b[(s0 >> 8) & 255] << 8) | b[s1 & 255]) ^ klast[2],
-        ((b[s3 >> 24] << 24) | (b[(s0 >> 16) & 255] << 16)
-         | (b[(s1 >> 8) & 255] << 8) | b[s2 & 255]) ^ klast[3],
-    )
+def _evp_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes | None:
+    """One AES-CBC call (no padding) through ``_EvpCbc``; None where
+    libcrypto does not load."""
+    if _load_evp() is None:
+        return None
+    with _EvpCbc(len(key), encrypt, len(data)) as cbc:
+        return cbc(key, iv, data)
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """AES-CBC, NO padding (caller aligns) — Algorithm 2.B runs this.
-    T-table word path (bit-identical to the byte-wise reference blocks
-    above, property-tested in tests/test_pdf_crypt.py)."""
+    """AES-CBC encrypt, NO padding (caller aligns)."""
     if len(data) % 16:
         raise ValueError("aes_cbc_encrypt: data not block-aligned")
-    if data:
-        evp = _evp_cbc(key, iv, data, encrypt=True)
-        if evp is not None:
-            return evp
-    rkw = _expand_key_words(key)
-    mid, k0, klast = rkw[1:-1], rkw[0], rkw[-1]
-    n = len(data) // 4
-    words = struct.unpack(f">{n}I", data)
-    out = []
-    p0, p1, p2, p3 = struct.unpack(">4I", iv)
-    enc = _encrypt_block_words
-    for i in range(0, n, 4):
-        p0, p1, p2, p3 = enc(
-            mid, k0, klast,
-            words[i] ^ p0, words[i + 1] ^ p1,
-            words[i + 2] ^ p2, words[i + 3] ^ p3,
-        )
-        out += (p0, p1, p2, p3)
-    return struct.pack(f">{n}I", *out)
+    with _EvpCbc(len(key), True, len(data)) as cbc:
+        return cbc(key, iv, data)
 
 
 def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes, unpad: bool = True) -> bytes:
     """AES-CBC decrypt; strips the RFC 2898 padding PDF uses unless the
-    caller (the /UE /OE key unwrap) asks for raw blocks.
-
-    CBC DECRYPTION is parallel across blocks (plain[i] = ECB_dec(c[i]) ^
-    c[i-1]), so payloads >= 1 KiB go through a numpy-vectorized ECB pass
-    with fused uint32 T-tables — measured ~19 MB/s/core vs ~0.44 for the
-    scalar path (~44x), which matters when ingesting encrypted corpora
-    at scale (a multi-MB stream per page otherwise costs seconds of
-    CPU). Small inputs (object keys, short strings) stay scalar. Both
-    paths are bit-identical (tested against each other and FIPS-197)."""
+    caller (the /UE /OE key unwrap) asks for raw blocks."""
     if len(data) % 16 or not data:
         raise ValueError("aes_cbc_decrypt: ciphertext not block-aligned")
-    evp = _evp_cbc(key, iv, data, encrypt=False)
-    if evp is not None:
-        out = bytearray(evp)
-        if unpad:
-            n = out[-1]
-            if not 1 <= n <= 16:
-                raise ValueError("aes_cbc_decrypt: invalid padding")
-            del out[-n:]
-        return bytes(out)
-    rk = _expand_key(key)
-    # the T-tables pack output bytes little-endian; big-endian hosts
-    # (none in practice) take the scalar path rather than a byteswap
-    # dance that would never be exercised
-    import sys
-
-    if len(data) >= 1024 and sys.byteorder == "little":
-        import numpy as np
-
-        # XOR the ECB output with the shifted ciphertext (iv + c[:-16]);
-        # one pass, no intermediate bytearray round trips (r5 review)
-        ecb = np.frombuffer(_ecb_decrypt_np(rk, data), dtype=np.uint8)
-        prev = np.frombuffer(iv + data[:-16], dtype=np.uint8)
-        out = bytearray((ecb ^ prev).tobytes())
-    else:
-        out = bytearray()
-        prev = iv
-        for i in range(0, len(data), 16):
-            blk = data[i : i + 16]
-            out += bytes(a ^ b for a, b in zip(_decrypt_block(rk, blk), prev))
-            prev = blk
+    with _EvpCbc(len(key), False, len(data)) as cbc:
+        out = cbc(key, iv, data)
     if unpad:
         n = out[-1]
         if not 1 <= n <= 16:
             raise ValueError("aes_cbc_decrypt: invalid padding")
-        del out[-n:]
-    return bytes(out)
-
-
-_NP_TABLES = None
-
-
-def _np_tables():
-    """Fused uint32 T-tables for the equivalent inverse cipher
-    (FIPS-197 §5.3.5): InvMixColumns is LINEAR, so
-    InvMix(InvSbox(shift(s)) ^ k) == Td-lookups ^ InvMix(k) — one uint32
-    gather per state byte per round instead of one sbox + four
-    mul-table byte gathers."""
-    global _NP_TABLES
-    if _NP_TABLES is None:
-        import numpy as np
-
-        m9, m11, m13, m14 = _MUL[9], _MUL[11], _MUL[13], _MUL[14]
-
-        def pack(b0, b1, b2, b3):
-            return np.array(
-                [b0[_INV_SBOX[x]] | (b1[_INV_SBOX[x]] << 8)
-                 | (b2[_INV_SBOX[x]] << 16) | (b3[_INV_SBOX[x]] << 24)
-                 for x in range(256)],
-                dtype=np.uint32,
-            )
-
-        _NP_TABLES = {
-            "inv_sbox": np.frombuffer(_INV_SBOX, dtype=np.uint8),
-            "inv_shift": np.array(_INV_SHIFT, dtype=np.intp),
-            "td": (pack(m14, m9, m13, m11), pack(m11, m14, m9, m13),
-                   pack(m13, m11, m14, m9), pack(m9, m13, m11, m14)),
-        }
-    return _NP_TABLES
-
-
-def _inv_mix_key(k: list[int]) -> list[int]:
-    m9, m11, m13, m14 = _MUL[9], _MUL[11], _MUL[13], _MUL[14]
-    out = [0] * 16
-    for c in range(0, 16, 4):
-        a0, a1, a2, a3 = k[c], k[c + 1], k[c + 2], k[c + 3]
-        out[c] = m14[a0] ^ m11[a1] ^ m13[a2] ^ m9[a3]
-        out[c + 1] = m9[a0] ^ m14[a1] ^ m11[a2] ^ m13[a3]
-        out[c + 2] = m13[a0] ^ m9[a1] ^ m14[a2] ^ m11[a3]
-        out[c + 3] = m11[a0] ^ m13[a1] ^ m9[a2] ^ m14[a3]
+        out = out[:-n]
     return out
-
-
-def _ecb_decrypt_np(rk: list[list[int]], data: bytes) -> bytes:
-    """Vectorized AES-ECB decrypt over all blocks at once (equivalent
-    inverse cipher with fused T-tables; bit-identical to _decrypt_block,
-    asserted by tests)."""
-    import numpy as np
-
-    t = _np_tables()
-    inv_sbox, inv_shift = t["inv_sbox"], t["inv_shift"]
-    td0, td1, td2, td3 = t["td"]
-    s = np.frombuffer(data, dtype=np.uint8).reshape(-1, 16).copy()
-    s ^= np.array(rk[-1], dtype=np.uint8)
-    dw = [np.array(_inv_mix_key(k), dtype=np.uint8).view(np.uint32)
-          for k in rk]
-    for rnd in range(len(rk) - 2, 0, -1):
-        u32 = np.empty((s.shape[0], 4), dtype=np.uint32)
-        for c in range(4):
-            u32[:, c] = (
-                td0[s[:, inv_shift[4 * c]]]
-                ^ td1[s[:, inv_shift[4 * c + 1]]]
-                ^ td2[s[:, inv_shift[4 * c + 2]]]
-                ^ td3[s[:, inv_shift[4 * c + 3]]]
-            )
-        u32 ^= dw[rnd]
-        s = u32.view(np.uint8).reshape(-1, 16)
-    out = inv_sbox[s[:, inv_shift]] ^ np.array(rk[0], dtype=np.uint8)
-    return out.tobytes()
 
 
 # ------------------------------------------------- standard security handler
@@ -509,7 +333,7 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     with an AES-128-CBC feedback — used by the /R 6 revision."""
     k = hashlib.sha256(password + salt + udata).digest()
     # k is 32, 48 or 64 bytes, so the longest block is 64·(|pw| + 64 + |u|)
-    with _aes128_cbc_encryptor(64 * (len(password) + 64 + len(udata))) as encrypt:
+    with _EvpCbc(16, True, 64 * (len(password) + 64 + len(udata))) as encrypt:
         i = 0
         while True:
             k1 = (password + k + udata) * 64

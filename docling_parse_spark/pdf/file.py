@@ -37,6 +37,7 @@ import zlib
 from dataclasses import dataclass
 
 from docling_parse_spark.pdf.filters import apply_filters
+from docling_parse_spark.pdf.tokenizer import decode_name
 
 _WS = b"\x00\t\n\x0c\r "
 _HEX_BODY_RE = re.compile(rb"[0-9A-Fa-f\x00\t\n\x0c\r ]*")  # a hex string's digits and whitespace
@@ -146,20 +147,7 @@ class _Lexer:
         start = self.pos
         while self.pos < len(d) and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
             self.pos += 1
-        raw = d[start : self.pos]
-        if b"#" in raw:
-            out = bytearray()
-            i = 0
-            hexd = b"0123456789abcdefABCDEF"
-            while i < len(raw):
-                if raw[i] == 0x23 and i + 2 < len(raw) and raw[i + 1] in hexd and raw[i + 2] in hexd:
-                    out.append(int(raw[i + 1 : i + 3], 16))
-                    i += 3
-                else:
-                    out.append(raw[i])
-                    i += 1
-            raw = bytes(out)
-        return raw.decode("utf-8", "replace")
+        return decode_name(d[start : self.pos])
 
     def _literal_string(self) -> bytes:
         d = self.data

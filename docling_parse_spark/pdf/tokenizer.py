@@ -120,7 +120,8 @@ def tokenize(data: bytes) -> list[tuple[str, list]]:
                     top = operands
             elif g == 4:
                 name = m[4]
-                top.append(name if name.isascii() and "#" not in name else _name(name))
+                top.append(name if name.isascii() and "#" not in name
+                           else decode_name(name.encode("latin-1")))
             elif g == 5:
                 top.append(m[5].encode("latin-1"))
             elif g == 6:
@@ -235,15 +236,15 @@ def _hex_string(body: str) -> bytes:
         return bytes.fromhex(digits)
 
 
-def _name(raw_text: str) -> str:
-    """A name's bytes with #xx hex escapes (PDF §7.3.5), as UTF-8."""
-    raw = raw_text.encode("latin-1")
+def decode_name(raw: bytes) -> str:
+    """A name's bytes (after the slash) with #xx hex escapes decoded, as
+    UTF-8 with bad bytes replaced. PDF §7.3.5: an escape is exactly two hex
+    digits; a truncated one stays literal. The content-stream tokenizer and
+    the file lexer both decode names here."""
     if b"#" in raw:
         out = bytearray()
         i = 0
         while i < len(raw):
-            # PDF 7.3.5: exactly two hex digits; a truncated escape at
-            # end-of-name stays literal
             if (raw[i] == ord("#") and i + 2 < len(raw)
                     and raw[i + 1] in _HEX_DIGITS and raw[i + 2] in _HEX_DIGITS):
                 # strict two-hex-digit check: int(b'+4', 16) would

@@ -290,7 +290,7 @@ def _final_exchanges(plan: str) -> int:
 
 
 @pytest.mark.parametrize("case,exchanges", [
-    ("spans", 2), ("spans_metrics", 2), ("page_numbers", 3), ("cells", 1), ("doc_meta", 0),
+    ("spans", 2), ("spans_metrics", 2), ("page_numbers", 2), ("cells", 1), ("doc_meta", 0),
 ])
 def test_extract_plans_are_arrow_only(spark, corpus, case, exchanges):
     """Every Python step of the extract paths is a mapInArrow, and each

@@ -364,20 +364,77 @@ def test_evp_cbc_matches_pure_paths():
 
 
 def test_pure_aes_env_forces_fallback(monkeypatch):
-    """SPARK_GRAFT_PURE_AES=1 disables the EVP probe (fresh memo), so the
-    public API runs — and stays correct on — the from-spec path."""
+    """With libcrypto unloaded (``_EVP`` False) every AES call runs the
+    byte-wise blocks and gives what EVP gives: a 4 KiB decrypt, an
+    Algorithm 2.B hash, and an AES-256 /R 6 file that opens to the spans of
+    its plain twin."""
     import docling_parse_spark.pdf.crypt as crypt
 
-    monkeypatch.setenv("SPARK_GRAFT_PURE_AES", "1")
-    monkeypatch.setattr(crypt, "_EVP", None)
-    try:
-        assert crypt._load_evp() is None
-        key, iv = bytes(range(32)), bytes(range(16, 32))
-        data = bytes(range(64)) * 4
-        ct = crypt.aes_cbc_encrypt(key, iv, data)
-        assert crypt.aes_cbc_decrypt(key, iv, ct, unpad=False) == data
-    finally:
-        monkeypatch.setattr(crypt, "_EVP", None)
+    rng = random.Random(12)
+    key = bytes(rng.randrange(256) for _ in range(32))
+    iv = bytes(rng.randrange(256) for _ in range(16))
+    ct = bytes(rng.randrange(256) for _ in range(4096))
+    want_pt = crypt.aes_cbc_decrypt(key, iv, ct, unpad=False)
+    want_hash = _hash_2b(b"pw", b"saltsalt", b"U" * 48)
+    enc = build_encrypted("aes256")
+    plain = build_classic_pdf(minimal_objects(CONTENT), root=1)
+
+    monkeypatch.setattr(crypt, "_EVP", False)
+    assert crypt._load_evp() is None
+    assert crypt.aes_cbc_decrypt(key, iv, ct, unpad=False) == want_pt
+    assert crypt.aes_cbc_encrypt(key, iv, want_pt) == ct
+    assert _hash_2b(b"pw", b"saltsalt", b"U" * 48) == want_hash
+    assert (_text_spans(parse_pdf_spans(enc, doc_id="t"))
+            == _text_spans(parse_pdf_spans(plain, doc_id="t")))
+
+
+def _bytewise_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes:
+    rk = _expand_key(key)
+    out = bytearray()
+    prev = iv
+    for i in range(0, len(data), 16):
+        blk = data[i : i + 16]
+        if encrypt:
+            prev = _encrypt_block(rk, bytes(a ^ b for a, b in zip(blk, prev)))
+            out += prev
+        else:
+            out += bytes(a ^ b for a, b in zip(_decrypt_block(rk, blk), prev))
+            prev = blk
+    return bytes(out)
+
+
+def test_evp_context_rekeys_and_falls_back(monkeypatch):
+    """One EVP context re-keyed call after call, as Algorithm 2.B uses it:
+    keys and IVs of its key length with data up to its buffer length run
+    on EVP; data over the buffer and a key of another length fall back to
+    the byte-wise path. Every result equals the byte-wise reference."""
+    import docling_parse_spark.pdf.crypt as crypt
+
+    if crypt._load_evp() is None:
+        pytest.skip("system libcrypto not loadable; pure path in use")
+    fallbacks = []
+
+    def pure_cbc(key, iv, data, encrypt):
+        fallbacks.append(len(data))
+        return _bytewise_cbc(key, iv, data, encrypt)
+
+    monkeypatch.setattr(crypt, "_pure_cbc", pure_cbc)
+    rng = random.Random(13)
+
+    def rand(n):
+        return bytes(rng.randrange(256) for _ in range(n))
+
+    # (key length, data length, falls back): the first call is over-length,
+    # so the cipher is bound by a later call
+    calls = [(16, 80, True), (16, 16, False), (16, 64, False), (32, 32, True),
+             (16, 48, False), (16, 96, True), (16, 64, False)]
+    for encrypt in (True, False):
+        fallbacks.clear()
+        with crypt._EvpCbc(16, encrypt, 64) as cbc:
+            for key_len, n, _ in calls:
+                key, iv, data = rand(key_len), rand(16), rand(n)
+                assert cbc(key, iv, data) == _bytewise_cbc(key, iv, data, encrypt)
+        assert fallbacks == [n for _, n, falls_back in calls if falls_back]
 
 
 def test_aes128_without_toplevel_length():
