@@ -1150,3 +1150,78 @@ def test_writer_parser_roundtrip_property(pages, layout, password):
     # page count survives the round trip (PDF page number = count of
     # pdf_ops spans, document.doc_to_units)
     assert sum(1 for s in spans if s["kind"] == "pdf_ops") == len(pages)
+
+
+def test_resource_scope_split_and_body_transport_pinned():
+    """The exact span list of a two-page file with one font key and one
+    form name shared by every page (doc-level spans, first-seen order,
+    deduplicated), one font key and one form name bound to different
+    objects per page (page-scoped descriptor entries), and non-UTF-8 page
+    content, form body and AP stream (declared ASCII85 transport)."""
+    import base64
+
+    def stream(body, extra=b""):
+        return (b"<< " + extra + f" /Length {len(body)} >>\nstream\n".encode()
+                + body + b"\nendstream")
+
+    def a85(b):
+        return (base64.a85encode(b) + b"~>").decode("ascii")
+
+    def blob(**d):
+        return json.dumps(d, sort_keys=True)
+
+    form = b"/Type /XObject /Subtype /Form"
+    c1 = b"BT /F1 9 Tf 10 700 Td (caf\xe9) Tj /F2 9 Tf (one) Tj ET /Fm1 Do /Fm2 Do"
+    c2 = b"BT /F3 9 Tf 10 700 Td (two) Tj /F2 9 Tf (two) Tj ET /Fm1 Do /Fm2 Do"
+    shared_form = b"BT /F1 9 Tf 0 0 Td (shared \xfe) Tj ET"
+    fm2_a = b"BT /F1 9 Tf 0 0 Td (first fm2) Tj ET"
+    fm2_b = b"BT /F1 9 Tf 0 0 Td (second fm2) Tj ET"
+    ap = b"BT /F1 9 Tf 2 3 Td (ap \xff) Tj ET"
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [3 0 R 20 0 R] /Count 2 /MediaBox [0 0 612 792] >>",
+        3: (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Annots [14 0 R] /Resources "
+            b"<< /Font << /F1 5 0 R /F2 6 0 R /F3 8 0 R >> "
+            b"/XObject << /Fm1 10 0 R /Fm2 11 0 R >> >> >>"),
+        4: stream(c1),
+        5: FONT_OBJ,
+        6: b"<< /Type /Font /Subtype /Type1 /BaseFont /Times-Roman >>",
+        7: b"<< /Type /Font /Subtype /Type1 /BaseFont /Courier >>",
+        8: b"<< /Type /Font /Subtype /Type1 /BaseFont /Symbol >>",
+        10: stream(shared_form, form),
+        11: stream(fm2_a, form),
+        14: (b"<< /Type /Annot /Subtype /Widget /Rect [0 0 10 10] /T (f1) "
+             b"/AP << /N 15 0 R >> >>"),
+        15: stream(ap, form + b" /Resources << /Font << /F1 5 0 R >> >>"),
+        20: (b"<< /Type /Page /Parent 2 0 R /Contents 21 0 R /Resources "
+             b"<< /Font << /F3 8 0 R /F1 5 0 R /F2 7 0 R >> "
+             b"/XObject << /Fm2 22 0 R /Fm1 10 0 R >> >> >>"),
+        21: stream(c2),
+        22: stream(fm2_b, form),
+    }
+    helv = blob(base_font="Helvetica", encoding="WinAnsiEncoding", font_key="F1",
+                subtype="Type1")
+    box = [0.0, 0.0, 612.0, 792.0]
+    want = [
+        ("pdf_font", helv),
+        ("pdf_font", blob(base_font="Symbol", font_key="F3", subtype="Type1")),
+        ("pdf_form", blob(filters=["ASCII85Decode"], name="Fm1", ops=a85(shared_form))),
+        ("pdf_page", blob(
+            content_filters=["ASCII85Decode"],
+            fonts=[blob(base_font="Times-Roman", font_key="F2", subtype="Type1")],
+            forms=[blob(name="Fm2", ops=fm2_a.decode())],
+            media_box=box, page=0, rotate=0)),
+        ("pdf_page", blob(
+            fonts=[blob(base_font="Courier", font_key="F2", subtype="Type1")],
+            forms=[blob(name="Fm2", ops=fm2_b.decode())],
+            media_box=box, page=1, rotate=0)),
+        ("pdf_ops", a85(c1)),
+        ("pdf_ops", c2.decode()),
+        ("pdf_annot", blob(ap_filters=["ASCII85Decode"], ap_fonts=[helv], ap_ops=a85(ap),
+                           field="f1", page=0, rect=[0.0, 0.0, 10.0, 10.0],
+                           subtype="widget")),
+    ]
+    spans = parse_pdf_spans(build_classic_pdf(objs, root=1), doc_id="d")
+    assert [(s["kind"], s["text"]) for s in spans] == want
+    assert [s["offset"] for s in spans] == list(range(len(want)))
+    assert all(s["media_ref"] is None for s in spans)
