@@ -6,7 +6,12 @@ One document's input spans (north-rule shape, FIXTURES.md §1) are routed by
 * ``pdf_ops``  — one raw page content stream per span; ``offset`` = page no.
 * ``pdf_font`` — JSON font descriptor (doc-level resource, like the
   reference's parent-chained resource maps, page_fonts.h:14-43).
-* ``pdf_page`` — optional JSON page descriptor ``{page, media_box, rotate}``.
+* ``pdf_page`` — optional JSON page descriptor ``{page, media_box,
+  crop_box?, rotate}`` plus the page-scoped resources and content transport
+  below.
+* ``pdf_form`` — JSON form XObject ``{name, ops, matrix?, filters?}``
+  (doc-level, like fonts; stream.h:374-503).
+* ``pdf_acroform_dr`` — JSON array of the AcroForm /DR font descriptors.
 * ``media``    — image placeholder; ``media_ref`` = ``{doc_id}/p{page}/{name}``
   so the interpreter can resolve ``/Name Do`` placements without payload
   bytes (mirrors BitmapResource placeholders, pdf_parser.py:577-594).
@@ -18,6 +23,23 @@ One document's input spans (north-rule shape, FIXTURES.md §1) are routed by
   ``hyperlink`` / ``widget`` spans; an AP stream is sub-decoded with the
   doc's fonts and its text appended to the widget span.
 * ``html``     — raw HTML document for the boilerplate-strip branch.
+
+Resource contract. ``pdf/file.py`` is the one writer of the resource spans
+(for raw-PDF ingest) and ``build_doc_resources`` their one reader: it
+JSON-decodes each ``pdf_page``, ``pdf_form``, ``pdf_annot`` and
+``pdf_acroform_dr`` span once, and the units carry the decoded values.
+
+* Page scope. ``pdf_font`` and ``pdf_form`` spans are doc-level and serve
+  every page. A key bound to different objects on different pages ships
+  instead in each page's ``pdf_page`` descriptor (``fonts``: font blobs,
+  ``forms``: form blobs); there it wins over a doc-level entry of the same
+  key for that page's unit only.
+* Body transport. A body that is not valid UTF-8 rides the text column as
+  ASCII85 with its filters declared: ``content_filters``/``content_parms``
+  on the ``pdf_page`` descriptor for the page's ``pdf_ops`` payload,
+  ``filters`` on a ``pdf_form`` (form ``parms`` are not read), and
+  ``ap_filters``/``ap_parms`` on a ``pdf_annot`` for its ``ap_ops``.
+  ``_body_bytes`` undoes it for all three.
 
 This module is deliberately Spark-free: ``decode_unit`` processes ONE work
 unit (one PDF page or one HTML payload) and is called from both the
@@ -35,12 +57,13 @@ from dataclasses import dataclass, field
 from time import perf_counter as _clock
 
 from docling_parse_spark.web.boilerplate import extract_html_spans
+from docling_parse_spark.pdf.filters import apply_filters
 from docling_parse_spark.pdf.fonts import Font
 from docling_parse_spark.pdf.page import (
     DecodeConfig,
     build_fonts,
     decode_page,
-    parse_page_descriptor,
+    page_geometry,
 )
 
 _MEDIA_REF_RE = re.compile(r"/p(\d+)/([^/]+)$")
@@ -68,65 +91,100 @@ def parse_media_ref(media_ref: str) -> tuple[int, str] | None:
 
 
 def build_doc_resources(spans: list[dict]) -> dict:
-    """Collect doc-level resources: fonts, form XObjects, page descriptors,
-    media maps. Forms are doc-level like fonts (the reference parent-chains
-    resource maps across nested forms, page_fonts.h:14-43, stream.h:403-406)."""
+    """Decode a doc's resource spans, each once: doc-level fonts and form
+    XObjects (the reference parent-chains resource maps across nested
+    forms, page_fonts.h:14-43, stream.h:403-406), AcroForm /DR fonts, the
+    per-page descriptor entries (``_page_resources``), media maps and the
+    parsed annotations by page. Malformed resource spans are skipped."""
     font_blobs = [s["text"] for s in spans if s["kind"] == "pdf_font" and s.get("text")]
-    page_descs: dict[int, str] = {}
+    pages: dict[int, dict] = {}
     media_by_page: dict[int, dict[str, str]] = {}
-    annots_by_page: dict[int, list[str]] = {}
+    annots_by_page: dict[int, list[dict]] = {}
     forms: dict[str, dict] = {}
     acroform_fonts: list[str] = []
     for s in spans:
-        if s["kind"] == "pdf_acroform_dr" and s.get("text"):
-            # AcroForm /DR font resources: JSON array of font descriptor blobs
-            try:
-                dr = json.loads(s["text"])
-                if isinstance(dr, list):
-                    acroform_fonts.extend(json.dumps(f) if isinstance(f, dict) else str(f) for f in dr)
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                pass
-        elif s["kind"] == "pdf_form" and s.get("text"):
-            # {"name", "ops" (raw content stream), "matrix" [6],
-            #  "filters"?: declared transport for binary streams (raw-PDF
-            #  ingest ships non-UTF8 form bodies as ASCII85 — same contract
-            #  as the pdf_page descriptor's content_filters)}
-            try:
-                f = json.loads(s["text"])
-                if isinstance(f, dict) and f.get("name"):
-                    forms[str(f["name"])] = {
-                        "ops": f.get("ops") or "",
-                        "matrix": f.get("matrix"),
-                        "filters": f.get("filters"),
-                    }
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                pass
-        elif s["kind"] == "pdf_page" and s.get("text"):
-            try:
-                desc = json.loads(s["text"])
-                if isinstance(desc, dict):
-                    page_descs[int(desc.get("page", s.get("offset", 0)))] = s["text"]
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                pass
-        elif s["kind"] == "media" and s.get("media_ref"):
-            parsed = parse_media_ref(s["media_ref"])
+        kind, text = s["kind"], s.get("text")
+        if kind == "media":
+            parsed = parse_media_ref(s.get("media_ref"))
             if parsed:
                 pg, name = parsed
                 media_by_page.setdefault(pg, {})[name] = s["media_ref"]
-        elif s["kind"] == "pdf_annot" and s.get("text"):
-            try:
-                pg = int(json.loads(s["text"]).get("page", 0))
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                continue
-            annots_by_page.setdefault(pg, []).append(s["text"])
+            continue
+        if not text:
+            continue
+        try:
+            if kind == "pdf_form":
+                _add_form(forms, text)
+            elif kind == "pdf_acroform_dr":
+                # AcroForm /DR font resources: JSON array of font descriptor blobs
+                d = json.loads(text)
+                if isinstance(d, list):
+                    acroform_fonts.extend(json.dumps(f) if isinstance(f, dict) else str(f) for f in d)
+            elif kind == "pdf_page":
+                d = json.loads(text)
+                if isinstance(d, dict):
+                    pages[int(d.get("page", s.get("offset", 0)))] = _page_resources(d)
+            elif kind == "pdf_annot":
+                d = json.loads(text)
+                annots_by_page.setdefault(int(d.get("page", 0)), []).append(d)
+        except Exception:  # incl. RecursionError from hostile nesting (r4 review)
+            pass
     return {
         "fonts": font_blobs,
         "forms": forms,
         "acroform_fonts": acroform_fonts,
-        "page_descs": page_descs,
+        "pages": pages,
         "media_by_page": media_by_page,
         "annots_by_page": annots_by_page,
     }
+
+
+def _add_form(forms: dict, f) -> None:
+    """Normalize one form entry (a decoded ``pdf_form`` span or a
+    descriptor's form blob) into ``forms``: ``{name: {ops, matrix, filters}}``."""
+    if isinstance(f, str):
+        try:
+            f = json.loads(f)
+        except Exception:  # incl. RecursionError from hostile nesting (r4 review)
+            return
+    if isinstance(f, dict) and f.get("name"):
+        forms[str(f["name"])] = {
+            "ops": f.get("ops") or "",
+            "matrix": f.get("matrix"),
+            "filters": f.get("filters"),
+        }
+
+
+def _page_resources(desc: dict) -> dict:
+    """One decoded ``pdf_page`` descriptor -> its unit resource entries: the
+    descriptor itself (``page_desc``), the content transport and ColorSpace map
+    (name -> component count, /ICCBased /N pre-resolved, reference
+    page_colorspace.h), and the page-scoped fonts and forms. A malformed
+    descriptor keeps the entries read before the fault."""
+    out = {"page_desc": desc}
+    try:
+        for k in ("content_filters", "content_parms", "colorspaces"):
+            if desc.get(k) is not None:
+                out[k] = desc[k]
+        if desc.get("fonts"):
+            out["fonts"] = [f if isinstance(f, str) else json.dumps(f) for f in desc["fonts"]]
+        if desc.get("forms"):
+            local: dict[str, dict] = {}
+            for f in desc["forms"]:
+                _add_form(local, f)
+            out["forms"] = local
+    except Exception:  # e.g. a non-iterable fonts/forms value
+        pass
+    return out
+
+
+def _body_bytes(text: str | None, filters, parms) -> bytes:
+    """Undo a body's declared transport (the writer's side is
+    ``pdf/file._body_text``): text -> bytes through surrogateescape, then
+    the declared filters (pdf/filters.py, the from-spec layer), if any.
+    Each caller accounts a failure its own way."""
+    data = (text or "").encode("utf-8", "surrogateescape")
+    return apply_filters(data, filters, parms) if filters else data
 
 
 def decode_unit(
@@ -139,8 +197,10 @@ def decode_unit(
 ) -> UnitResult:
     """Decode one work unit (a PDF page or an HTML document).
 
-    ``resources_json`` carries {fonts: [json...], page_desc: json|null,
-    media: {name: ref}} for PDF units — either as the serialized JSON string
+    ``resources_json`` carries the unit's resources from ``doc_to_units``
+    (fonts, forms, acroform_fonts, page_desc, media, annots, and the page's
+    content_filters/content_parms/colorspaces when declared) for PDF
+    units — either as the serialized JSON string
     (the Arrow-shipped unit rows) or as the already-parsed dict (the fused
     in-process path from ``doc_to_units(serialize=False)``, which skips a
     dumps+loads round trip per page; both forms decode identically because
@@ -167,7 +227,11 @@ def decode_unit(
     if isinstance(resources_json, dict):
         res = resources_json
     else:
-        res = json.loads(resources_json) if resources_json else {}
+        try:
+            res = json.loads(resources_json) if resources_json else {}
+        except Exception as e:  # RecursionError: hostile nesting in a decoded
+            # descriptor or annotation value, re-read on a deeper stack
+            return UnitResult(spans=[], failed=True, error=f"resources: {type(e).__name__}: {e}")
     fonts: dict[str, Font]
     fonts_key = tuple(res.get("fonts", []))
     if fonts_cache is not None and fonts_key in fonts_cache:
@@ -179,29 +243,21 @@ def decode_unit(
             return UnitResult(spans=[], failed=True, error=f"font: {type(e).__name__}: {e}")
         if fonts_cache is not None:
             fonts_cache[fonts_key] = fonts
-    page_desc = parse_page_descriptor(res.get("page_desc"))
+    page_desc = page_geometry(res.get("page_desc"))
     forms = build_forms(res.get("forms"), fonts_cache)
-    content = (payload or "").encode("utf-8", "surrogateescape")
     # /Filter transport on the content stream itself (real PDFs Flate
-    # their streams; the reference gets this from qpdf — pdf/filters.py
-    # is the from-spec layer). Declared per unit by the descriptor:
-    # content_filters: ["FlateDecode", ...], content_parms: [{...}, ...].
-    if res.get("content_filters"):
-        from docling_parse_spark.pdf.filters import apply_filters
-
-        try:
-            content = apply_filters(
-                content, res["content_filters"], res.get("content_parms")
-            )
-        except Exception as e:
-            # malformed transport OR a malformed descriptor (wrong-typed
-            # filters/parms) = per-unit failure accounting, like any
-            # corrupt stream (never a task-killing raise — same posture as
-            # the font path above)
-            return UnitResult(
-                spans=[], failed=True, error=f"filter: {type(e).__name__}: {e}",
-                timings=timings,
-            )
+    # their streams; the reference gets this from qpdf)
+    try:
+        content = _body_bytes(payload, res.get("content_filters"), res.get("content_parms"))
+    except Exception as e:
+        # malformed transport OR a malformed descriptor (wrong-typed
+        # filters/parms) = per-unit failure accounting, like any corrupt
+        # stream (never a task-killing raise — same posture as the font
+        # path above)
+        return UnitResult(
+            spans=[], failed=True, error=f"filter: {type(e).__name__}: {e}",
+            timings=timings,
+        )
     timings["resources"] = (_clock() - t0) * 1000.0  # json + fonts + forms (cache-hit ≈ 0)
     pr = decode_page(
         content,
@@ -235,8 +291,8 @@ def decode_unit(
                 dr_fonts = {}
             if fonts_cache is not None:
                 fonts_cache[dr_key] = dr_fonts
-    for blob in annots:
-        out.extend(decode_annotation(blob, fonts, config, acroform_fonts=dr_fonts))
+    for a in annots:
+        out.extend(decode_annotation(a, fonts, config, acroform_fonts=dr_fonts))
     if annots:
         timings["annots"] = (_clock() - t0) * 1000.0
     return UnitResult(
@@ -310,15 +366,7 @@ def build_forms(raw_forms: dict | None, cache: dict | None = None) -> dict | Non
     built = {}
     for name, f in raw_forms.items():
         try:
-            raw = (f.get("ops") or "").encode("utf-8", "surrogateescape")
-            if f.get("filters"):
-                # declared transport (e.g. ASCII85 wrapping a binary form
-                # body from raw-PDF ingest) — mirrors decode_unit's
-                # content_filters handling
-                from docling_parse_spark.pdf.filters import apply_filters
-
-                raw = apply_filters(raw, f["filters"], f.get("parms"))
-            ops = tokenize(raw)
+            ops = tokenize(_body_bytes(f.get("ops"), f.get("filters"), None))
         except Exception:
             ops = []
         built[name] = {"ops": ops, "matrix": f.get("matrix")}
@@ -328,21 +376,16 @@ def build_forms(raw_forms: dict | None, cache: dict | None = None) -> dict | Non
 
 
 def decode_annotation(
-    blob: str, fonts: dict, config: DecodeConfig, acroform_fonts: dict | None = None
+    a: dict, fonts: dict, config: DecodeConfig, acroform_fonts: dict | None = None
 ) -> list[tuple]:
-    """One /Annots entry -> spans. Hyperlinks carry the URI in ``media_ref``
-    (an external pointer, like media); widgets carry the field name in
-    ``text`` and append their AP appearance-stream text.
+    """One decoded /Annots entry (``build_doc_resources``) -> spans.
+    Hyperlinks carry the URI in ``media_ref`` (an external pointer, like
+    media); widgets carry the field name in ``text`` and append their AP
+    appearance-stream text.
 
     AP font fallback chain (reference page.h:1653-1663): the AP stream's own
     resources (``ap_fonts`` on the descriptor) win, then the AcroForm /DR
     fonts (doc-level ``pdf_acroform_dr`` span), then the page's fonts."""
-    try:
-        a = json.loads(blob)
-    except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-        return []
-    if not isinstance(a, dict):
-        return []
     subtype = a.get("subtype", "link")
     if subtype == "link":
         uri = a.get("uri") or ""
@@ -363,16 +406,10 @@ def decode_annotation(
                 chain.update(build_fonts(a["ap_fonts"]))
             except Exception:
                 pass
-        ap_bytes = ap.encode("utf-8", "surrogateescape")
-        if a.get("ap_filters"):
-            # declared transport for binary AP streams (raw-PDF ingest
-            # ships them ASCII85-wrapped; same contract as content_filters)
-            from docling_parse_spark.pdf.filters import apply_filters
-
-            try:
-                ap_bytes = apply_filters(ap_bytes, a["ap_filters"], a.get("ap_parms"))
-            except Exception:
-                return spans
+        try:
+            ap_bytes = _body_bytes(ap, a.get("ap_filters"), a.get("ap_parms"))
+        except Exception:
+            return spans  # a corrupt AP stream: keep the widget, drop its text
         ap_res = decode_page(ap_bytes, chain, config=config)
         if not ap_res.failed:
             spans.extend(("widget_text", t, r) for (k, t, r) in ap_res.spans if k == "text")
@@ -408,60 +445,31 @@ def doc_to_units(doc_id: str, spans: list[dict], serialize: bool = True) -> list
                 "fonts": resources["fonts"],
                 "forms": resources["forms"],
                 "acroform_fonts": resources["acroform_fonts"],
-                "page_desc": resources["page_descs"].get(pdf_page_no),
+                "page_desc": None,
                 "media": resources["media_by_page"].get(pdf_page_no, {}),
                 "annots": resources["annots_by_page"].get(pdf_page_no, []),
             }
-            # a pdf_page descriptor may also declare content-stream
-            # transport filters and ColorSpace resources for its page —
-            # this is how document-level inputs reach decode_unit's
-            # /Filter and /ICCBased handling (round-4 review: the unit
-            # keys existed but nothing doc-level could set them)
-            desc_json = res["page_desc"]
-            if desc_json:
-                try:
-                    desc = json.loads(desc_json)
-                    for k in ("content_filters", "content_parms", "colorspaces"):
-                        if isinstance(desc, dict) and desc.get(k) is not None:
-                            res[k] = desc[k]
-                    # page-scoped font blobs (e.g. a raw-PDF page whose
-                    # resource key names a different font than another
-                    # page's): appended AFTER the doc-level list so they
-                    # win for this unit only (build_fonts keys by
-                    # font_key, last blob wins)
-                    if isinstance(desc, dict) and desc.get("fonts"):
-                        res["fonts"] = list(res["fonts"]) + [
-                            f if isinstance(f, str) else json.dumps(f)
-                            for f in desc["fonts"]
-                        ]
-                    # page-scoped form XObjects (a raw-PDF page whose
-                    # resource key names a DIFFERENT form than another
-                    # page's) — merged over the doc-level map so they win
-                    # for this unit only, like page-scoped fonts
-                    if isinstance(desc, dict) and desc.get("forms"):
-                        merged = dict(res["forms"] or {})
-                        for fo in desc["forms"]:
-                            if isinstance(fo, str):
-                                try:
-                                    fo = json.loads(fo)
-                                except Exception:
-                                    continue
-                            if isinstance(fo, dict) and fo.get("name"):
-                                merged[str(fo["name"])] = {
-                                    "ops": fo.get("ops") or "",
-                                    "matrix": fo.get("matrix"),
-                                    "filters": fo.get("filters"),
-                                }
-                        res["forms"] = merged
-                except Exception:
-                    pass
+            # the page's descriptor entries (geometry, content transport,
+            # ColorSpace resources); its page-scoped fonts go AFTER the
+            # doc-level list (build_fonts keys by font_key, last blob wins)
+            # and its forms over the doc-level map, so both win for this
+            # unit only
+            scoped = resources["pages"].get(pdf_page_no)
+            if scoped:
+                res.update(scoped)
+                if "fonts" in scoped:
+                    res["fonts"] = resources["fonts"] + scoped["fonts"]
+                if "forms" in scoped:
+                    res["forms"] = {**resources["forms"], **scoped["forms"]}
+            # no sort_keys: decoded annotations keep their key order, so a
+            # shipped unit decodes exactly like the in-process dict
             units.append(
                 {
                     "doc_id": doc_id,
                     "page": idx,
                     "unit_kind": "pdf",
                     "payload": s.get("text") or "",
-                    "resources": json.dumps(res, sort_keys=True) if serialize else res,
+                    "resources": json.dumps(res) if serialize else res,
                 }
             )
             pdf_page_no += 1

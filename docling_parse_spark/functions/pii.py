@@ -76,12 +76,6 @@ def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 # ------------------------------------------------------------ SQL twins
 
-def pii_count_sql(kind: str, col: str = "text") -> str:
-    """DuckDB twin of :func:`pii_count` (identical pattern string)."""
-    pattern = dict(PII_PATTERNS)[kind].replace("'", "''")
-    return f"len(regexp_extract_all({col}, '{pattern}'))"
-
-
 def pii_counts_sql(col: str = "text") -> list[tuple[str, str]]:
     """DuckDB twins of :func:`with_pii_counts`'s sequential counts:
     ``[(kind, count_sql)]`` where each count runs on the text with earlier

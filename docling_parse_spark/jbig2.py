@@ -1139,13 +1139,6 @@ def _walk_prefix(br: _BitReader, lut: dict) -> int:
             return i
 
 
-def _match_code(br: _BitReader, lens: list[int], codes: list[int],
-                lut: dict | None = None) -> int:
-    if lut is None:
-        lut = _code_lut(lens, codes)
-    return _walk_prefix(br, lut)
-
-
 def _code_lut(lens: list[int], codes: list[int]) -> dict:
     return {(ln, codes[i]): i for i, ln in enumerate(lens) if ln > 0}
 

@@ -53,14 +53,3 @@ def base14_width(base_font: str, code: int, glyph_name: str | None = None) -> fl
     w = m["by_code"].get(code)
     return float(w) if w is not None else None
 
-
-def base14_meta(base_font: str) -> dict | None:
-    """Ascender/Descender/CapHeight from the AFM header."""
-    afm_name = resolve_afm_name(base_font)
-    if afm_name is None:
-        return None
-    return afm_metrics()[afm_name]["meta"]
-
-
-def is_base14(base_font: str | None) -> bool:
-    return resolve_afm_name(base_font) is not None

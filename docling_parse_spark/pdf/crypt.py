@@ -291,7 +291,9 @@ def _evp_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes | None:
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """AES-CBC encrypt, NO padding (caller aligns)."""
+    """AES-CBC encrypt, NO padding (caller aligns). Any bytes-like input;
+    ctypes binds only ``bytes`` to the EVP arguments."""
+    key, iv, data = bytes(key), bytes(iv), bytes(data)
     if len(data) % 16:
         raise ValueError("aes_cbc_encrypt: data not block-aligned")
     with _EvpCbc(len(key), True, len(data)) as cbc:
@@ -300,7 +302,9 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
 
 def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes, unpad: bool = True) -> bytes:
     """AES-CBC decrypt; strips the RFC 2898 padding PDF uses unless the
-    caller (the /UE /OE key unwrap) asks for raw blocks."""
+    caller (the /UE /OE key unwrap) asks for raw blocks. Any bytes-like
+    input, as for ``aes_cbc_encrypt``."""
+    key, iv, data = bytes(key), bytes(iv), bytes(data)
     if len(data) % 16 or not data:
         raise ValueError("aes_cbc_decrypt: ciphertext not block-aligned")
     with _EvpCbc(len(key), False, len(data)) as cbc:

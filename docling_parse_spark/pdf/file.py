@@ -31,6 +31,7 @@ accounting. Linearization hints are ignored (harmless).
 
 from __future__ import annotations
 
+import base64
 import json
 import re
 import zlib
@@ -807,19 +808,14 @@ class PdfFile:
     def form_blob(self, name: str, sdict: dict, raw: bytes):
         """Form XObject -> (pdf_form JSON blob, [(font_key, blob)]) — the
         engine's doc-level form shape (document.py build_doc_resources).
-        Binary bodies ride as declared ASCII85 transport (Arrow-safe)."""
-        import base64
-
-        ops = self._decode_stream(sdict, raw)
+        Binary bodies ride as declared ASCII85 transport (``_body_text``)."""
         d: dict = {"name": name}
         mtx = self._resolve(sdict.get("Matrix"))
         if isinstance(mtx, list) and len(mtx) == 6:
             d["matrix"] = [float(self._resolve(x)) for x in mtx]
-        try:
-            d["ops"] = ops.decode("utf-8")
-        except UnicodeDecodeError:
-            d["ops"] = (base64.a85encode(ops) + b"~>").decode("ascii")
-            d["filters"] = ["ASCII85Decode"]
+        d["ops"], filters = _body_text(self._decode_stream(sdict, raw))
+        if filters:
+            d["filters"] = filters
         fonts: list[tuple[str, str]] = []
         fres = self._resolve(sdict.get("Resources"))
         ffonts = self._resolve(fres.get("Font")) if isinstance(fres, dict) else None
@@ -835,8 +831,6 @@ class PdfFile:
         and /Widget form fields with their /AP /N appearance stream + its
         /Resources fonts (reference page.h:1158-1753 decodes the same set,
         including the AP sub-decode)."""
-        import base64
-
         out: list[dict] = []
         for aref in self._resolve(page.get("Annots")) or []:
             a = self._resolve(aref)
@@ -906,12 +900,9 @@ class PdfFile:
                 if isinstance(n_obj, tuple):
                     sdict, raw = n_obj
                     try:
-                        ops = self._decode_stream(sdict, raw)
-                        try:
-                            w["ap_ops"] = ops.decode("utf-8")
-                        except UnicodeDecodeError:
-                            w["ap_ops"] = (base64.a85encode(ops) + b"~>").decode("ascii")
-                            w["ap_filters"] = ["ASCII85Decode"]
+                        w["ap_ops"], filters = _body_text(self._decode_stream(sdict, raw))
+                        if filters:
+                            w["ap_filters"] = filters
                         apres = self._resolve(sdict.get("Resources"))
                         apfonts = self._resolve(apres.get("Font")) \
                             if isinstance(apres, dict) else None
@@ -985,16 +976,17 @@ class PdfFile:
         # descriptor format's base64 'font_program' key drives width
         # extraction when /Widths is absent (r4 review)
         fdesc = f.get("FontDescriptor")
+        # a Type0 font's descendant CIDFont lends its /FontDescriptor when
+        # the Type0 dict has none, and carries the CID widths (/DW, /W)
+        df = None
         if d["subtype"] == "Type0":
-            desc0 = self._resolve(f.get("DescendantFonts"))
-            if isinstance(desc0, list) and desc0:
-                df0 = self._resolve(desc0[0])
-                if isinstance(df0, dict):
-                    fdesc = fdesc or df0.get("FontDescriptor")
+            desc = f.get("DescendantFonts")
+            if isinstance(desc, list) and desc:
+                df = self._resolve(desc[0])
+        if isinstance(df, dict):
+            fdesc = fdesc or df.get("FontDescriptor")
         fdesc_dict = self._resolve(fdesc)
         if isinstance(fdesc_dict, dict):
-            import base64
-
             for kk in ("FontFile2", "FontFile3", "FontFile"):
                 ff = fdesc_dict.get(kk)
                 ff_obj = self.get_object(ff) if isinstance(ff, Ref) else None
@@ -1014,19 +1006,42 @@ class PdfFile:
         tu_obj = self.get_object(tu) if isinstance(tu, Ref) else None
         if isinstance(tu_obj, tuple):
             d["to_unicode"] = self._decode_stream(*tu_obj).decode("latin-1", "replace")
-        if d["subtype"] == "Type0":
-            desc = self._resolve(f.get("DescendantFonts"))
-            if isinstance(desc, list) and desc:
-                df = self._resolve(desc[0])
-                if isinstance(df, dict):
-                    if "DW" in df:
-                        d["dw"] = float(self._resolve(df["DW"]))
-                    w = self._resolve(df.get("W"))
-                    if isinstance(w, list):
-                        d["w"] = _cid_w_to_map(
-                            [self._resolve(x) for x in w], self._resolve
-                        )
+        if isinstance(df, dict):
+            if "DW" in df:
+                d["dw"] = float(self._resolve(df["DW"]))
+            w = self._resolve(df.get("W"))
+            if isinstance(w, list):
+                d["w"] = _cid_w_to_map([self._resolve(x) for x in w], self._resolve)
         return json.dumps(d, sort_keys=True)
+
+
+def _body_text(data: bytes) -> tuple[str, list[str] | None]:
+    """A decoded stream body -> (text, declared filters): plain UTF-8 with
+    no filters, else ASCII85 declared as ``["ASCII85Decode"]``. Binary
+    bodies (inline images, binary string operands) must not ride as
+    surrogateescape strings, which break Arrow serialization (r4 review:
+    one such file killed the whole ingest task); the reader undoes the
+    declared transport (document.py)."""
+    try:
+        return data.decode("utf-8"), None
+    except UnicodeDecodeError:
+        return (base64.a85encode(data) + b"~>").decode("ascii"), ["ASCII85Decode"]
+
+
+def _split_scope(per_page: list[dict[str, str]]) -> tuple[list[str], list[list[str]]]:
+    """Per-page ``{key: blob}`` resource maps -> (doc-level blobs, per-page
+    page-scoped blobs). A key bound to one blob on every page that names
+    it is doc-level (blobs in first-seen order, deduplicated). A key
+    reused for DIFFERENT blobs would silently decode every page with
+    whichever blob came last (r4 review), so it ships page-scoped inside
+    each page's descriptor, where the reader lets it win for that unit."""
+    blobs_of: dict[str, set[str]] = {}
+    for blobs in per_page:
+        for key, blob in blobs.items():
+            blobs_of.setdefault(key, set()).add(blob)
+    doc = {k for k, bs in blobs_of.items() if len(bs) == 1}
+    doc_blobs = list(dict.fromkeys(b for blobs in per_page for k, b in blobs.items() if k in doc))
+    return doc_blobs, [[b for k, b in blobs.items() if k not in doc] for blobs in per_page]
 
 
 def _cid_w_to_map(w: list, resolve) -> dict[str, float]:
@@ -1090,17 +1105,10 @@ def _parse_pdf_spans(data: bytes, doc_id: str = "", password=None) -> list[dict]
     pages = pdf.pages()
     if not pages:
         raise ValueError("PDF has no pages")
-    # collect per-page font/xobject blobs FIRST: resources whose key maps
-    # to one blob doc-wide go to doc-level spans (the common case); a key
-    # reused for DIFFERENT content on another page would silently decode
-    # both pages with whichever blob came last (r4 review), so conflicting
-    # keys ship page-scoped inside the pdf_page descriptor (doc_to_units
-    # merges descriptor fonts/forms AFTER doc-level, so the page-local
-    # blob wins for that unit only).
+    # collect per-page font/xobject blobs FIRST, then split each kind
+    # into doc-level spans and page-scoped descriptor entries (_split_scope)
     page_fonts: list[dict[str, str]] = []
-    key_blobs: dict[str, set[str]] = {}
     page_forms: list[dict[str, str]] = []
-    form_key_blobs: dict[str, set[str]] = {}
     page_images: list[dict[str, dict]] = []
     for page in pages:
         res = pdf._resolve(page.get("Resources")) or {}
@@ -1119,24 +1127,18 @@ def _parse_pdf_spans(data: bytes, doc_id: str = "", password=None) -> list[dict]
             except ValueError:
                 continue  # corrupt form stream: skip the form, keep the page
             fblobs[name] = blob
-            form_key_blobs.setdefault(name, set()).add(blob)
             # the form's own /Resources fonts join the page's font map for
             # keys the page doesn't define (the interpreter runs forms
             # against the page's font namespace)
             for k, b in ffonts:
                 blobs.setdefault(k, b)
-        for key, blob in blobs.items():
-            key_blobs.setdefault(key, set()).add(blob)
         page_fonts.append(blobs)
         page_forms.append(fblobs)
         page_images.append(images)
-    doc_level = {k for k, bs in key_blobs.items() if len(bs) == 1}
-    emitted: set[str] = set()
-    for blobs in page_fonts:
-        for key, blob in blobs.items():
-            if key in doc_level and blob not in emitted:
-                emitted.add(blob)
-                emit("pdf_font", blob)
+    doc_fonts, local_fonts = _split_scope(page_fonts)
+    doc_forms, local_forms = _split_scope(page_forms)
+    for blob in doc_fonts:
+        emit("pdf_font", blob)
 
     info = pdf.doc_info()
     if info:
@@ -1148,13 +1150,8 @@ def _parse_pdf_spans(data: bytes, doc_id: str = "", password=None) -> list[dict]
     if dr_fonts:
         emit("pdf_acroform_dr", json.dumps(dr_fonts))
 
-    form_doc_level = {k for k, bs in form_key_blobs.items() if len(bs) == 1}
-    emitted_forms: set[str] = set()
-    for fblobs in page_forms:
-        for name, blob in fblobs.items():
-            if name in form_doc_level and blob not in emitted_forms:
-                emitted_forms.add(blob)
-                emit("pdf_form", blob)
+    for blob in doc_forms:
+        emit("pdf_form", blob)
 
     page_payloads = []
     annots_all: list[dict] = []
@@ -1165,25 +1162,13 @@ def _parse_pdf_spans(data: bytes, doc_id: str = "", password=None) -> list[dict]
         crop = pdf._resolve(page.get("CropBox"))
         if crop:
             desc["crop_box"] = [float(pdf._resolve(v)) for v in crop]
-        local = [b for k, b in page_fonts[pno].items() if k not in doc_level]
-        if local:
-            desc["fonts"] = local
-        local_forms = [b for k, b in page_forms[pno].items() if k not in form_doc_level]
-        if local_forms:
-            desc["forms"] = local_forms
-        content = pdf.page_content(page)
-        try:
-            payload = content.decode("utf-8")
-        except UnicodeDecodeError:
-            # binary content (inline images, binary string operands):
-            # surrogateescape strings break Arrow serialization (r4
-            # review: one such file killed the whole ingest task), so
-            # wrap in ASCII85 and let decode_unit's declared transport
-            # reverse it — the payload stays plain ASCII end to end
-            import base64
-
-            payload = (base64.a85encode(content) + b"~>").decode("ascii")
-            desc["content_filters"] = ["ASCII85Decode"]
+        if local_fonts[pno]:
+            desc["fonts"] = local_fonts[pno]
+        if local_forms[pno]:
+            desc["forms"] = local_forms[pno]
+        payload, filters = _body_text(pdf.page_content(page))
+        if filters:
+            desc["content_filters"] = filters
         page_payloads.append((json.dumps(desc, sort_keys=True), payload))
         annots_all.extend(pdf.page_annots(page, pno))
     for desc_json, _payload in page_payloads:

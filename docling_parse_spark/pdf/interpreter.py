@@ -26,6 +26,9 @@ from dataclasses import dataclass, field, replace
 from docling_parse_spark.pdf.fonts import Font, _is_rtl  # noqa: F401 (re-export)
 
 IDENTITY = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
+# nested form XObjects are run at most this deep (a self-referencing /Do
+# chain stops here instead of recursing without bound)
+MAX_FORM_DEPTH = 8
 
 
 def mat_mul(m1, m2):
@@ -209,16 +212,12 @@ class PageInterpreter:
         images: dict[str, str] | None = None,
         forms: dict[str, dict] | None = None,
         colorspaces: dict[str, int] | None = None,
-        keep_glyphs: bool = False,
-        max_form_depth: int = 8,
     ):
         self.fonts = fonts
         self.images = images or {}  # xobject name -> media_ref
         self.forms = forms or {}  # xobject name -> {"ops": [...], "matrix": 6-tuple}
         # ColorSpace resource name -> component count (/ICCBased /N etc.)
         self.colorspaces = colorspaces or {}
-        self.keep_glyphs = keep_glyphs
-        self.max_form_depth = max_form_depth
 
         self.gs = GraphicsState()
         self.stack: list[GraphicsState] = []
@@ -413,7 +412,6 @@ class PageInterpreter:
             return
         fs = t.font_size
         decode_glyph = font.decode_glyph
-        keep_glyphs = self.keep_glyphs
         # Type-3 glyph space comes from /FontMatrix (width_scale); every
         # other font type is the standard 1/1000 em (division kept for
         # bit-identity with the pinned fixtures)
@@ -451,7 +449,7 @@ class PageInterpreter:
         cells_append = self.cells.append
         cell_new = Cell.__new__
         for code, nbytes in font.analyse_string(raw):
-            s, w, ltr = decode_glyph(code, nbytes, keep_glyphs)
+            s, w, ltr = decode_glyph(code, nbytes, False)  # production squash
             char_width = (w / 1000.0 if ws is None else w * ws) * fs * h_scaling
             spacing = char_spacing
             # word spacing applies to single-byte code 32 only (PDF 9.3.3)
@@ -587,7 +585,7 @@ class PageInterpreter:
                     instr_count=self.instr_count,
                 )
             )
-        elif name in self.forms and depth < self.max_form_depth:
+        elif name in self.forms and depth < MAX_FORM_DEPTH:
             # recursive sub-interpretation with parent-chained resources
             # (reference: stream.h:374-503): q, cm(form matrix), run, Q
             form = self.forms[name]

@@ -40,10 +40,7 @@ class DecodeConfig:
     (src/parse/config.h:9-62, docling_parse/pdf_parser.py:206-267)."""
 
     output_unit: str = "word"  # 'char' | 'word' | 'line'
-    keep_glyphs: bool = False
-    emit_invisible_text: bool = True  # rendering_mode 3 cells still carry text
     emit_shapes: bool = False
-    max_form_depth: int = 8
     # 'stream' = content-stream order (reference parity); 'xycut' = XY-cut
     # reading-order reconstruction (north-star addition, operators/xycut.py)
     reading_order: str = "stream"
@@ -53,11 +50,9 @@ class DecodeConfig:
 class PageResult:
     spans: list = field(default_factory=list)  # [(kind, text, media_ref)]
     cells_emitted: int = 0
-    unknown_operators: set = field(default_factory=set)
     failed: bool = False
     error: str = ""
     cells: list = field(default_factory=list)  # output-unit cells (post-merge)
-    bitmaps: list = field(default_factory=list)
     shapes: list = field(default_factory=list)
     # per-stage wall ms — the reference's pdf_timings keys
     # (src/parse/utils/pdf_timings.h:32-99, aggregated page.h:1076-1111):
@@ -68,13 +63,18 @@ class PageResult:
 
 
 def parse_page_descriptor(blob: str | None) -> dict:
-    default = {"media_box": DEFAULT_MEDIA_BOX, "crop_box": None, "rotate": 0}
-    if not blob:
-        return default
+    """A pdf_page descriptor's JSON text -> its page geometry."""
     try:
-        d = json.loads(blob)
-    except (ValueError, TypeError, json.JSONDecodeError):
-        return default
+        d = json.loads(blob) if blob else None
+    except (ValueError, TypeError):
+        d = None
+    return page_geometry(d)
+
+
+def page_geometry(d) -> dict:
+    """A decoded pdf_page descriptor -> ``{media_box, crop_box, rotate}``;
+    anything that is not a well-formed descriptor gets the default page."""
+    default = {"media_box": DEFAULT_MEDIA_BOX, "crop_box": None, "rotate": 0}
     if not isinstance(d, dict):
         return default
     try:
@@ -83,7 +83,7 @@ def parse_page_descriptor(blob: str | None) -> dict:
             "crop_box": tuple(d["crop_box"]) if d.get("crop_box") else None,
             "rotate": int(d.get("rotate", 0)),
         }
-    except (ValueError, TypeError):
+    except (ValueError, TypeError, OverflowError):  # OverflowError: int(inf)
         return default
 
 
@@ -113,14 +113,7 @@ def decode_page(
     try:
         instructions = tokenize(content)
         t1 = _clock()
-        interp = PageInterpreter(
-            fonts,
-            images=images,
-            forms=forms,
-            colorspaces=colorspaces,
-            keep_glyphs=config.keep_glyphs,
-            max_form_depth=config.max_form_depth,
-        )
+        interp = PageInterpreter(fonts, images=images, forms=forms, colorspaces=colorspaces)
         interp.run(instructions)
     except Exception as e:  # corrupt stream: match reference's per-page failure
         res.failed = True
@@ -144,7 +137,6 @@ def decode_page(
 def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig, t2: float) -> PageResult:
     cells = interp.cells
     res.cells_emitted = len(cells)
-    res.unknown_operators = interp.unknown_operators
 
     # orientation sanitize (reference: page.h:862-872, crop_box default
     # boundary): items are mapped into the chosen page boundary — translate
@@ -172,21 +164,15 @@ def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig,
     t4 = _clock()
     sanitize_text(cells)
     t5 = _clock()
-
-    if not config.emit_invisible_text:
-        cells = [c for c in cells if c.rendering_mode != 3]
-
-    t6 = _clock()
     if config.output_unit == "word":
         out_cells = create_word_cells(cells, copy=False)  # char cells are ours
     elif config.output_unit == "line":
         out_cells = create_line_cells(cells, copy=False)
     else:
         out_cells = [c for c in cells if c.text.strip() != ""]
-    t7 = _clock()
+    t6 = _clock()
 
     res.cells = out_cells
-    res.bitmaps = interp.bitmaps
     res.shapes = interp.shapes
 
     items: list[tuple[int, int, str, str | None, str | None, tuple]] = []
@@ -222,7 +208,7 @@ def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig,
         items = [items[i] for i in order]
     res.spans = [(kind, text, ref) for _, _, kind, text, ref, _ in items]
     # the four keys split the page finish since t2; order is the remainder
-    dedup, sanitize, words = t4 - t3, t5 - t4, t7 - t6
+    dedup, sanitize, words = t4 - t3, t5 - t4, t6 - t5
     res.timings["dedup"] = dedup * 1000.0
     res.timings["sanitize"] = sanitize * 1000.0
     res.timings["words"] = words * 1000.0

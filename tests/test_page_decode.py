@@ -87,3 +87,31 @@ def test_crop_box_translates_shapes_with_cells():
     shape = next(s for s in pr.spans if s[0] == "shape")
     bb = json.loads(shape[1])["bbox"]
     assert bb[:2] == [50.0, 40.0]  # (100,90) - (50,50): same frame as cells
+
+
+def test_infinite_rotate_gets_the_default_page():
+    """A descriptor whose rotate overflows int() (JSON 1e400 reads as inf)
+    gets the default page like any other malformed field; the unit still
+    decodes instead of raising OverflowError."""
+    from docling_parse_spark.document import decode_document
+
+    assert parse_page_descriptor('{"rotate": 1e400}') == parse_page_descriptor(None)
+    spans = [
+        {"kind": "pdf_font", "text": FONT, "media_ref": None, "offset": 0},
+        {"kind": "pdf_page", "text": '{"page": 0, "rotate": 1e400}', "media_ref": None,
+         "offset": 1},
+        {"kind": "pdf_ops", "text": "BT /F1 12 Tf 72 700 Td (upright) Tj ET", "media_ref": None,
+         "offset": 2},
+    ]
+    assert [s["text"] for s in decode_document("d", spans)] == ["upright"]
+
+
+def test_unreadable_resources_string_is_a_failed_unit():
+    """A shipped resources string that json cannot read back (nesting past
+    the recursion limit) fails its unit instead of raising."""
+    from docling_parse_spark.document import decode_unit
+
+    deep = "[" * 100_000 + "]" * 100_000
+    ur = decode_unit("pdf", "BT ET", 0, '{"colorspaces": ' + deep + "}")
+    assert ur.failed and ur.spans == []
+    assert ur.error.startswith("resources: RecursionError")

@@ -293,9 +293,9 @@ def test_bad_xrefstm_degrades_to_classic_table():
 
 
 def test_vectorized_cbc_equals_scalar():
-    """The numpy T-table ECB path (>= 1 KiB inputs) is bit-identical to
-    the scalar inverse cipher for every AES key size, including the
-    1008/1024-byte threshold boundary."""
+    """``aes_cbc_decrypt`` (EVP where libcrypto loads, else ``_pure_cbc``)
+    is bit-identical to a CBC loop over the FIPS-197 inverse cipher for
+    every AES key size, on inputs from 1008 bytes to 8 KiB."""
     import random
 
     random.seed(9)
@@ -751,3 +751,20 @@ def test_password_unicode_prep():
     pdf = _build_aes256_pw("motdepasseé".encode("utf-8"), b"o")
     spans = parse_pdf_spans(pdf, doc_id="t", password="motdepasseé")
     assert any(s["kind"] == "pdf_ops" for s in spans)
+
+
+def test_aes_cbc_accepts_any_bytes_like(monkeypatch):
+    """bytearray and memoryview inputs give the bytes result on the EVP
+    path and on the FIPS-197 fallback (ctypes binds only bytes to EVP)."""
+    from docling_parse_spark.pdf import crypt
+
+    key, iv = bytes(range(32)), bytes(range(16, 32))
+    data = bytes(range(40)) + bytes([8] * 8)  # padded plaintext
+    ct = crypt.aes_cbc_encrypt(key, iv, data)
+    for evp in (True, False):
+        if not evp:
+            monkeypatch.setattr(crypt, "_EVP", False)
+        for wrap in (bytearray, memoryview):
+            assert crypt.aes_cbc_encrypt(wrap(key), wrap(iv), wrap(data)) == ct
+            assert crypt.aes_cbc_decrypt(wrap(key), wrap(iv), wrap(ct)) == data[:40]
+            assert crypt.aes_cbc_decrypt(wrap(key), wrap(iv), wrap(ct), unpad=False) == data

@@ -38,38 +38,17 @@ def mini_cells_and_components() -> None:
     """Sequential twin of extract.extract_cells + connected components
     (operators/geometry.merge_overlapping_boxes) over the 60-doc mini corpus."""
     from docling_parse_spark.corpus import generate_corpus, generate_pdf_file_docs
-    from docling_parse_spark.document import build_forms, doc_to_units
+    from docling_parse_spark.document import decode_unit, doc_to_units
     from docling_parse_spark.operators.geometry import merge_overlapping_boxes
-    from docling_parse_spark.pdf.page import DecodeConfig, build_fonts, decode_page, parse_page_descriptor
-    import json
 
-    cfg = DecodeConfig()
     cells_rows, comp_rows = [], []
     for d in generate_corpus(60, seed=42) + generate_pdf_file_docs(encrypted=False):
         for unit in doc_to_units(d["doc_id"], d["spans"]):
             if unit["unit_kind"] != "pdf":
                 continue
-            res = json.loads(unit["resources"]) if unit["resources"] else {}
-            content = (unit["payload"] or "").encode("utf-8", "surrogateescape")
-            if res.get("content_filters"):
-                # declared transport (binary raw-file pages) — mirrors
-                # extract.extract_cells exactly
-                from docling_parse_spark.pdf.filters import apply_filters
-
-                content = apply_filters(
-                    content, res["content_filters"], res.get("content_parms")
-                )
-            pr = decode_page(
-                content,
-                build_fonts(res.get("fonts", [])),
-                images=res.get("media") or {},
-                forms=build_forms(res.get("forms")),
-                colorspaces=res.get("colorspaces") or {},
-                page_desc=parse_page_descriptor(res.get("page_desc")),
-                config=cfg,
-            )
+            cells = decode_unit("pdf", unit["payload"], unit["page"], unit["resources"]).cells
             boxes = []
-            for i, c in enumerate(pr.cells):
+            for i, c in enumerate(cells):
                 cells_rows.append((d["doc_id"], unit["page"], i, c.text,
                                    c.x0, c.y0, c.x1, c.y1, c.rendering_mode))
                 boxes.append((c.x0, c.y0, c.x1, c.y1))
