@@ -27,7 +27,11 @@ One document's input spans (north-rule shape, FIXTURES.md §1) are routed by
 Resource contract. ``pdf/file.py`` is the one writer of the resource spans
 (for raw-PDF ingest) and ``build_doc_resources`` their one reader: it
 JSON-decodes each ``pdf_page``, ``pdf_form``, ``pdf_annot`` and
-``pdf_acroform_dr`` span once, and the units carry the decoded values.
+``pdf_acroform_dr`` span once, and the units carry the decoded values (of
+a descriptor, ``page_desc`` keeps only its geometry keys). It drops a span
+nested deeper than ``_MAX_NESTING`` containers, so a unit's resources dump
+and load back, and a shipped unit decodes like the in-process one, at any
+stack depth.
 
 * Page scope. ``pdf_font`` and ``pdf_form`` spans are doc-level and serve
   every page. A key bound to different objects on different pages ships
@@ -90,12 +94,35 @@ def parse_media_ref(media_ref: str) -> tuple[int, str] | None:
     return int(m.group(1)), m.group(2)
 
 
+# deepest container nesting of a resource span the reader accepts: far under
+# the recursion limit, so no read or write of it depends on the stack depth
+_MAX_NESTING = 64
+
+
+def _nesting_ok(v, left: int) -> bool:
+    """Whether a decoded JSON value nests at most ``left`` containers deep."""
+    if isinstance(v, dict):
+        v = v.values()
+    elif not isinstance(v, list):
+        return True
+    return left > 0 and all(_nesting_ok(x, left - 1) for x in v)
+
+
+def _loads(text: str):
+    """``json.loads`` for a resource span; ValueError past ``_MAX_NESTING``."""
+    v = json.loads(text)
+    if not _nesting_ok(v, _MAX_NESTING):
+        raise ValueError(f"resource span nested deeper than {_MAX_NESTING}")
+    return v
+
+
 def build_doc_resources(spans: list[dict]) -> dict:
     """Decode a doc's resource spans, each once: doc-level fonts and form
     XObjects (the reference parent-chains resource maps across nested
     forms, page_fonts.h:14-43, stream.h:403-406), AcroForm /DR fonts, the
     per-page descriptor entries (``_page_resources``), media maps and the
-    parsed annotations by page. Malformed resource spans are skipped."""
+    parsed annotations by page. Malformed resource spans are skipped, and so
+    is one nested deeper than ``_MAX_NESTING``."""
     font_blobs = [s["text"] for s in spans if s["kind"] == "pdf_font" and s.get("text")]
     pages: dict[int, dict] = {}
     media_by_page: dict[int, dict[str, str]] = {}
@@ -117,15 +144,15 @@ def build_doc_resources(spans: list[dict]) -> dict:
                 _add_form(forms, text)
             elif kind == "pdf_acroform_dr":
                 # AcroForm /DR font resources: JSON array of font descriptor blobs
-                d = json.loads(text)
+                d = _loads(text)
                 if isinstance(d, list):
                     acroform_fonts.extend(json.dumps(f) if isinstance(f, dict) else str(f) for f in d)
             elif kind == "pdf_page":
-                d = json.loads(text)
+                d = _loads(text)
                 if isinstance(d, dict):
                     pages[int(d.get("page", s.get("offset", 0)))] = _page_resources(d)
             elif kind == "pdf_annot":
-                d = json.loads(text)
+                d = _loads(text)
                 annots_by_page.setdefault(int(d.get("page", 0)), []).append(d)
         except Exception:  # incl. RecursionError from hostile nesting (r4 review)
             pass
@@ -144,7 +171,7 @@ def _add_form(forms: dict, f) -> None:
     descriptor's form blob) into ``forms``: ``{name: {ops, matrix, filters}}``."""
     if isinstance(f, str):
         try:
-            f = json.loads(f)
+            f = _loads(f)
         except Exception:  # incl. RecursionError from hostile nesting (r4 review)
             return
     if isinstance(f, dict) and f.get("name"):
@@ -157,11 +184,12 @@ def _add_form(forms: dict, f) -> None:
 
 def _page_resources(desc: dict) -> dict:
     """One decoded ``pdf_page`` descriptor -> its unit resource entries: the
-    descriptor itself (``page_desc``), the content transport and ColorSpace map
-    (name -> component count, /ICCBased /N pre-resolved, reference
-    page_colorspace.h), and the page-scoped fonts and forms. A malformed
-    descriptor keeps the entries read before the fault."""
-    out = {"page_desc": desc}
+    geometry keys ``page_geometry`` reads (``page_desc``), the content
+    transport and ColorSpace map (name -> component count, /ICCBased /N
+    pre-resolved, reference page_colorspace.h), and the page-scoped fonts
+    and forms. A malformed descriptor keeps the entries read before the
+    fault."""
+    out = {"page_desc": {k: desc[k] for k in ("media_box", "crop_box", "rotate") if k in desc}}
     try:
         for k in ("content_filters", "content_parms", "colorspaces"):
             if desc.get(k) is not None:
@@ -461,8 +489,8 @@ def doc_to_units(doc_id: str, spans: list[dict], serialize: bool = True) -> list
                     res["fonts"] = resources["fonts"] + scoped["fonts"]
                 if "forms" in scoped:
                     res["forms"] = {**resources["forms"], **scoped["forms"]}
-            # no sort_keys: decoded annotations keep their key order, so a
-            # shipped unit decodes exactly like the in-process dict
+            # no sort_keys: nested dicts keep their key order (a widget's
+            # str()'d value), so a shipped unit decodes like the in-process dict
             units.append(
                 {
                     "doc_id": doc_id,

@@ -115,3 +115,72 @@ def test_unreadable_resources_string_is_a_failed_unit():
     ur = decode_unit("pdf", "BT ET", 0, '{"colorspaces": ' + deep + "}")
     assert ur.failed and ur.spans == []
     assert ur.error.startswith("resources: RecursionError")
+
+
+def _deeper(frames, fn, *args):
+    """``fn(*args)`` run ``frames`` Python frames further down the stack, as
+    a Spark worker runs a doc's routing and its shipped units' decode."""
+    return fn(*args) if frames == 0 else _deeper(frames - 1, fn, *args)
+
+
+def test_resources_nested_near_the_limit_ship_like_the_oracle():
+    """A resource value nested just under json's recursion limit neither
+    raises in ``doc_to_units(serialize=True)`` (the route step) nor decodes
+    differently once shipped, even from a deeper stack than the oracle's:
+    the reader drops a resource span nested deeper than ``_MAX_NESTING``
+    whatever the stack."""
+    import sys
+
+    from docling_parse_spark.document import (
+        _MAX_NESTING,
+        decode_document,
+        decode_unit,
+        doc_to_units,
+    )
+
+    def nest(n):
+        return "[" * n + "]" * n
+
+    def loads_ok(text):
+        try:
+            json.loads(text)
+            return True
+        except RecursionError:
+            return False
+
+    top = next(n for n in range(sys.getrecursionlimit(), 0, -1) if loads_ok(nest(n)))
+    ops = {"kind": "pdf_ops", "text": "BT /F1 12 Tf 72 700 Td (hi) Tj ET", "media_ref": None,
+           "offset": 2}
+
+    def doc(kind, text):
+        return [{"kind": "pdf_font", "text": FONT, "media_ref": None, "offset": 0},
+                {"kind": kind, "text": text, "media_ref": None, "offset": 1}, ops]
+
+    templates = [
+        ("pdf_annot", '{"page": 0, "subtype": "widget", "field": "f", "rect": %s}'),
+        ("pdf_annot", '{"page": 0, "subtype": "widget", "field": "f", "ap_ops": "BT ET", '
+                      '"ap_filters": ["/FlateDecode"], "ap_parms": %s}'),
+        ("pdf_page", '{"page": 0, "rotate": 90, "junk": %s}'),
+        ("pdf_page", '{"page": 0, "content_filters": ["/FlateDecode"], "content_parms": %s}'),
+        ("pdf_form", '{"name": "Fm1", "ops": "", "matrix": %s}'),
+    ]
+    for kind, template in templates:
+        for n in range(top - 40, top + 1):
+            spans = doc(kind, template % nest(n))
+            shipped = [
+                (k, t, r)
+                for u in _deeper(40, doc_to_units, "d", spans)
+                for _, k, t, r in _deeper(40, decode_unit, u["unit_kind"], u["payload"],
+                                          u["page"], u["resources"]).spans
+            ]
+            oracle = [(s["kind"], s["text"], s["media_ref"]) for s in decode_document("d", spans)]
+            assert shipped == oracle, (kind, n)
+
+    # the bound is exact: a descriptor nested _MAX_NESTING deep keeps its
+    # geometry (and only that rides page_desc); one level more drops it
+    def page_desc(n):
+        spans = doc("pdf_page", '{"page": 0, "rotate": 90, "junk": %s}' % nest(n))
+        return doc_to_units("d", spans, serialize=False)[0]["resources"]["page_desc"]
+
+    assert page_desc(_MAX_NESTING - 1) == {"rotate": 90}
+    assert page_desc(_MAX_NESTING) is None
