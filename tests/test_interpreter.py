@@ -213,3 +213,104 @@ def test_form_with_unbalanced_q_does_not_corrupt_page_state():
     it.run(tokenize(b"q 1 0 0 1 50 0 cm /Fm2 Do BT /F1 10 Tf 0 0 Td (B) Tj ET Q"))
     c = it.cells[0]
     assert math.isclose(c.r_x0, 50.0)  # form's rogue Qs could not pop page state
+
+
+# stroke-only operators: they set line width and stroking colour, which no
+# output reads, so a stream decodes the same with each replaced by a no-op
+_STROKE_ONLY = ("w", "G", "RG", "K", "CS", "SC", "SCN")
+_CELL_FIELDS = (
+    "text", "r_x0", "r_y0", "r_x1", "r_y1", "r_x2", "r_y2", "r_x3", "r_y3",
+    "rendering_mode", "font_key", "font_name", "left_to_right", "rgb_filling",
+    "block_count", "instr_count", "active",
+)
+
+
+def _stroke_mix_streams():
+    """Content streams mixing fill and stroke colour ops (incl. ICC-mapped
+    CS/SC/SCN), w, paths, clips, q/Q, forms and text; any operator may get
+    too few, too many or wrong-typed operands."""
+    from hypothesis import strategies as st
+
+    num = st.sampled_from(["0", "0.25", "0.5", "1", "2.5", "-3", "10", "72"])
+    junk = st.sampled_from(["(x)", "/N", "[1 2]", "true"])
+    cs_name = st.sampled_from(["/DeviceRGB", "/DeviceGray", "/DeviceCMYK", "/ICC1",
+                               "/ICC3", "/ICC4", "/Pattern", "/Nope"])
+    arity = {"w": 1, "G": 1, "RG": 3, "K": 4, "g": 1, "rg": 3, "k": 4,
+             "m": 2, "l": 2, "c": 6, "v": 4, "y": 4, "re": 4, "cm": 6, "Td": 2,
+             "Tz": 1, "Tc": 1, "Tr": 1}
+    simple = ["h", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "n", "W", "W*",
+              "q", "Q", "BT", "ET", "T*"]
+
+    def operands(k):
+        return st.one_of(st.lists(num, min_size=k, max_size=k),
+                         st.lists(st.one_of(num, junk), max_size=k + 1))
+
+    instr = st.one_of(
+        st.sampled_from(list(arity)).flatmap(
+            lambda op: operands(arity[op]).map(lambda a: (a, op))),
+        st.sampled_from(simple).map(lambda op: ([], op)),
+        st.tuples(st.sampled_from(["SC", "SCN", "sc", "scn"]),
+                  st.sampled_from([1, 3, 4]), st.booleans()).flatmap(
+            lambda t: operands(t[1]).map(
+                lambda a: (a + (["/P0"] if t[2] else []), t[0]))),
+        st.tuples(st.sampled_from(["CS", "cs"]), st.one_of(cs_name, junk)).map(
+            lambda t: ([t[1]], t[0])),
+        st.sampled_from([(["/F1", "10"], "Tf"), (["/F1"], "Tf"), (["(AB C)"], "Tj"),
+                         (["[(A) -250 (BC)]"], "TJ"), (["(D)"], "'"),
+                         (["/Fm1"], "Do"), (["/Im1"], "Do")]),
+    )
+    # text and path runs, so most streams emit cells and shapes
+    text_run = st.tuples(st.lists(num, min_size=2, max_size=2), st.sampled_from(
+        [["(AB C)"], ["(D)"]])).map(
+        lambda t: [([], "BT"), (["/F1", "10"], "Tf"), (t[0], "Td"), (t[1], "Tj"), ([], "ET")])
+    path_run = st.tuples(
+        st.lists(num, min_size=4, max_size=4),
+        st.sampled_from(["S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "n"]),
+    ).map(lambda t: [(t[0], "re"), (t[0][:2], "m"), (t[0][2:], "l"), ([], t[1])])
+    colour = st.sampled_from(["G", "RG", "K", "g", "rg", "k"]).flatmap(
+        lambda op: st.lists(num, min_size=arity[op], max_size=arity[op]).map(
+            lambda a: [(a, op)]))
+    chunk = st.one_of(instr.map(lambda i: [i]), text_run, path_run, colour)
+    stream = st.lists(chunk, max_size=24).map(lambda cs: [i for c in cs for i in c])
+    return st.tuples(stream, stream)
+
+
+def _render(instrs, strip: bool) -> bytes:
+    return " ".join(
+        " ".join(args + ["EX" if strip and op in _STROKE_ONLY else op])
+        for args, op in instrs
+    ).encode()
+
+
+def test_stroke_only_operators_change_no_output():
+    """Replacing every stroke-only operator by the no-op ``EX`` (same
+    instruction count, so ``instr_count`` lines up) leaves the spans, every
+    cell field and the shapes' geometry, paint flags and fill colour of
+    ``decode_page(emit_shapes=True)`` unchanged, for char and word cells."""
+    from hypothesis import given, settings
+
+    from docling_parse_spark.pdf.page import DecodeConfig, decode_page
+
+    colorspaces = {"ICC1": 1, "ICC3": 3, "ICC4": 4}
+
+    @settings(max_examples=400, deadline=None, derandomize=True)
+    @given(_stroke_mix_streams())
+    def check(streams):
+        page, form = streams
+        outs = []
+        for strip in (False, True):
+            forms = {"Fm1": {"ops": tokenize(_render(form, strip)),
+                             "matrix": (1, 0, 0, 1, 5, 5)}}
+            for unit in ("char", "word"):
+                res = decode_page(_render(page, strip), helv(), images={"Im1": "m1"},
+                                  forms=forms, colorspaces=colorspaces,
+                                  config=DecodeConfig(output_unit=unit, emit_shapes=True))
+                outs.append((
+                    res.failed, res.spans,
+                    [tuple(getattr(c, f) for f in _CELL_FIELDS) for c in res.cells],
+                    [(s.points, s.stroked, s.filled, s.rgb_filling, s.instr_count)
+                     for s in res.shapes],
+                ))
+        assert outs[:2] == outs[2:]
+
+    check()
