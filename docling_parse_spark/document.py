@@ -62,7 +62,7 @@ from time import perf_counter as _clock
 
 from docling_parse_spark.web.boilerplate import extract_html_spans
 from docling_parse_spark.pdf.filters import apply_filters
-from docling_parse_spark.pdf.fonts import Font
+from docling_parse_spark.pdf.fonts import _MAX_NESTING, Font, _loads  # noqa: F401 (the bound named above)
 from docling_parse_spark.pdf.page import (
     DecodeConfig,
     build_fonts,
@@ -92,28 +92,6 @@ def parse_media_ref(media_ref: str) -> tuple[int, str] | None:
     if not m:
         return None
     return int(m.group(1)), m.group(2)
-
-
-# deepest container nesting of a resource span the reader accepts: far under
-# the recursion limit, so no read or write of it depends on the stack depth
-_MAX_NESTING = 64
-
-
-def _nesting_ok(v, left: int) -> bool:
-    """Whether a decoded JSON value nests at most ``left`` containers deep."""
-    if isinstance(v, dict):
-        v = v.values()
-    elif not isinstance(v, list):
-        return True
-    return left > 0 and all(_nesting_ok(x, left - 1) for x in v)
-
-
-def _loads(text: str):
-    """``json.loads`` for a resource span; ValueError past ``_MAX_NESTING``."""
-    v = json.loads(text)
-    if not _nesting_ok(v, _MAX_NESTING):
-        raise ValueError(f"resource span nested deeper than {_MAX_NESTING}")
-    return v
 
 
 def build_doc_resources(spans: list[dict]) -> dict:

@@ -32,12 +32,6 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def pii_count(c: Column, kind: str) -> Column:
-    """Number of matches of one PII category in ``c``."""
-    pattern = dict(PII_PATTERNS)[kind]
-    return F.size(F.regexp_extract_all(c, F.lit(pattern), 0))
-
-
 def redact_pii(c: Column) -> Column:
     """Replace every PII match with ``[KIND]`` placeholders, applying the
     categories in :data:`PII_PATTERNS` order (specific before generic).

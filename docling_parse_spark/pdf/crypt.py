@@ -281,15 +281,6 @@ class _EvpCbc:
             self.ctx = None
 
 
-def _evp_cbc(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes | None:
-    """One AES-CBC call (no padding) through ``_EvpCbc``; None where
-    libcrypto does not load."""
-    if _load_evp() is None:
-        return None
-    with _EvpCbc(len(key), encrypt, len(data)) as cbc:
-        return cbc(key, iv, data)
-
-
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """AES-CBC encrypt, NO padding (caller aligns). Any bytes-like input;
     ctypes binds only ``bytes`` to the EVP arguments."""

@@ -10,16 +10,18 @@ src/parse/pdf_resources/page_font.h:461-661) from public PDF-spec semantics:
 * code -> Unicode precedence (reference: page_font.h:543-618):
   /Encoding /Differences glyph name -> /ToUnicode CMap -> base encoding
   table -> Standard fallback -> ``GLYPH<c>`` notdef marker.
-* ``keep_glyphs=False`` squashes unresolved ``GLYPH<...>`` to a single space
-  (reference: text.h:423-436, config.h:52).
+* the interpreter's ``decode_glyph`` squashes an unresolved ``GLYPH<...>``
+  to a single space (reference: text.h:423-436, config.h:52);
+  ``get_string(keep_glyphs=True)`` keeps the marker.
 * width resolution (reference: page_font.h:313-366,1784-1870): /Widths +
-  /FirstChar for simple fonts; /W + /DW for CID fonts; space width defaults
-  to 500/1000 em when unresolvable.
+  /FirstChar for simple fonts; /W + /DW for CID fonts; an unresolvable width
+  defaults to 500/1000 em.
 
 Font descriptors arrive as JSON blobs (one per font) on ``kind='pdf_font'``
-spans; tables below are built once per executor and broadcast-equivalent
-(module-level constants — the reference loads its resource dir once per
-process, page_font.h:212-275).
+spans, read through ``_loads`` (bounded nesting, shared with the other
+resource spans' reader in ``document.py``); tables below are built once per
+executor and broadcast-equivalent (module-level constants — the reference
+loads its resource dir once per process, page_font.h:212-275).
 """
 
 from __future__ import annotations
@@ -179,6 +181,28 @@ def parse_cmap(text: str) -> tuple[dict[int, str], set[int]]:
     return mapping, code_lengths
 
 
+# deepest container nesting of a resource span the reader accepts: far under
+# the recursion limit, so no read or write of it depends on the stack depth
+_MAX_NESTING = 64
+
+
+def _nesting_ok(v, left: int) -> bool:
+    """Whether a decoded JSON value nests at most ``left`` containers deep."""
+    if isinstance(v, dict):
+        v = v.values()
+    elif not isinstance(v, list):
+        return True
+    return left > 0 and all(_nesting_ok(x, left - 1) for x in v)
+
+
+def _loads(text: str):
+    """``json.loads`` for a resource span; ValueError past ``_MAX_NESTING``."""
+    v = json.loads(text)
+    if not _nesting_ok(v, _MAX_NESTING):
+        raise ValueError(f"resource span nested deeper than {_MAX_NESTING}")
+    return v
+
+
 # --- font model ------------------------------------------------------------
 
 NOTDEF_FMT = "GLYPH<c={}>"
@@ -227,21 +251,21 @@ class Font:
     # name-keyed widths from an embedded CFF (pdf/cff.py) or bare Type1
     # (pdf/type1.py) program
     cff_widths: dict | None = None
-    # (code, nbytes, keep_glyphs) -> (string, width) memo: the resolve chain
+    # (code, nbytes) -> (string, width, ltr) memo: the resolve chain
     # walks several dict fallbacks per glyph and Tj streams repeat codes
     # heavily; fonts are cached per resources blob across a partition's
     # pages, so the memo amortizes across the whole batch
     _memo: dict = field(default_factory=dict, repr=False, compare=False)
-    _space_w: float | None = field(default=None, repr=False, compare=False)
 
-    def decode_glyph(self, code: int, nbytes: int, keep_glyphs: bool) -> tuple[str, float, bool]:
-        """Memoized (get_string, get_width, is_ltr) — the per-glyph hot path
-        (string resolve walks several dict fallbacks, the RTL classifier
-        scans unicode ranges; Tj streams repeat codes heavily)."""
-        key = (code, nbytes, keep_glyphs)
+    def decode_glyph(self, code: int, nbytes: int) -> tuple[str, float, bool]:
+        """Memoized (get_string, get_width, is_ltr) with the production
+        squash — the per-glyph hot path (string resolve walks several dict
+        fallbacks, the RTL classifier scans unicode ranges; Tj streams
+        repeat codes heavily)."""
+        key = (code, nbytes)
         hit = self._memo.get(key)
         if hit is None:
-            s = self.get_string(code, keep_glyphs, nbytes)
+            s = self.get_string(code, False, nbytes)
             hit = (s, self.get_width(code, nbytes), not _is_rtl(s))
             self._memo[key] = hit
         return hit
@@ -355,18 +379,12 @@ class Font:
             return w
         return 500.0  # space/unknown default (page_font.h:313-381)
 
-    @property
-    def space_width(self) -> float:
-        if self._space_w is None:
-            w = self.get_width(32)
-            self._space_w = w if w > 0 else 500.0
-        return self._space_w
-
 
 def font_from_json(blob: str) -> Font:
     """Build a Font from the corpus's ``pdf_font`` JSON descriptor
-    (schema documented in FIXTURES.md §1)."""
-    d = json.loads(blob)
+    (schema documented in FIXTURES.md §1); ValueError for one nested
+    deeper than ``_MAX_NESTING``."""
+    d = _loads(blob)
     to_uni: dict[int, str] = {}
     lengths: set[int] = set()
     if d.get("to_unicode"):

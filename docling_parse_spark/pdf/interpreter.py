@@ -10,12 +10,13 @@ content-stream execution order, text.h:308-323).
 Matrices are affine 6-tuples ``(a, b, c, d, e, f)`` mapping row vectors:
 ``(x, y) -> (a*x + c*y + e, b*x + d*y + f)`` — the PDF convention.
 
-Operator coverage (SURVEY.md §2.A): q Q cm / w J j M d ri i gs / color ops
-(G g RG rg K k CS cs SC SCN sc scn) / BT ET / Tc Tw Tz TL Tf Tr Ts /
+Operator coverage (SURVEY.md §2.A): q Q cm / fill color ops
+(g rg k cs sc scn) / BT ET / Tc Tw Tz TL Tf Tr Ts /
 Td TD Tm T* / Tj TJ ' " / path m l c v y h re / paint s S f F f* B B* b b* n /
 clip W W* / Do (image + recursive form) / BI ID EI (no-op, matching the
-reference's skip at stream.h:779-795) / BMC BDC EMC MP DP BX EX sh d0 d1
-(no-ops) / unknown-operator counting (stream.h:1116-1127).
+reference's skip at stream.h:779-795) / BMC BDC EMC MP DP BX EX sh d0 d1,
+line state w J j M d ri i gs and stroke color G RG K CS SC SCN (no-ops:
+no output reads them) / unknown-operator counting (stream.h:1116-1127).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field, replace
 
-from docling_parse_spark.pdf.fonts import Font, _is_rtl  # noqa: F401 (re-export)
+from docling_parse_spark.pdf.fonts import Font
 
 IDENTITY = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 # nested form XObjects are run at most this deep (a self-referencing /Do
@@ -72,13 +73,10 @@ class Cell:
     rendering_mode: int = 0
     font_key: str = ""
     font_name: str = ""
-    space_width: float = 500.0
-    widget: bool = False
     left_to_right: bool = True
     rgb_filling: tuple = (0, 0, 0)
     block_count: int = 0
     instr_count: int = 0
-    stack_size: int = 0
     active: bool = True
 
     @property
@@ -102,10 +100,6 @@ class Cell:
         dy = self.r_y1 - self.r_y0
         return math.sqrt(dx * dx + dy * dy)
 
-    def avg_char_width(self) -> float:
-        n = max(1, len(self.text))
-        return self.width() / n
-
     def clone(self) -> "Cell":
         c = Cell.__new__(Cell)
         c.text = self.text
@@ -116,13 +110,10 @@ class Cell:
         c.rendering_mode = self.rendering_mode
         c.font_key = self.font_key
         c.font_name = self.font_name
-        c.space_width = self.space_width
-        c.widget = self.widget
         c.left_to_right = self.left_to_right
         c.rgb_filling = self.rgb_filling
         c.block_count = self.block_count
         c.instr_count = self.instr_count
-        c.stack_size = self.stack_size
         c.active = self.active
         return c
 
@@ -143,9 +134,6 @@ class ShapeItem:
     points: list = field(default_factory=list)  # [(x, y), ...]
     stroked: bool = False
     filled: bool = False
-    even_odd: bool = False
-    line_width: float = 1.0
-    rgb_stroking: tuple = (0, 0, 0)
     rgb_filling: tuple = (0, 0, 0)
     instr_count: int = 0
 
@@ -167,12 +155,9 @@ class TextState:
 @dataclass
 class GraphicsState:
     ctm: tuple = IDENTITY
-    line_width: float = 1.0
-    stroke_rgb: tuple = (0, 0, 0)
     fill_rgb: tuple = (0, 0, 0)
-    # active colorspace component counts (None = unknown family; SC/SCN
+    # active fill colorspace component count (None = unknown family; sc/scn
     # then falls back to interpreting by operand arity)
-    stroke_cs_n: int | None = None
     fill_cs_n: int | None = None
     clip: tuple | None = None  # axis-aligned bbox or None = unclipped
     text: TextState = field(default_factory=TextState)
@@ -248,10 +233,9 @@ class PageInterpreter:
                     self.gs = self.stack.pop()
             elif op == "cm":
                 g.ctm = mat_mul(tuple(args[:6]), g.ctm)
-            elif op == "w":
-                g.line_width = args[0]
-            elif op in ("J", "j", "M", "d", "ri", "i", "gs"):
-                pass  # tracked by the reference's grph state; no output effect here
+            elif op in ("w", "J", "j", "M", "d", "ri", "i", "gs",
+                        "G", "RG", "K", "CS", "SC", "SCN"):
+                pass  # line and stroking-colour state: no output reads it
             elif op == "BT":
                 t.tm = IDENTITY
                 t.tlm = IDENTITY
@@ -307,37 +291,31 @@ class PageInterpreter:
                 t.char_spacing = args[1]
                 self._dispatch("T*", [], depth)
                 self._show_text(args[2])
-            elif op in ("G", "g"):
-                rgb = _gray_to_rgb(args[0])
-                (g.__setattr__("stroke_rgb", rgb) if op == "G" else g.__setattr__("fill_rgb", rgb))
-            elif op in ("RG", "rg"):
-                rgb = tuple(int(round(255 * v)) for v in args[:3])
-                (g.__setattr__("stroke_rgb", rgb) if op == "RG" else g.__setattr__("fill_rgb", rgb))
-            elif op in ("K", "k"):
-                rgb = _cmyk_to_rgb(*args[:4])
-                (g.__setattr__("stroke_rgb", rgb) if op == "K" else g.__setattr__("fill_rgb", rgb))
-            elif op in ("CS", "cs"):
+            elif op == "g":
+                g.fill_rgb = _gray_to_rgb(args[0])
+            elif op == "rg":
+                g.fill_rgb = tuple(int(round(255 * v)) for v in args[:3])
+            elif op == "k":
+                g.fill_rgb = _cmyk_to_rgb(*args[:4])
+            elif op == "cs":
                 # colorspace family selection: device/CIE names resolve
                 # directly; resource keys (ICCBased et al.) resolve through
                 # the page's ColorSpace resources, where an /ICCBased /N of
                 # 1/3/4 maps to the gray/RGB/CMYK device family (reference
-                # page_colorspace.h:121-145). Final RGB is set by SC/SCN.
+                # page_colorspace.h:121-145). Final RGB is set by sc/scn.
                 name = args[0] if args else None
                 n = None
                 if isinstance(name, str):
                     n = _CS_NAME_COMPONENTS.get(name)
                     if n is None:
                         n = self.colorspaces.get(name)
-                if op == "CS":
-                    g.stroke_cs_n = n
-                else:
-                    g.fill_cs_n = n
-            elif op in ("SC", "SCN", "sc", "scn"):
+                g.fill_cs_n = n
+            elif op in ("sc", "scn"):
                 nums = [a for a in args if isinstance(a, (int, float))]
                 # the ACTIVE colorspace decides the interpretation when
                 # known (an ICC /N 4 space with 4 operands is CMYK even if
                 # a pattern name trails); arity is the fallback
-                n = g.stroke_cs_n if op in ("SC", "SCN") else g.fill_cs_n
+                n = g.fill_cs_n
                 if n is not None and len(nums) >= n:
                     nums = nums[:n]
                 if len(nums) == 1:
@@ -348,7 +326,7 @@ class PageInterpreter:
                     rgb = tuple(int(round(255 * v)) for v in nums)
                 else:
                     rgb = (0, 0, 0)
-                (g.__setattr__("stroke_rgb", rgb) if op in ("SC", "SCN") else g.__setattr__("fill_rgb", rgb))
+                g.fill_rgb = rgb
             elif op == "m":
                 self._flush_subpath()
                 self._current = [mat_apply(g.ctm, args[0], args[1])]
@@ -382,10 +360,7 @@ class PageInterpreter:
         g = self.gs
         return GraphicsState(
             ctm=g.ctm,
-            line_width=g.line_width,
-            stroke_rgb=g.stroke_rgb,
             fill_rgb=g.fill_rgb,
-            stroke_cs_n=g.stroke_cs_n,
             fill_cs_n=g.fill_cs_n,
             clip=g.clip,
             text=replace(g.text),
@@ -401,9 +376,9 @@ class PageInterpreter:
         hoisted out of the loop (no other operator can execute mid-string, so
         text state, CTM, font metrics, colors and counters are constant): the
         tm·ctm product's a-d entries, the glyph-frame y extents
-        (rise + ascent/descent·fs), the scaled space width, and the state
-        snapshot fields. Only the product's e/f entries and the four corners
-        are recomputed per glyph — same float expressions as the old
+        (rise + ascent/descent·fs), and the font, fill-colour and counter
+        fields every cell copies. Only the product's e/f entries and the four
+        corners are recomputed per glyph — same float expressions as the old
         mat_mul-per-glyph path, so coordinates stay bit-identical."""
         g = self.gs
         t = g.text
@@ -435,21 +410,16 @@ class PageInterpreter:
         mcy0y = md * y0
         mcy1x = mc * y1
         mcy1y = md * y1
-        sw = (
-            font.space_width / 1000.0 if ws is None
-            else font.space_width * ws
-        ) * fs * h_scaling
         font_key = font.font_key
         font_name = font.base_font
         render_mode = t.render_mode
         fill_rgb = g.fill_rgb
         block_count = self.block_count
         instr_count = self.instr_count
-        stack_size = len(self.stack)
         cells_append = self.cells.append
         cell_new = Cell.__new__
         for code, nbytes in font.analyse_string(raw):
-            s, w, ltr = decode_glyph(code, nbytes, False)  # production squash
+            s, w, ltr = decode_glyph(code, nbytes)
             char_width = (w / 1000.0 if ws is None else w * ws) * fs * h_scaling
             spacing = char_spacing
             # word spacing applies to single-byte code 32 only (PDF 9.3.3)
@@ -463,7 +433,7 @@ class PageInterpreter:
                 cy0x, cy0y = mcy0x + e, mcy0y + f
                 cy1x, cy1y = mcy1x + e, mcy1y + f
                 wx, wy = ma * char_width, mb * char_width
-                # bypass the dataclass __init__ (19-kwarg parsing measured
+                # bypass the dataclass __init__ (17-kwarg parsing measured
                 # ~5x the cost of direct slot sets — once per output glyph)
                 cell = cell_new(Cell)
                 cell.text = s
@@ -474,13 +444,10 @@ class PageInterpreter:
                 cell.rendering_mode = render_mode
                 cell.font_key = font_key
                 cell.font_name = font_name
-                cell.space_width = sw
-                cell.widget = False
                 cell.left_to_right = ltr
                 cell.rgb_filling = fill_rgb
                 cell.block_count = block_count
                 cell.instr_count = instr_count
-                cell.stack_size = stack_size
                 cell.active = True
                 cells_append(cell)
             # translate(advance,0) premultiply, specialized: only e/f change
@@ -552,9 +519,6 @@ class PageInterpreter:
                             points=sp,
                             stroked=stroked,
                             filled=filled,
-                            even_odd=op in ("f*", "B*", "b*"),
-                            line_width=g.line_width,
-                            rgb_stroking=g.stroke_rgb,
                             rgb_filling=g.fill_rgb,
                             instr_count=self.instr_count,
                         )

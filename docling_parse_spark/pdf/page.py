@@ -62,25 +62,26 @@ class PageResult:
     timings: dict = field(default_factory=dict)
 
 
-def parse_page_descriptor(blob: str | None) -> dict:
-    """A pdf_page descriptor's JSON text -> its page geometry."""
-    try:
-        d = json.loads(blob) if blob else None
-    except (ValueError, TypeError):
-        d = None
-    return page_geometry(d)
+def _box(v) -> tuple:
+    """A page box as a 4-tuple; TypeError unless it is exactly four numbers."""
+    if isinstance(v, (list, tuple)) and len(v) == 4 and all(
+        isinstance(x, (int, float)) for x in v
+    ):
+        return tuple(v)
+    raise TypeError(f"page box is not four numbers: {v!r}")
 
 
 def page_geometry(d) -> dict:
     """A decoded pdf_page descriptor -> ``{media_box, crop_box, rotate}``;
-    anything that is not a well-formed descriptor gets the default page."""
+    anything that is not a well-formed descriptor (incl. a box that is not
+    four numbers) gets the default page."""
     default = {"media_box": DEFAULT_MEDIA_BOX, "crop_box": None, "rotate": 0}
     if not isinstance(d, dict):
         return default
     try:
         return {
-            "media_box": tuple(d.get("media_box", DEFAULT_MEDIA_BOX)),
-            "crop_box": tuple(d["crop_box"]) if d.get("crop_box") else None,
+            "media_box": _box(d.get("media_box", DEFAULT_MEDIA_BOX)),
+            "crop_box": _box(d["crop_box"]) if d.get("crop_box") else None,
             "rotate": int(d.get("rotate", 0)),
         }
     except (ValueError, TypeError, OverflowError):  # OverflowError: int(inf)

@@ -211,7 +211,7 @@ def _ends_with_ligature(c: Cell) -> bool:
     return bool(c.text) and (c.text[-1] in _LIGATURE_CHARS or c.text.endswith(("ffi", "ffl")))
 
 
-def _adjacent(a: Cell, b: Cell, factor: float, max_factor: float | None = None) -> bool:
+def _adjacent(a: Cell, b: Cell, factor: float) -> bool:
     """b continues a to the right: dist(bottom-right(a), bottom-left(b)) < ε0
     and dist(top-right(a), top-left(b)) < ε1 (cells.h:441-609); ε relaxed 2×
     after a ligature. Compares squared distances (equivalent for nonnegative
@@ -228,12 +228,7 @@ def _adjacent(a: Cell, b: Cell, factor: float, max_factor: float | None = None) 
     eps = avg * factor
     dx = b.r_x0 - a.r_x1
     dy = b.r_y0 - a.r_y1
-    d_bottom2 = dx * dx + dy * dy
-    if max_factor is not None:
-        cap = avg * max_factor
-        if d_bottom2 > cap * cap:
-            return False
-    if d_bottom2 >= eps * eps:
+    if dx * dx + dy * dy >= eps * eps:
         return False
     eps1 = eps * (2.0 if _ends_with_ligature(a) else 1.0)
     dx = b.r_x3 - a.r_x2
@@ -276,9 +271,9 @@ def _merge_pass_forward(cells: list[Cell], factor: float, block_spaces: bool, ga
     written back once when its run ends. Every cell the run passed over is
     inactive afterwards, so the scan resumes at the cell that ended it.
 
-    The word pass's space-barrier cap of :func:`_adjacent` is not tested:
-    the cap is ``avg * 2·factor``, at least eps in size, so a gap beyond it
-    fails the eps test as well."""
+    The word pass's space-barrier cap (``SPACE_BARRIER_FACTOR``) is not
+    tested: the cap is ``avg * 2·factor``, at least eps in size, so a gap
+    beyond it fails the eps test as well."""
     changed = False
     n = len(cells)
     sqrt = math.sqrt

@@ -3,10 +3,9 @@
 Analogs of the reference's outputs (SURVEY.md §2.D): the nested JSON document
 sink (parser.h:249-279), the textlines golden export
 (tests/test_parse.py:504-513), and the production table sink. Iceberg is the
-north-rule target catalog; this container has no Iceberg runtime jars, so
-``write_table`` uses the Iceberg writer when the session has an Iceberg
-catalog configured and falls back to plain parquet otherwise — the DataFrame
-API is identical either way.
+north-rule target catalog: ``write_table`` writes parquet unless the caller
+asks for Iceberg with ``fmt="iceberg"`` (which needs an Iceberg catalog
+and its runtime jars in the session).
 """
 
 from __future__ import annotations
@@ -17,53 +16,10 @@ TEXTLINE_SEPARATOR = "\t<|span|>\n"
 
 
 def write_table(
-    spans_df: DataFrame, target: str, mode: str = "overwrite", fmt: str | None = None
+    spans_df: DataFrame, target: str, mode: str = "overwrite", fmt: str = "parquet"
 ) -> str:
-    """Write the spans table. ``fmt`` makes the sink explicit: ``"iceberg"``
-    (``writeTo`` a table name) or ``"parquet"`` (a path). With ``fmt=None``
-    the legacy heuristic applies — Iceberg when the session has an Iceberg
-    catalog configured AND the target has no '/' — checking RUNTIME conf
-    first (``spark.conf``), since catalogs set after session build are
-    invisible to ``sparkContext.getConf()`` (round-4 review). Returns the
-    format used."""
-    spark = spans_df.sparkSession
-    if fmt is None:
-        conf_pairs = dict(spark.sparkContext.getConf().getAll())
-        # runtime-set catalog entries (spark.conf.set after build) don't
-        # appear in the static conf, and PySpark cannot ENUMERATE
-        # runtime-only keys — so re-read the static keys through the
-        # runtime conf AND probe the well-known catalog keys directly
-        # (ADVICE r4: a catalog configured purely via spark.conf.set was
-        # otherwise invisible). Callers wanting certainty pass fmt.
-        probe_keys = list(conf_pairs) + [
-            "spark.sql.catalog.spark_catalog",
-            "spark.sql.defaultCatalog",
-        ]
-        for k in probe_keys:
-            try:
-                v = spark.conf.get(k, conf_pairs.get(k))
-            except Exception:
-                continue
-            if v is not None:
-                conf_pairs[k] = v
-        # a runtime defaultCatalog under any NAME: probe its catalog key
-        # too, or the has_iceberg scan below never sees it (r5 review)
-        default_cat = conf_pairs.get("spark.sql.defaultCatalog")
-        if default_cat:
-            k = f"spark.sql.catalog.{default_cat}"
-            try:
-                v = spark.conf.get(k, None)
-                if v is not None:
-                    conf_pairs[k] = v
-            except Exception:
-                pass
-        has_iceberg = any(
-            k.startswith("spark.sql.catalog.") and "iceberg" in str(v).lower()
-            for k, v in conf_pairs.items()
-        ) or "iceberg" in str(
-            spark.conf.get("spark.sql.extensions", "") or ""
-        ).lower()
-        fmt = "iceberg" if has_iceberg and "/" not in target else "parquet"
+    """Write the spans table as ``fmt``: ``"parquet"`` (a path) or
+    ``"iceberg"`` (``writeTo`` a table name). Returns the format used."""
     if fmt == "iceberg":
         writer = spans_df.writeTo(target)
         (writer.createOrReplace() if mode == "overwrite" else writer.append())

@@ -96,7 +96,7 @@ def test_simple_width_lookup():
 
 def test_space_width():
     f = mk(first_char=32, widths=[278.0])
-    assert f.space_width == 278.0
+    assert f.get_width(32) == 278.0
 
 
 def test_word_spacing_only_simple_encodings():
@@ -173,7 +173,7 @@ def test_embedded_truetype_widths():
            font_program=ttf)
     assert f.get_width(ord("a")) == 610.0
     assert f.get_width(ord("W")) == 990.0
-    assert f.space_width == 240.0
+    assert f.get_width(32) == 240.0
     assert f.get_width(ord("!")) == 500.0  # not in program -> default
 
 
@@ -212,7 +212,7 @@ def test_embedded_cff_widths():
     f = mk(base_font="Embedded-CFF", subtype="Type1", widths=[],
            font_program=cff)
     assert f.get_width(ord("A")) == 722.0
-    assert f.space_width == 250.0
+    assert f.get_width(32) == 250.0
     assert f.get_width(0xE9) == 444.0  # WinAnsi 0xE9 -> eacute
     # name not in program: falls through to the 500 default (non-base-14)
     assert f.get_width(ord("z")) == 500.0
@@ -230,7 +230,7 @@ def test_embedded_type1_widths():
     ).decode()
     f = mk(base_font="Embedded-T1", subtype="Type1", widths=[], font_program=pfb)
     assert f.get_width(ord("A")) == 722.0
-    assert f.space_width == 250.0
+    assert f.get_width(32) == 250.0
     assert f.get_width(0xE9) == 444.0
     assert f.get_width(ord("z")) == 500.0  # absent glyph -> default
 

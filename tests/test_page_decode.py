@@ -2,7 +2,9 @@
 
 import json
 
-from docling_parse_spark.pdf.page import DecodeConfig, build_fonts, decode_page, parse_page_descriptor
+import pytest
+
+from docling_parse_spark.pdf.page import DecodeConfig, build_fonts, decode_page, page_geometry
 
 
 FONT = json.dumps({
@@ -36,7 +38,7 @@ def test_line_unit():
 
 def test_rotation_page():
     fonts = build_fonts([FONT])
-    desc = parse_page_descriptor(json.dumps({"media_box": [0, 0, 612, 792], "rotate": 90}))
+    desc = page_geometry(json.loads(json.dumps({"media_box": [0, 0, 612, 792], "rotate": 90})))
     res = decode_page(b"BT /F1 12 Tf 72 720 Td (Rot) Tj ET", fonts, page_desc=desc)
     assert [s[1] for s in res.spans] == ["Rot"]
 
@@ -51,9 +53,9 @@ def test_crop_box_translation():
     import math
 
     fonts = build_fonts([FONT])
-    desc = parse_page_descriptor(json.dumps(
+    desc = page_geometry(json.loads(json.dumps(
         {"media_box": [0, 0, 612, 792], "crop_box": [50, 40, 562, 752], "rotate": 0}
-    ))
+    )))
     res = decode_page(b"BT /F1 10 Tf 100 700 Td (C) Tj ET", fonts, page_desc=desc)
     assert [s[1] for s in res.spans] == ["C"]
     # verify via the cell table that coordinates shifted by the crop origin
@@ -95,7 +97,7 @@ def test_infinite_rotate_gets_the_default_page():
     decodes instead of raising OverflowError."""
     from docling_parse_spark.document import decode_document
 
-    assert parse_page_descriptor('{"rotate": 1e400}') == parse_page_descriptor(None)
+    assert page_geometry(json.loads('{"rotate": 1e400}')) == page_geometry(None)
     spans = [
         {"kind": "pdf_font", "text": FONT, "media_ref": None, "offset": 0},
         {"kind": "pdf_page", "text": '{"page": 0, "rotate": 1e400}', "media_ref": None,
@@ -184,3 +186,53 @@ def test_resources_nested_near_the_limit_ship_like_the_oracle():
 
     assert page_desc(_MAX_NESTING - 1) == {"rotate": 90}
     assert page_desc(_MAX_NESTING) is None
+
+
+def test_font_nested_past_the_bound_fails_its_unit_on_both_paths():
+    """A ``pdf_font`` blob reads through the same bounded loader as the
+    other resource spans: one nested past ``_MAX_NESTING`` fails its unit
+    (``font: ...``) in the oracle and on the shipped path run 40 frames
+    deeper alike, where a bare ``json.loads`` decoded it in the oracle and
+    failed it only on the deeper stack; one at the bound decodes on both."""
+    from docling_parse_spark.document import (
+        _MAX_NESTING,
+        decode_document,
+        decode_unit,
+        doc_to_units,
+    )
+
+    ops = {"kind": "pdf_ops", "text": "BT /F1 12 Tf 72 700 Td (hi) Tj ET", "media_ref": None,
+           "offset": 1}
+    for depth, want in ((_MAX_NESTING - 1, ["hi"]), (100, []), (960, [])):
+        font = FONT[:-1] + ', "junk": ' + "[" * depth + "]" * depth + "}"
+        spans = [{"kind": "pdf_font", "text": font, "media_ref": None, "offset": 0}, ops]
+        results = [
+            _deeper(40, decode_unit, u["unit_kind"], u["payload"], u["page"], u["resources"])
+            for u in _deeper(40, doc_to_units, "d", spans)
+        ]
+        shipped = [t for ur in results for _, _, t, _ in ur.spans]
+        assert shipped == [s["text"] for s in decode_document("d", spans)] == want, depth
+        assert all(ur.error.startswith("font: ") for ur in results) == (not want), depth
+
+
+@pytest.mark.parametrize("desc", [
+    {"media_box": [0, 0, 612]},
+    {"media_box": ["0", "0", "612", "792"]},
+    {"media_box": "abcd"},
+    {"media_box": [0, 0, 612, 792], "crop_box": [1, 2]},
+])
+def test_malformed_page_box_gets_the_default_page(desc):
+    """A descriptor whose media or crop box is not four numbers gets the
+    default page, so the page decodes like the same doc with no descriptor
+    instead of failing with IndexError/TypeError."""
+    from docling_parse_spark.document import decode_document
+
+    def doc(*extra):
+        return [{"kind": "pdf_font", "text": FONT, "media_ref": None, "offset": 0}, *extra,
+                {"kind": "pdf_ops", "text": "BT /F1 12 Tf 72 700 Td (box) Tj ET",
+                 "media_ref": None, "offset": 2}]
+
+    page = {"kind": "pdf_page", "text": json.dumps({"page": 0, "rotate": 90, **desc}),
+            "media_ref": None, "offset": 1}
+    assert decode_document("d", doc(page)) == decode_document("d", doc())
+    assert [s["text"] for s in decode_document("d", doc())] == ["box"]

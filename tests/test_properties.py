@@ -232,7 +232,7 @@ def test_corrupt_font_programs_degrade_to_fallback_widths(prog):
     f = build_fonts([_font_blob_with_program(prog)])["F1"]
     w = f.get_width(65)
     assert isinstance(w, float) and w >= 0.0
-    s, w2, ltr = f.decode_glyph(65, 1, False)
+    s, w2, ltr = f.decode_glyph(65, 1)
     assert isinstance(s, str) and isinstance(w2, float) and isinstance(ltr, bool)
 
 
