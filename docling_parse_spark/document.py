@@ -62,7 +62,7 @@ from time import perf_counter as _clock
 
 from docling_parse_spark.web.boilerplate import extract_html_spans
 from docling_parse_spark.pdf.filters import apply_filters
-from docling_parse_spark.pdf.fonts import _MAX_NESTING, Font, _loads  # noqa: F401 (the bound named above)
+from docling_parse_spark.pdf.fonts import _MAX_NESTING, Font, _loads  # noqa: F401 (re-export: the bound the reader applies)
 from docling_parse_spark.pdf.page import (
     DecodeConfig,
     build_fonts,
