@@ -309,6 +309,12 @@ def decode_unit(
     )
 
 
+def _outline_page(page) -> int:
+    """An outline node's page: a number in the int column's range, else 0
+    (like a missing page; NaN and the infinities compare out of range)."""
+    return int(page) if isinstance(page, (int, float)) and -(1 << 31) <= page < 1 << 31 else 0
+
+
 def doc_meta(spans: list[dict]) -> dict:
     """Document-level metadata record (reference: XMP meta + outline tree +
     AcroForm dict, document.h:140-181, docling_parse/pdf_parser.py:796-899).
@@ -317,7 +323,8 @@ def doc_meta(spans: list[dict]) -> dict:
       modified} (the XMP/docinfo analog).
     * ``pdf_outline`` span: JSON nested tree [{title, page, children: [...]}]
       -> flattened preorder (level, title, page) rows (Spark has no recursive
-      struct type; preorder + level is lossless).
+      struct type; preorder + level is lossless). A page that is not a
+      finite number in int range reads as 0, like a missing one.
     * AcroForm summary derived from widget annotations (field names).
     """
     meta = {"title": None, "author": None, "subject": None,
@@ -325,36 +332,30 @@ def doc_meta(spans: list[dict]) -> dict:
     outline: list[tuple[int, str, int]] = []
     fields: list[str] = []
     for s in spans:
-        if s["kind"] == "pdf_meta" and s.get("text"):
-            try:
-                d = json.loads(s["text"])
-                if isinstance(d, dict):
-                    for k in meta:
-                        if d.get(k) is not None:
-                            meta[k] = str(d[k])
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                pass
-        elif s["kind"] == "pdf_outline" and s.get("text"):
-            try:
-                tree = json.loads(s["text"])
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                continue
+        kind, text = s["kind"], s.get("text")
+        if kind not in ("pdf_meta", "pdf_outline", "pdf_annot") or not text:
+            continue
+        try:
+            d = _loads(text)
+        except ValueError:
+            continue
+        if kind == "pdf_meta" and isinstance(d, dict):
+            for k in meta:
+                if d.get(k) is not None:
+                    meta[k] = str(d[k])
+        elif kind == "pdf_outline":
 
             def walk(nodes, level):
                 for n in nodes if isinstance(nodes, list) else []:
                     if not isinstance(n, dict):
                         continue
-                    outline.append((level, str(n.get("title") or ""), int(n.get("page") or 0)))
+                    outline.append((level, str(n.get("title") or ""), _outline_page(n.get("page"))))
                     walk(n.get("children") or [], level + 1)
 
-            walk(tree, 0)
-        elif s["kind"] == "pdf_annot" and s.get("text"):
-            try:
-                a = json.loads(s["text"])
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                continue
-            if isinstance(a, dict) and a.get("subtype") == "widget" and a.get("field"):
-                fields.append(str(a["field"]))
+            walk(d, 0)
+        elif kind == "pdf_annot" and isinstance(d, dict):
+            if d.get("subtype") == "widget" and d.get("field"):
+                fields.append(str(d["field"]))
     return {"meta": meta, "outline": outline, "fields": fields}
 
 

@@ -1,7 +1,8 @@
 """The distributed extraction pipeline: docs table -> spans table + metrics.
 
 Plan shape (SURVEY.md §7, Catalyst-friendly — scan → route → shuffle →
-decode → groupBy → stamp → sink). Every Python step is a ``mapInArrow``:
+decode → groupBy → stamp → sink). The two Python steps, route and decode,
+are ``mapInArrow`` passes; reassembly runs in the JVM:
 
 1. ``route_units``: docs with <= ``heavy_span_threshold`` input spans pass
    through whole as one ``'__doc__'`` row — an Arrow slice that never turns
@@ -23,8 +24,9 @@ decode → groupBy → stamp → sink). Every Python step is a ``mapInArrow``:
    ``extract_cells`` emits cell rows from the same loop.
 4. ``reassemble``: ``groupBy(doc_id).agg(sort_array(collect_list(struct(page,
    unit_spans))))`` — deterministic content order from the (page) key, never
-   from partition arrival order — then one Arrow pass flattens and stamps
-   dense offsets.
+   from partition arrival order — then one Catalyst projection flattens
+   the page arrays and stamps dense offsets (``flatten``, ``sequence``,
+   ``arrays_zip``): no Python, no per-batch offsets.
 
 Metrics (pages_parsed / cells_emitted / decode_failures / per-stage ms per
 partition) are derived relationally from the same decoded rows.
@@ -39,6 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_parse_spark.document import decode_unit, doc_to_units
 from docling_parse_spark.pdf.page import DecodeConfig
+from docling_parse_spark.schemas import SPAN_SCHEMA, SPANS_TABLE_SCHEMA, UNIT_SPAN_SCHEMA
 
 # per-stage timing keys, one metrics column each (reference pdf_timings
 # parity, src/parse/utils/pdf_timings.h:32-99: decode_resources,
@@ -48,10 +51,7 @@ STAGE_KEYS = ("resources", "tokenize", "interpret", "dedup", "sanitize", "words"
               "order", "annots", "html")
 
 # one row per decoded unit: the unit's ordered span array
-DECODED_DDL = (
-    "doc_id string, page int, "
-    "unit_spans array<struct<kind:string,text:string,media_ref:string>>"
-)
+DECODED_DDL = f"doc_id string, page int, unit_spans array<{UNIT_SPAN_SCHEMA.simpleString()}>"
 METRICS_DECODED_DDL = (
     DECODED_DDL + ", cells int, failed boolean, decode_ms double, "
     + ", ".join(f"{k}_ms double" for k in STAGE_KEYS)
@@ -65,7 +65,7 @@ METRICS_DECODED_DDL = (
 # completion-order results the same way: docling_parse/pdf_parser.py:1583-1602)
 ROUTED_DDL = (
     "doc_id string, page int, unit_kind string, payload string, resources string, "
-    "doc_spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    f"doc_spans array<{SPAN_SCHEMA.simpleString()}>"
 )
 
 
@@ -275,84 +275,23 @@ def reassemble(decoded_df: DataFrame) -> DataFrame:
     index-stamp; failed units contribute an empty array but keep the doc in
     the output).
 
-    The grouping + page-sort stay JVM-side (one exchange +
-    ObjectHashAggregate, exactly as before); the flatten + offset stamping
-    moved from higher-order ``transform`` expressions — which Spark
-    interprets per element, ~9M lambda evaluations at the sf1.0 bench — to
-    one vectorized Arrow pass: flatten is an offsets-array operation on the
-    existing buffers and the dense offsets are one arange minus a repeat
-    (guide §4.2's re-slice-don't-rebuild property). Span order and offset
-    values are identical by construction: pages arrive sorted by the page
-    key from sort_array, flatten preserves order, and the stamped offset is
-    the span's position in that order — the same value the old
-    transform's index lambda produced."""
+    One exchange + ObjectHashAggregate groups a doc's units, then one
+    Catalyst projection (no Python): ``flatten`` keeps the page order
+    ``sort_array`` gave, ``sequence(0, size - 1)`` is each span's position
+    in that order (empty for a doc with no spans), and ``arrays_zip`` pairs
+    it with the span fields under the span struct's names."""
     pages = F.sort_array(F.collect_list(F.struct("page", "unit_spans")))
     grouped = decoded_df.groupBy("doc_id").agg(pages.alias("pages"))
-
-    def stamp(batches):
-        import numpy as _np
-        import pyarrow as pa
-
-        out_schema = None
-        for batch in batches:
-            doc = batch.column("doc_id")
-            pages_col = batch.column("pages")
-            if out_schema is None:
-                span_t = pa.struct(
-                    [("kind", pa.string()), ("text", pa.string()),
-                     ("media_ref", pa.string()), ("offset", pa.int32())]
-                )
-                out_schema = pa.schema(
-                    [("doc_id", pa.string()), ("spans", pa.list_(span_t))]
-                )
-                span_fields = [span_t.field(i) for i in range(4)]
-            n = batch.num_rows
-            units = pages_col.flatten()  # struct<page, unit_spans>, doc order kept
-            unit_spans = units.field("unit_spans")
-            spans_flat = unit_spans.flatten()  # struct3, global span order
-            # spans per doc = sum of its units' span counts (pure offsets math)
-            units_per_doc = pa.compute.list_value_length(pages_col).to_numpy(
-                zero_copy_only=False
-            )
-            spans_per_unit = pa.compute.list_value_length(unit_spans).to_numpy(
-                zero_copy_only=False
-            )
-            # NULL unit_spans cannot occur (decode always emits an array),
-            # but degrade deterministically if one did
-            spans_per_unit = _np.nan_to_num(spans_per_unit).astype(_np.int64)
-            unit_bounds = _np.zeros(n + 1, dtype=_np.int64)
-            _np.cumsum(_np.nan_to_num(units_per_doc).astype(_np.int64),
-                       out=unit_bounds[1:])
-            span_cum = _np.zeros(len(spans_per_unit) + 1, dtype=_np.int64)
-            _np.cumsum(spans_per_unit, out=span_cum[1:])
-            doc_bounds = span_cum[unit_bounds]  # span start per doc boundary
-            spans_per_doc = doc_bounds[1:] - doc_bounds[:-1]
-            total = int(doc_bounds[-1])
-            # dense per-doc offsets: global position minus the doc's start
-            off = _np.arange(total, dtype=_np.int32) - _np.repeat(
-                doc_bounds[:-1], spans_per_doc
-            ).astype(_np.int32)
-            stamped = pa.StructArray.from_arrays(
-                [
-                    spans_flat.field("kind"),
-                    spans_flat.field("text"),
-                    spans_flat.field("media_ref"),
-                    pa.array(off, pa.int32()),
-                ],
-                fields=span_fields,
-            )
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(doc_bounds, pa.int32()), stamped
-            )
-            yield pa.RecordBatch.from_arrays([doc, spans_arr], schema=out_schema)
-
-    return grouped.mapInArrow(
-        stamp,
-        schema=(
-            "doc_id string, spans array<struct<"
-            "kind:string,text:string,media_ref:string,offset:int>>"
-        ),
-    )
+    spans = F.flatten("pages.unit_spans")
+    n = F.size(spans)
+    offsets = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(F.array())
+    fields = [spans[f].alias(f) for f in UNIT_SPAN_SCHEMA.fieldNames()]
+    zipped = F.arrays_zip(*fields, offsets.alias("offset"))
+    # the cast gives the frame the table schema's nullable elements; the
+    # optimizer drops it (SimplifyCasts), so it costs nothing per row and
+    # parquet files written from it mark the list elements required
+    return grouped.select(
+        "doc_id", zipped.cast(SPANS_TABLE_SCHEMA["spans"].dataType).alias("spans"))
 
 
 def metrics_table(decoded_df: DataFrame, lineage: str = "") -> DataFrame:

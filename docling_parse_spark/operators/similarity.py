@@ -59,22 +59,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 1234) -> list[list[float]]
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_signature(vec_col, planes: list[list[float]]):
-    """Sign-bit signature as a long (one bit per hyperplane, <= 63 planes) —
-    pure JVM expressions; planes arrive as array literals."""
-    if len(planes) > 63:
-        raise ValueError("lsh_signature packs into one long; use <= 63 planes "
-                         "(lsh_topk uses per-band keys and has no such cap)")
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(v)) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(vec_col, arr, lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-        )
-        sig = sig + F.when(dot > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return sig
-
-
 def _band_keys_udf(planes: list[list[float]], bands: int):
     """Arrow-batched numpy band keys: one long per band (sign bits of that
     band's hyperplanes, key = Σ bit_j << j). The r2 expression form — ONE 2-D

@@ -39,6 +39,7 @@ from dataclasses import dataclass
 
 from docling_parse_spark.pdf.filters import apply_filters
 from docling_parse_spark.pdf.tokenizer import decode_name
+from docling_parse_spark.schemas import SPAN_SCHEMA
 
 _WS = b"\x00\t\n\x0c\r "
 _HEX_BODY_RE = re.compile(rb"[0-9A-Fa-f\x00\t\n\x0c\r ]*")  # a hex string's digits and whitespace
@@ -1268,8 +1269,7 @@ def _parse_pdf_media(data: bytes, doc_id: str = "", password=None) -> list[dict]
     return rows
 
 
-PDF_DOCS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>, error string")
+PDF_DOCS_DDL = f"doc_id string, spans array<{SPAN_SCHEMA.simpleString()}>, error string"
 MEDIA_FILE_DDL = ("doc_id string, media_ref string, content_type string, "
                   "width int, height int, bits int, colorspace string, "
                   "payload binary, error string")

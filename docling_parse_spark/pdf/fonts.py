@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass, field
+from itertools import accumulate
 
 from docling_parse_spark.pdf.resources_data import (
     base_encodings,
@@ -186,21 +187,21 @@ def parse_cmap(text: str) -> tuple[dict[int, str], set[int]]:
 _MAX_NESTING = 64
 
 
-def _nesting_ok(v, left: int) -> bool:
-    """Whether a decoded JSON value nests at most ``left`` containers deep."""
-    if isinstance(v, dict):
-        v = v.values()
-    elif not isinstance(v, list):
-        return True
-    return left > 0 and all(_nesting_ok(x, left - 1) for x in v)
+_STRING = re.compile(r'"[^"\\]*(?:\\.[^"\\]*)*"', re.S)
+_NOT_BRACKET = re.compile(r"[^][{}]+")
+_DEPTH_STEP = {"[": 1, "{": 1, "]": -1, "}": -1}
 
 
 def _loads(text: str):
-    """``json.loads`` for a resource span; ValueError past ``_MAX_NESTING``."""
-    v = json.loads(text)
-    if not _nesting_ok(v, _MAX_NESTING):
-        raise ValueError(f"resource span nested deeper than {_MAX_NESTING}")
-    return v
+    """``json.loads`` for a resource span; ValueError past ``_MAX_NESTING``.
+    The nesting is read off the brackets outside string literals before
+    json runs, so the outcome never depends on the stack depth. A text with
+    no more opening brackets than the bound cannot nest deeper."""
+    if text.count("[") + text.count("{") > _MAX_NESTING:
+        brackets = _NOT_BRACKET.sub("", _STRING.sub("", text))
+        if max(accumulate(map(_DEPTH_STEP.__getitem__, brackets)), default=0) > _MAX_NESTING:
+            raise ValueError(f"resource span nested deeper than {_MAX_NESTING}")
+    return json.loads(text)
 
 
 # --- font model ------------------------------------------------------------

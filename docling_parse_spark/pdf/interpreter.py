@@ -100,23 +100,6 @@ class Cell:
         dy = self.r_y1 - self.r_y0
         return math.sqrt(dx * dx + dy * dy)
 
-    def clone(self) -> "Cell":
-        c = Cell.__new__(Cell)
-        c.text = self.text
-        c.r_x0 = self.r_x0; c.r_y0 = self.r_y0
-        c.r_x1 = self.r_x1; c.r_y1 = self.r_y1
-        c.r_x2 = self.r_x2; c.r_y2 = self.r_y2
-        c.r_x3 = self.r_x3; c.r_y3 = self.r_y3
-        c.rendering_mode = self.rendering_mode
-        c.font_key = self.font_key
-        c.font_name = self.font_name
-        c.left_to_right = self.left_to_right
-        c.rgb_filling = self.rgb_filling
-        c.block_count = self.block_count
-        c.instr_count = self.instr_count
-        c.active = self.active
-        return c
-
 
 @dataclass
 class ImageItem:

@@ -166,9 +166,9 @@ def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig,
     sanitize_text(cells)
     t5 = _clock()
     if config.output_unit == "word":
-        out_cells = create_word_cells(cells, copy=False)  # char cells are ours
+        out_cells = create_word_cells(cells)
     elif config.output_unit == "line":
-        out_cells = create_line_cells(cells, copy=False)
+        out_cells = create_line_cells(cells)
     else:
         out_cells = [c for c in cells if c.text.strip() != ""]
     t6 = _clock()

@@ -446,20 +446,19 @@ def _active(cells: list[Cell]) -> list[Cell]:
     return list(compress(cells, map(_ACTIVE, cells)))
 
 
-def create_word_cells(char_cells: list[Cell], copy: bool = True) -> list[Cell]:
+def create_word_cells(char_cells: list[Cell]) -> list[Cell]:
     """page.h:1824-1840: merge with factor 0.33, spaces as hard barriers,
-    erase space cells, dedup. ``copy=False`` lets a caller that owns the char
-    cells (and never reads them again — decode_page) skip the defensive
-    clone of every glyph cell."""
-    work = [c.clone() for c in char_cells if c.active] if copy else char_cells
-    merged = merge_cells(work, WORD_FACTOR, block_spaces=True, gap_space_factor=None)
+    erase space cells, dedup. Merges ``char_cells`` in place: the caller
+    owns them and never reads them again (decode_page)."""
+    merged = merge_cells(char_cells, WORD_FACTOR, block_spaces=True, gap_space_factor=None)
     return remove_duplicate_cells([c for c in merged if c.text.strip()])
 
 
-def create_line_cells(char_cells: list[Cell], copy: bool = True) -> list[Cell]:
-    """page.h:1842-1858: merge factor 1.0, inject ' ' when gap > 0.33·avg."""
-    work = [c.clone() for c in char_cells if c.active] if copy else char_cells
-    merged = merge_cells(work, LINE_FACTOR, block_spaces=False, gap_space_factor=GAP_SPACE_FACTOR)
+def create_line_cells(char_cells: list[Cell]) -> list[Cell]:
+    """page.h:1842-1858: merge factor 1.0, inject ' ' when gap > 0.33·avg.
+    Merges ``char_cells`` in place, like ``create_word_cells``."""
+    merged = merge_cells(char_cells, LINE_FACTOR, block_spaces=False,
+                         gap_space_factor=GAP_SPACE_FACTOR)
     return [c for c in merged if c.text.strip()]
 
 

@@ -12,14 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-SPAN_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-    ]
+# a unit's spans before reassembly stamps their per-doc offsets
+UNIT_SPAN_SCHEMA = T.StructType(
+    [T.StructField(name, T.StringType(), True) for name in ("kind", "text", "media_ref")]
 )
+SPAN_SCHEMA = T.StructType([*UNIT_SPAN_SCHEMA, T.StructField("offset", T.IntegerType(), True)])
 
 SPANS_TABLE_SCHEMA = T.StructType(
     [

@@ -273,10 +273,43 @@ def test_extract_doc_meta_matches_sequential(spark):
         assert list(row["field_names"]) == exp["fields"]
 
 
-def _final_exchanges(plan: str) -> int:
-    """Exchange nodes of an executed adaptive plan, read from the final-plan
-    sections only (the initial plans repeat them)."""
-    n, skip_at = 0, None
+@pytest.mark.parametrize("page", ['"x"', "1e400", "[1]", "1e10",
+                                  pytest.param("1" + "0" * 400, id="10**400")])
+def test_doc_meta_reads_a_bad_outline_page_as_zero(spark, page):
+    """An outline node whose page is not a finite number in int range reads
+    as page 0, like a missing one, in doc_meta and in extract_doc_meta,
+    whose task it must never kill."""
+    from docling_parse_spark.document import doc_meta
+
+    outline = '[{"title": "bad", "page": %s, "children": [{"title": "ok", "page": 2}]}]' % page
+    spans = [{"kind": "pdf_outline", "text": outline, "media_ref": None, "offset": 0}]
+    want = [(0, "bad", 0), (1, "ok", 2)]
+    assert doc_meta(spans)["outline"] == want
+    docs_df = spark.createDataFrame(corpus_to_spark_rows([{"doc_id": "d", "spans": spans}]),
+                                    schema=SPANS_TABLE_SCHEMA)
+    [row] = extract_doc_meta(docs_df).collect()
+    assert [(o["level"], o["title"], o["page"]) for o in row["outline"]] == want
+
+
+def test_spans_table_has_the_span_struct(spark, corpus):
+    """The reassembled table is ``doc_id`` plus an array of the span struct
+    of ``schemas.py``, every field and element nullable."""
+    from pyspark.sql import types as T
+
+    from docling_parse_spark.schemas import SPAN_SCHEMA
+
+    docs_df = spark.createDataFrame(corpus_to_spark_rows(corpus), schema=SPANS_TABLE_SCHEMA)
+    assert extract_spans(docs_df, num_partitions=2).schema == T.StructType(
+        [T.StructField("doc_id", T.StringType()), T.StructField("spans", T.ArrayType(SPAN_SCHEMA))])
+
+
+_EXCHANGE = re.compile(r"(?<!Reused)Exchange \w+partitioning|Exchange SinglePartition")
+
+
+def _final_plan(plan: str) -> list[str]:
+    """The node lines of an executed adaptive plan's final-plan sections
+    (the initial plans repeat them)."""
+    lines, skip_at = [], None
     for line in plan.splitlines():
         indent = len(line) - len(line.lstrip(" "))
         if skip_at is not None and indent > skip_at:
@@ -284,9 +317,9 @@ def _final_exchanges(plan: str) -> int:
         skip_at = None
         if "== Initial Plan ==" in line:
             skip_at = indent
-        elif re.search(r"(?<!Reused)Exchange \w+partitioning|Exchange SinglePartition", line):
-            n += 1
-    return n
+        else:
+            lines.append(line)
+    return lines
 
 
 @pytest.mark.parametrize("case,exchanges", [
@@ -294,7 +327,8 @@ def _final_exchanges(plan: str) -> int:
 ])
 def test_extract_plans_are_arrow_only(spark, corpus, case, exchanges):
     """Every Python step of the extract paths is a mapInArrow, and each
-    path keeps its exchange count."""
+    path keeps its exchange count. The spans paths run two (route and
+    decode), both below the reassembly exchange: reassembly runs no Python."""
     docs_df = spark.createDataFrame(corpus_to_spark_rows(corpus), schema=SPANS_TABLE_SCHEMA)
     df = {
         "spans": lambda: extract_spans(docs_df, num_partitions=4),
@@ -306,4 +340,10 @@ def test_extract_plans_are_arrow_only(spark, corpus, case, exchanges):
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan and "MapInArrow" in plan
-    assert _final_exchanges(plan) == exchanges
+    final = _final_plan(plan)
+    assert sum(bool(_EXCHANGE.search(line)) for line in final) == exchanges
+    arrow = [i for i, line in enumerate(final) if "MapInArrow" in line]
+    assert len(arrow) == {"spans": 2, "spans_metrics": 2, "page_numbers": 2, "cells": 2,
+                          "doc_meta": 1}[case]
+    if case.startswith(("spans", "page_numbers")):
+        assert min(arrow) > next(i for i, line in enumerate(final) if _EXCHANGE.search(line))

@@ -11,6 +11,7 @@ reproduces; the corpus test then checks whole pages end to end.
 
 from __future__ import annotations
 
+import copy
 import json
 import math
 
@@ -45,7 +46,7 @@ def run_both(fn_new, fn_ref, cells, *args):
     or the exception's type and message."""
     out = []
     for fn in (fn_new, fn_ref):
-        work = [c.clone() for c in cells]
+        work = [copy.copy(c) for c in cells]
         for w, c in zip(work, cells):
             w.active = c.active
             w.instr_count = c.instr_count

@@ -215,6 +215,39 @@ def test_font_nested_past_the_bound_fails_its_unit_on_both_paths():
         assert all(ur.error.startswith("font: ") for ur in results) == (not want), depth
 
 
+def test_over_deep_font_fails_alike_on_every_stack():
+    """The nesting bound is read before json runs, so a font blob nested
+    960 deep fails its unit with one error at any stack depth."""
+    from docling_parse_spark.document import decode_unit, doc_to_units
+
+    font = FONT[:-1] + ', "junk": ' + "[" * 960 + "]" * 960 + "}"
+    spans = [{"kind": "pdf_font", "text": font, "media_ref": None, "offset": 0},
+             {"kind": "pdf_ops", "text": "BT /F1 12 Tf 72 700 Td (hi) Tj ET", "media_ref": None,
+              "offset": 1}]
+    [u] = doc_to_units("d", spans)
+    args = (u["unit_kind"], u["payload"], u["page"], u["resources"])
+    shallow, deep = decode_unit(*args), _deeper(40, decode_unit, *args)
+    assert shallow.error == deep.error
+    assert shallow.error.startswith("font: ValueError")
+
+
+def test_loads_counts_only_brackets_outside_strings():
+    """``_loads`` bounds the container nesting: brackets inside string
+    literals, escapes included, do not count; a wide but shallow value and
+    one nested exactly ``_MAX_NESTING`` deep decode."""
+    from docling_parse_spark.pdf.fonts import _MAX_NESTING, _loads
+
+    def nest(n):
+        return "[" * n + "]" * n
+
+    assert _loads('{"a": "%s\\"%s"}' % ("[" * 99, "{" * 99)) == {"a": "[" * 99 + '"' + "{" * 99}
+    assert _loads("[" + ",".join(["[]"] * 99) + "]") == [[]] * 99
+    assert _loads(nest(_MAX_NESTING)) is not None
+    for bad in (nest(_MAX_NESTING + 1), '["\\\\", %s]' % nest(_MAX_NESTING), "]" + nest(99)):
+        with pytest.raises(ValueError, match="nested deeper"):
+            _loads(bad)
+
+
 @pytest.mark.parametrize("desc", [
     {"media_box": [0, 0, 612]},
     {"media_box": ["0", "0", "612", "792"]},

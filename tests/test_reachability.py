@@ -1,10 +1,11 @@
 """Every function and class of the package is reached from program code.
 
 A def or class under ``docling_parse_spark/`` must be named (as a whole
-word) in some non-test ``.py`` file of the repo outside its own ``def``
-line: a helper only tests call is dead weight the kernel carries. Dunders
-are exempt, and so are the public features in ``ALLOWED`` whose only
-callers are tests until their owners decide to keep or delete them.
+word) in some non-test ``.py`` file of the repo outside its own body
+(``def`` line to last line): a helper only tests call, or only itself, is
+dead weight the kernel carries. Dunders are exempt, and so are the public
+features in ``ALLOWED`` whose only callers are tests until their owners
+decide to keep or delete them.
 """
 
 import ast
@@ -53,7 +54,8 @@ def test_every_definition_has_a_program_reference():
             name = node.name
             if name.startswith("__") and name.endswith("__") or name in ALLOWED:
                 continue
-            own = _WORD.findall(lines[p][node.lineno - 1]).count(name)
+            own = sum(_WORD.findall(line).count(name)
+                      for line in lines[p][node.lineno - 1:node.end_lineno])
             if words[name] <= own:
                 unreached.append(f"{p.relative_to(ROOT)}:{node.lineno} {name}")
     assert not unreached, "no program reference:\n" + "\n".join(unreached)
